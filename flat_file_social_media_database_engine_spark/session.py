@@ -59,13 +59,8 @@ def build_session(app_name: str = "flat-file-engine-spark") -> SparkSession:
         # scale-adaptive, not a local[32] tune: at tiers where shuffles
         # carry real bytes the floor is never the binding constraint, and
         # at the reduction tails it stops serializing compute-dense rows
-        # onto one core. Env-overridable for deployments whose reduce
-        # tails are byte-dense (raise it back toward 1m to cut tiny
-        # shuffle blocks, guide S2.2).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"),
-        )
+        # onto one core.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         # Let AQE coalesce CACHED plans too (default false keeps a
         # cached plan's pre-AQE partitioning "stable" for reuse):
         # with initialPartitionNum=512, every materialize() cache
@@ -105,8 +100,3 @@ def build_session(app_name: str = "flat-file-engine-spark") -> SparkSession:
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
-
-
-def get_session() -> SparkSession:
-    active = SparkSession.getActiveSession()
-    return active if active is not None else build_session()

@@ -487,26 +487,24 @@ def stage_events_daily(
     return stage, len(os.listdir(stage))
 
 
-def stream_state_partitions() -> int:
-    """State-partition count for the driver-visible streaming entries
-    (``spark.sql.shuffle.partitions`` at stream start — baked into the
-    query's checkpoint by Structured Streaming). A stateful operator
-    creates its state stores PER shuffle partition (a stream-stream
-    join keeps four per partition), and every micro-batch pays a
-    commit/snapshot per store regardless of data volume — measured on
-    ``events_stream_attribution`` at sf0.1: 7.5 s warm at 32
-    partitions vs 2.5 s at 8, identical 371-row result; and round-9
-    on ``events_stream_sessionize`` under BOTH drain shapes
-    (tools/stream_knob.py): single-batch 2.45/1.72/2.02/2.77 s and
-    7-micro-batch production shape 4.13/4.30/5.49/8.43 s across
-    4/8/16/32 partitions, identical rows at every point — 8 is the
-    single-shape optimum and within noise of the multi-shape one.
-    Batch plans are untouched: with AQE's ``initialPartitionNum``
-    they never read ``shuffle.partitions``. At 100 TB this knob
-    grows with stream volume exactly like batch reducer counts — the
-    deployment sets it per query; the env override is that dial
-    here."""
-    return int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
+# State-partition count for the driver-visible streaming entries
+# (``spark.sql.shuffle.partitions`` at stream start — baked into the
+# query's checkpoint by Structured Streaming). A stateful operator
+# creates its state stores PER shuffle partition (a stream-stream
+# join keeps four per partition), and every micro-batch pays a
+# commit/snapshot per store regardless of data volume — measured on
+# ``events_stream_attribution`` at sf0.1: 7.5 s warm at 32
+# partitions vs 2.5 s at 8, identical 371-row result; and round-9
+# on ``events_stream_sessionize`` under BOTH drain shapes
+# (OPTIMIZATION_r09.md, "Deliberately left alone"): single-batch
+# 2.45/1.72/2.02/2.77 s and 7-micro-batch production shape
+# 4.13/4.30/5.49/8.43 s across 4/8/16/32 partitions, identical rows at
+# every point — 8 is the single-shape optimum and within noise of the
+# multi-shape one. Batch plans are untouched: with AQE's
+# ``initialPartitionNum`` they never read ``shuffle.partitions``. At
+# 100 TB this grows with stream volume exactly like batch reducer
+# counts — the deployment sets it per query.
+STREAM_STATE_PARTITIONS = 8
 
 
 def run_stream_to_parquet(
@@ -525,7 +523,7 @@ def run_stream_to_parquet(
     standard pattern), appending ``batch_id bigint`` to the read
     schema.
 
-    State partitioning is sized by ``stream_state_partitions()`` for
+    State partitioning is sized by ``STREAM_STATE_PARTITIONS`` for
     the duration of the start (set/restore around the drain): each
     entry starts a FRESH checkpoint, so the setting is a per-query
     deployment choice, not mutable shared state — restored after
@@ -549,9 +547,7 @@ def run_stream_to_parquet(
     else:
         writer = writer.format("parquet").option("path", out_dir)
     prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions())
-    )
+    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
     # Round-10 (guide §5 — commit cost per micro-batch): a FINITE
     # AvailableNow drain terminates right after its last data batch,
     # so the engine's zero-row bookkeeping batches (state eviction /

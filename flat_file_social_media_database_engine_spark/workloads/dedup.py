@@ -2018,7 +2018,7 @@ def _inc_best_match(
 # ---------------------------------------------------------------------------
 BAND_INDEX_BUCKETS = 64
 
-_BAND_INDEX_CACHE: dict[tuple[str, str], tuple[list, "object"]] = {}
+_BAND_INDEX_CACHE: dict[tuple[str, str], dict[str, tuple[list, "object"]]] = {}
 
 
 def _band_bucket(key: Column) -> Column:
@@ -2061,8 +2061,8 @@ def _band_index_committed(
 
     from ..plans.snapshots import SnapshotStore, index_root
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BAND_INDEX_CACHE:
+    def build() -> dict[str, tuple[list, "object"]]:
+        key = (spark.sparkContext.applicationId, sf_dir)
         digest = hashlib.sha256("\x00".join(key).encode()).hexdigest()[:16]
         root = f"{index_root(spark, 'band_index')}/band_{digest}"
         store = SnapshotStore(spark, root)
@@ -2100,7 +2100,7 @@ def _band_index_committed(
         )
         sh.unpersist()
         bands.unpersist()
-        _BAND_INDEX_CACHE[key] = {
+        return {
             name: (store.tables()[name], schema)
             for name, schema in (
                 ("band_index", bands.schema),
@@ -2108,9 +2108,11 @@ def _band_index_committed(
                 ("corpus_shingles", sh.schema),
             )
         }
+
+    committed = session_cached(_BAND_INDEX_CACHE, spark, sf_dir, build)
     return {
         name: spark.read.schema(schema).parquet(*paths)
-        for name, (paths, schema) in _BAND_INDEX_CACHE[key].items()
+        for name, (paths, schema) in committed.items()
     }
 
 
@@ -2118,40 +2120,34 @@ _BATCH_SIGN_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
 
 
 def _batch_signing(
-    spark: SparkSession, sf_dir: str, batch_hi: int | None
+    spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """Sign ONLY the ingest batch: (shingle arrays, band table) for
-    ``doc_id >= N_OLD`` (optionally ``< batch_hi``), computed from
-    the documents scan directly — doc_id pushdown prunes row groups,
-    so a trickle batch against a huge table reads a sliver. This is
-    the round-9 fix for the fixed-batch decade receipt: the probe
+    ``doc_id >= N_OLD``, computed from the documents scan directly —
+    doc_id pushdown prunes row groups, so a trickle batch against a
+    huge table reads a sliver. This is the round-9 fix for the fixed-batch decade receipt: the probe
     previously filtered the CORPUS-WIDE ``_band_table_shared`` pass,
     so a constant 50k-doc batch still paid a pass sized to the whole
     table (1.13 → 3.98 s across the sf10→sf100 step). Session-cached
-    per (application, sf_dir, batch bound) like every shared pass;
-    both frames are batch-sized."""
+    per (application, sf_dir) like every shared pass; both frames
+    are batch-sized."""
 
     def build():
-        bcond = F.col("doc_id") >= N_OLD
-        if batch_hi is not None:
-            bcond = bcond & (F.col("doc_id") < batch_hi)
         docs = spread(
-            read_table(spark, sf_dir, "documents").filter(bcond)
+            read_table(spark, sf_dir, "documents").filter(
+                F.col("doc_id") >= N_OLD
+            )
         )
         sh = materialize(
             docs.select("doc_id", _shingles_udf()("text").alias("harr"))
         )
         return (sh, materialize(_band_table(sh)))
 
-    return session_cached(
-        _BATCH_SIGN_CACHE, spark, f"{sf_dir}#batch_hi={batch_hi}", build
-    )
+    return session_cached(_BATCH_SIGN_CACHE, spark, sf_dir, build)
 
 
 @query("dedup_incremental_persisted", oracle=_inc_minhash_oracle())
-def dedup_incremental_persisted(
-    spark: SparkSession, sf_dir: str, batch_hi: int | None = None
-) -> DataFrame:
+def dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``dedup_incremental_minhash`` probing the COMMITTED corpus band
     index instead of the session-cached band table: identical results
     (it shares the oracle — same hot-bucket cap, Jaccard verify, and
@@ -2176,14 +2172,14 @@ def dedup_incremental_persisted(
     committed index is ~6,400 rows at every tier), while the BATCH is
     everything else and therefore grows 10× per tier (499,600 docs at
     sf10 → 4,999,600 at sf100). A fixed-size-batch probe (constant
-    input against the committed index) is measured across tiers in
-    tools/decade3.py's fixed-batch receipt — ``batch_hi`` bounds the
-    batch for exactly that measurement (None = the registered
-    full-batch query).
+    input against the committed index) was measured across tiers in
+    the round-9 fixed-batch receipt (SCALING.md, Decade 3, structural
+    fix 3: a constant 50k-doc batch probes in 0.81 s at sf10 and
+    0.74 s at sf100).
 
     Round-9 (verdict item 3): every input is now sized to the BATCH
     or to committed metadata — batch shingles/bands sign
-    ``docs.filter(bcond)`` directly (``_batch_signing``), the
+    the batch's documents directly (``_batch_signing``), the
     hot-bucket cap joins the batch's own bucket counts against the
     committed ``band_counts`` table (total = corpus + batch, exactly
     the full-chain oracle's cap key; corpus-only hot buckets have no
@@ -2195,10 +2191,7 @@ def dedup_incremental_persisted(
     docs = read_table(spark, sf_dir, "documents")
     committed = _band_index_committed(spark, sf_dir)
     idx = committed["band_index"]
-    bcond = F.col("doc_id") >= N_OLD
-    if batch_hi is not None:
-        bcond = bcond & (F.col("doc_id") < batch_hi)
-    sh_b, bands_b = _batch_signing(spark, sf_dir, batch_hi)
+    sh_b, bands_b = _batch_signing(spark, sf_dir)
     # Hot-bucket cap on TOTAL bucket size (committed corpus counts +
     # this batch's counts): hot keys are rare by definition, so the
     # set broadcasts at any corpus size while the batch side stays
@@ -2234,7 +2227,7 @@ def dedup_incremental_persisted(
         .distinct()
     )
     return _inc_best_match(
-        docs.filter(bcond),
+        docs.filter(F.col("doc_id") >= N_OLD),
         sh_b,
         cand,
         sh_corpus=committed["corpus_shingles"],
@@ -2366,7 +2359,7 @@ def docs_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     its own rows + one DPP-pruned probe of the committed index + a
     candidate-sized verify; state is the stream checkpoint and the
     store manifest — no stateful shuffle at all (the operator is
-    stateless per batch), so stream_state_partitions is irrelevant
+    stateless per batch), so STREAM_STATE_PARTITIONS is irrelevant
     here. At 100 TB this is the admission filter in front of the
     training corpus: the index is rebuilt per corpus version offline,
     batches classify in O(batch) forever."""
@@ -2394,6 +2387,10 @@ def docs_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         root = f"{index_root(spark, 'ingest_dedup')}/res_{digest}"
         store = SnapshotStore(spark, root)
         sink = make_batch_sink(store, "ingest_dedup", stream_id="docs")
+        # Commit the corpus index on THIS thread: foreachBatch runs on
+        # a stream thread, and this build holds the session-cache lock
+        # until the drain ends, so a cold index build there deadlocks.
+        _band_index_committed(spark, sf_dir)
 
         def classify_sink(batch_df: DataFrame, batch_id: int) -> None:
             sink(_probe_classify_batch(spark, sf_dir, batch_df), batch_id)

@@ -1583,7 +1583,7 @@ def events_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         # root cause was state-store count, not batch shape: a
         # stream-stream join keeps 4 state stores per shuffle
         # partition and commits each per batch; sizing state
-        # partitions to stream volume (stream_state_partitions, now 8)
+        # partitions to stream volume (STREAM_STATE_PARTITIONS = 8)
         # cut the warm wall 7.5s → 2.5s, identical result.
         joined = attribution_join_stream(
             read_events_stream(spark, sf_dir, max_files_per_trigger=1_000_000)
@@ -1670,14 +1670,14 @@ def events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver. Session-cached like every streaming entry so the driver's
     repeated invocations run the stream once.
 
-    State-partition receipt (round-9, tools/stream_knob.py — the
+    State-partition receipt (round-9, OPTIMIZATION_r09.md — the
     sessionize twin of attribution's 7.5→2.5 s curve, measured under
     BOTH drain shapes at sf0.1, min-of-2 cold streams, identical
     95,465-row result at every point): single-batch drain 2.45 s at
     4 state partitions / 1.72 s at 8 / 2.02 s at 16 / 2.77 s at 32;
     multi-batch production shape (5 weekly files + 2 sentinels,
     maxFilesPerTrigger=1 → 7 micro-batches) 4.13 / 4.30 / 5.49 /
-    8.43 s. The default of 8 (stream_state_partitions) is the
+    8.43 s. The default of 8 (STREAM_STATE_PARTITIONS) is the
     single-shape optimum and within noise of the multi-shape optimum;
     the multi-batch walls grow ~linearly in partition count past 8
     because EVERY micro-batch commits one snapshot per state store —

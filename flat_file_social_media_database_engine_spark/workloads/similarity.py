@@ -1092,8 +1092,8 @@ def sim_neardup_regenerated(
 # verdict item 5: the ceiling-recovery path needs its own green
 # CORRECTNESS row, not just pytest + the decade-3 demo). bits=18 /
 # cap=8 is the configuration the 2M-vector ceiling demonstration
-# PROVED disk-safe (tools/decade3.py, SCALING.md decade 3): past the
-# e=7 ext-ladder ceiling, 32·2^18 buckets keep occupancy low even on
+# PROVED disk-safe (SCALING.md, Decade 3, "Ext-ladder ceiling"): past
+# the e=7 ext-ladder ceiling, 32·2^18 buckets keep occupancy low even on
 # the synthetic tier's same-origin replica cliques, and the tight cap
 # bounds candidate volume at (rows/cap)·C(cap,2). On the small driver
 # fixtures the buckets are simply sparser: a cosine≥0.95 pair still
@@ -1163,8 +1163,9 @@ def sim_neardup_regenerated_pinned(
     registered so the recovery path has its own driver-green
     correctness row. Same output contract as ``sim_neardup_lsh``;
     only the bucket-key family (and the shuffle-budget cap) differ.
-    tools/decade3.py's ceiling demonstration calls THIS entry, so the
-    demo and the verified query are one code path."""
+    The round-9 2M-vector ceiling demonstration (SCALING.md, Decade 3,
+    "Ext-ladder ceiling") ran THIS entry, so the demo and the verified
+    query are one code path."""
     return sim_neardup_regenerated(spark, sf_dir, REGEN_BITS, REGEN_CAP)
 
 
@@ -1957,8 +1958,10 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     index is just an empty scan."""
     import hashlib
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVF_INDEX_CACHE:
+    from ..plans.materialize import session_cached
+    from ..plans.snapshots import index_root
+
+    def build() -> tuple[str, "object"]:
         base, cents = _kmeans_train(spark, sf_dir)
         asn = _km_assign(base, cents).select(
             "vec_id", F.col("cell").cast("int").alias("cell")
@@ -1968,13 +1971,13 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "embedding", F.sqrt(_norm2("embedding")).alias("nrm")
         )
         lists = asn.join(fullv, "vec_id")
-        from ..plans.snapshots import index_root
-
+        key = (spark.sparkContext.applicationId, sf_dir)
         digest = hashlib.sha256("\x00".join(key).encode()).hexdigest()[:16]
         path = f"{index_root(spark, 'ivf_index')}/ivf_{digest}"
         lists.write.mode("overwrite").partitionBy("cell").parquet(path)
-        _IVF_INDEX_CACHE[key] = (path, lists.schema)
-    path, schema = _IVF_INDEX_CACHE[key]
+        return path, lists.schema
+
+    path, schema = session_cached(_IVF_INDEX_CACHE, spark, sf_dir, build)
     return spark.read.schema(schema).parquet(path)
 
 

@@ -91,3 +91,73 @@ def test_threaded_increment_batches_sum_exactly(engine, spark):
     assert after[19] == before[19] + 100
     untouched = set(before) - {19}
     assert all(after[i] == before[i] for i in untouched)
+
+
+def test_band_index_concurrent_cold_build_commits_once(spark, tmp_path):
+    """Two cold callers of the committed band index race on one fresh
+    corpus: the shared-pass lock must let exactly one build and commit,
+    so neither caller hits the store's version claim as a concurrent
+    writer, both read the same tables, and the store holds version 1
+    only."""
+    import os
+
+    from flat_file_social_media_database_engine_spark.plans.snapshots import (
+        SnapshotStore,
+    )
+    from flat_file_social_media_database_engine_spark.workloads import dedup as D
+
+    rows = [
+        (i, f"corpus document {i} about topic {i % 3} with shared words", "en", "s", 1)
+        for i in (1, 2, 3, 450, 451)
+    ]
+    d = str(tmp_path / "bandrace")
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    ).write.parquet(os.path.join(d, "documents.parquet"))
+
+    barrier = threading.Barrier(2)
+    got: list[dict] = []
+    errors: list[Exception] = []
+
+    def worker():
+        barrier.wait()
+        try:
+            tables = D._band_index_committed(spark, d)
+            got.append(
+                {n: sorted(map(tuple, t.collect())) for n, t in tables.items()}
+            )
+        except Exception as exc:
+            errors.append(exc)
+
+    threads = [threading.Thread(target=worker) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not errors, errors
+    assert len(got) == 2 and got[0] == got[1]
+    assert len(got[0]["corpus_shingles"]) == 3
+
+    paths, _ = D._BAND_INDEX_CACHE[(spark.sparkContext.applicationId, d)][
+        "band_index"
+    ]
+    store = SnapshotStore(spark, os.path.dirname(os.path.dirname(paths[0])))
+    assert store.current_version() == 1
+
+
+def test_reset_session_caches_empties_ivf_index(spark, sf_small):
+    """The persisted IVF index is a session cache like every shared
+    pass, so ``reset_session_caches`` forgets it and the next call
+    rebuilds."""
+    from flat_file_social_media_database_engine_spark.plans.materialize import (
+        reset_session_caches,
+    )
+    from flat_file_social_media_database_engine_spark.workloads import (
+        similarity as S,
+    )
+
+    n = S._ivf_index(spark, sf_small).count()
+    assert S._IVF_INDEX_CACHE
+    reset_session_caches()
+    assert not S._IVF_INDEX_CACHE
+    assert S._ivf_index(spark, sf_small).count() == n

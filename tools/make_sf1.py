@@ -53,10 +53,6 @@ import pyarrow.parquet as pq
 SRC = "/root/testdata/sf0.1"
 OUT = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/spark_graft_sf1")
 REPLICAS = 10
-if len(sys.argv) > 1:
-    REPLICAS = int(sys.argv[1])
-if len(sys.argv) > 2:
-    OUT = sys.argv[2]
 # key offsets: far above any sf0.1 key, stable across reruns
 C_OFF = 10_000_000  # custkey (customer, orders, events.user_id)
 O_OFF = 100_000_000  # orderkey (orders, lineitem)
@@ -218,4 +214,8 @@ def main() -> int:
 
 
 if __name__ == "__main__":
+    if len(sys.argv) > 1:
+        REPLICAS = int(sys.argv[1])
+    if len(sys.argv) > 2:
+        OUT = sys.argv[2]
     sys.exit(main())
