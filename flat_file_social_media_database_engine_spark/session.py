@@ -4,7 +4,8 @@ One shared session per process (the reference's whole test budget is
 smaller than a JVM cold-start — see BASELINE.md), configured for the
 100 TB design point:
 
-- AQE on (runtime re-plan, skew-join splitting, empty-side pruning —
+- AQE, partition coalescing and skew-join splitting on — Spark's
+  defaults, so not set here (runtime re-plan and empty-side pruning:
   the reference hand-codes its empty-build short-circuit at
   buzzdb_lab1.cpp:741-742; AQE subsumes it).
 - Arrow for any pandas_udf / toPandas path.
@@ -31,8 +32,6 @@ def build_session(app_name: str = "flat-file-engine-spark") -> SparkSession:
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # Start every shuffle WIDE and let AQE coalesce down to the
         # data: with the reducer count pinned at `cpus`, a 10x data
         # step grows every shuffle partition 10x until it overflows
@@ -47,7 +46,6 @@ def build_session(app_name: str = "flat-file-engine-spark") -> SparkSession:
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
             "512",
         )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # AQE's coalescing floor (default 1 MB) is a BYTE grain, but
         # several query tails here are heavy-compute-per-row over tiny
         # bytes — a distinct'd candidate-pair set feeding array_intersect
@@ -78,7 +76,7 @@ def build_session(app_name: str = "flat-file-engine-spark") -> SparkSession:
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # Fixture events.parquet carries TIMESTAMP(NANOS) which the
+        # An events.parquet may carry TIMESTAMP(NANOS), which the
         # vectorized reader rejects; read as long and convert in the
         # catalog (sources/catalog.py) — micros after the convert.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -77,9 +77,11 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     predicate-pushed by Catalyst — the 100 TB path needs no code here
     beyond not getting in the optimizer's way.
 
-    events.ts is TIMESTAMP(NANOS) in the file; Spark has no nanosecond
-    timestamp, so it is read as long (nanosAsLong, see session.py) and
-    truncated to microseconds — the same conversion DuckDB applies, so
+    events.ts may carry TIMESTAMP(NANOS) in the file (the bundled
+    fixtures are ``timestamp[us]``; outside files written with ``ns``
+    are not); Spark has no nanosecond timestamp, so such a column is
+    read as long (nanosAsLong, see session.py) and truncated to
+    microseconds — the same conversion DuckDB applies, so
     the oracle agrees at microsecond precision."""
     # Runtime-settable; must hold in the *caller's* session too (the
     # driver builds its own plain SparkSession, possibly under a

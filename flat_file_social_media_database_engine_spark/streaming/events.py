@@ -27,6 +27,7 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,18 +38,35 @@ from ..workloads.eventflow import SESSION_GAP_US
 SESSION_GAP = "30 minutes"
 assert SESSION_GAP_US == 30 * 60 * 1_000_000  # keep twins in lockstep
 
+def read_staged_events_stream(
+    spark: SparkSession, stage_dir: str, max_files_per_trigger: int = 1
+) -> DataFrame:
+    """File-source stream over a drop-zone directory (see
+    ``stage_events_with_sentinels``), schema pinned — never inferred —
+    exactly like every batch scan in this engine. The fixture parquet
+    carries ``timestamp[us]`` with no UTC adjustment, so ``ts`` scans
+    as TIMESTAMP_NTZ (the declared EVENTS type) — but Spark's
+    event-time engine (``withWatermark``) accepts only TIMESTAMP, so
+    the source casts ``ts`` once at the boundary. Under the pinned-UTC
+    session the cast is value-exact, and the batch twins' NTZ results
+    collect to the same naive datetimes. The UTC pin is set on the
+    session handed in: a drain's child session starts at the JVM's
+    default zone, not the parent's runtime setting."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    return (
+        spark.readStream.schema(EVENTS)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(stage_dir)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+    )
+
+
 def read_events_stream(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    """Open ``events`` as a file-source stream (schema pinned — never
-    inferred — exactly like every batch scan in this engine). The
-    fixture parquet carries ``timestamp[us]`` with no UTC adjustment,
-    so ``ts`` scans as TIMESTAMP_NTZ (the declared EVENTS type) — but
-    Spark's event-time engine (``withWatermark``) accepts only
-    TIMESTAMP, so the source casts ``ts`` once at the boundary.
-    Under the pinned-UTC session the cast is value-exact, and the
-    batch twins' NTZ results collect to the same naive datetimes."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    """Open ``events`` as a file-source stream: stage the fixture's
+    drop-zone directory, then read it like any staged replay
+    (``read_staged_events_stream``)."""
     path = os.path.join(sf_dir, "events.parquet")
     if os.path.isfile(path):
         # The file stream source requires a *directory* (its contract
@@ -64,12 +82,7 @@ def read_events_stream(
             except FileExistsError:  # concurrent stager won the race
                 pass
         path = link_dir
-    return (
-        spark.readStream.schema(EVENTS)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
+    return read_staged_events_stream(spark, path, max_files_per_trigger)
 
 
 SENTINEL_USER = -1  # no fixture user_id is negative
@@ -189,21 +202,6 @@ def stage_events_with_sentinels(spark: SparkSession, sf_dir: str) -> str:
             os.utime(tmp, (now + 3600 * (i + 1), now + 3600 * (i + 1)))
             os.replace(tmp, sent)
     return stage
-
-
-def read_staged_events_stream(
-    spark: SparkSession, stage_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """File-source stream over an already-staged drop-zone directory
-    (see ``stage_events_with_sentinels``); same pinned schema and
-    boundary timestamp cast as ``read_events_stream``."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return (
-        spark.readStream.schema(EVENTS)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(stage_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
 
 
 def tumbling_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -508,7 +506,8 @@ STREAM_STATE_PARTITIONS = 8
 
 
 def run_stream_to_parquet(
-    df: DataFrame,
+    spark: SparkSession,
+    make_stream: Callable[[SparkSession], DataFrame],
     prefix: str,
     read_schema: str,
     output_mode: str = "append",
@@ -523,16 +522,25 @@ def run_stream_to_parquet(
     standard pattern), appending ``batch_id bigint`` to the read
     schema.
 
-    State partitioning is sized by ``STREAM_STATE_PARTITIONS`` for
-    the duration of the start (set/restore around the drain): each
-    entry starts a FRESH checkpoint, so the setting is a per-query
-    deployment choice, not mutable shared state — restored after
-    ``awaitTermination`` returns, i.e. after the last micro-batch has
-    been planned."""
-    spark = df.sparkSession
+    ``make_stream(child)`` builds the stream in a child session
+    (``spark.newSession()``: its own SQL conf, the same SparkContext
+    and cached blocks) that carries the drain's settings —
+    ``STREAM_STATE_PARTITIONS`` state partitions and no no-data
+    micro-batches. The sink is read back on ``spark``, whose conf the
+    drain never changes, so a query submitted from another thread
+    during the drain plans exactly as it would alone. Only the UTC
+    zone is pinned on it, because the callers cast the read-back
+    instants to TIMESTAMP_NTZ there.
+
+    Precondition: with no-data batches off, an APPEND-mode watermark
+    aggregation emits only what the last DATA batch closes — tail
+    windows that would close in a trailing no-data batch are lost. A
+    caller draining one must stage sentinel rows past the real event
+    horizon first, as ``stage_events_with_sentinels`` does."""
+    child = spark.newSession()
     base = tempfile.mkdtemp(prefix=prefix)
     out_dir = os.path.join(base, "out")
-    writer = df.writeStream
+    writer = make_stream(child).writeStream
     if stamp_epoch:
 
         def sink(batch_df: DataFrame, epoch_id: int) -> None:
@@ -546,8 +554,7 @@ def run_stream_to_parquet(
         read_schema = read_schema + ", batch_id bigint"
     else:
         writer = writer.format("parquet").option("path", out_dir)
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
+    child.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
     # Round-10 (guide §5 — commit cost per micro-batch): a FINITE
     # AvailableNow drain terminates right after its last data batch,
     # so the engine's zero-row bookkeeping batches (state eviction /
@@ -560,27 +567,16 @@ def run_stream_to_parquet(
     # rows AND value checksum): attribution 2.4→1.5 s, sessionize
     # 2.1→1.8 s. An ALWAYS-ON deployment keeps them enabled (they are
     # what advances emission between sparse arrivals) — hence the
-    # set/restore scoping to the drain, and the env override.
-    prev_nd = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
+    # setting lives in the drain's own session only.
+    child.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    (
+        writer.option("checkpointLocation", os.path.join(base, "ckpt"))
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
     )
-    spark.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled",
-        os.environ.get("SPARK_GRAFT_STREAM_NODATA_BATCHES", "false"),
-    )
-    try:
-        q = (
-            writer.option("checkpointLocation", os.path.join(base, "ckpt"))
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nd
-        )
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark.read.schema(read_schema).parquet(out_dir)
 
 

@@ -1585,11 +1585,11 @@ def events_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         # partition and commits each per batch; sizing state
         # partitions to stream volume (STREAM_STATE_PARTITIONS = 8)
         # cut the warm wall 7.5s → 2.5s, identical result.
-        joined = attribution_join_stream(
-            read_events_stream(spark, sf_dir, max_files_per_trigger=1_000_000)
-        )
         got = run_stream_to_parquet(
-            joined,
+            spark,
+            lambda s: attribution_join_stream(
+                read_events_stream(s, sf_dir, max_files_per_trigger=1_000_000)
+            ),
             "stream_attr_",
             "purchase_id bigint, user_id bigint,"
             " purchase_ts timestamp, click_ts timestamp",
@@ -1699,9 +1699,9 @@ def events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         # inter-file event-time order can never drop a row as late),
         # then each sentinel in its own batch.
         stage = stage_events_with_sentinels(spark, sf_dir)
-        sess = sessionize(read_staged_events_stream(spark, stage))
         got = run_stream_to_parquet(
-            sess,
+            spark,
+            lambda s: sessionize(read_staged_events_stream(s, stage)),
             "stream_sess_",
             "user_id bigint, session_start timestamp,"
             " session_end timestamp, n_events bigint",
@@ -1814,12 +1814,12 @@ def events_stream_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
         stage, n_days = stage_events_daily(spark, sf_dir, unit="week")
         if n_days == 0:
             return spark.createDataFrame([], out_schema)
-        clamped = running_net_clamp_micro(
-            read_staged_events_stream(spark, stage),
-            retention_ms=90 * 24 * 3600 * 1000,  # past the fixture span
-        )
         log = run_stream_to_parquet(
-            clamped,
+            spark,
+            lambda s: running_net_clamp_micro(
+                read_staged_events_stream(s, stage),
+                retention_ms=90 * 24 * 3600 * 1000,  # past the fixture span
+            ),
             "stream_clamp_",
             out_schema,
             output_mode="update",

@@ -161,3 +161,68 @@ def test_reset_session_caches_empties_ivf_index(spark, sf_small):
     reset_session_caches()
     assert not S._IVF_INDEX_CACHE
     assert S._ivf_index(spark, sf_small).count() == n
+
+
+def test_stream_drain_leaves_parent_conf_alone(spark, sf_small):
+    """A streaming drain runs in its own child session: while a
+    sessionize drain runs on one thread, a second thread keeps reading
+    the parent session's shuffle-partition and no-data-batch settings
+    and runs one batch query. Every sample must equal the pre-drain
+    value, and the batch result must equal a solo run."""
+    import time
+    from collections import Counter
+
+    from flat_file_social_media_database_engine_spark.streaming import events as SE
+    from flat_file_social_media_database_engine_spark.workloads import (
+        eventflow as BE,
+    )
+
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+    )
+
+    def conf_now():
+        return tuple(spark.conf.get(k) for k in keys)
+
+    def batch():
+        rows = BE.events_hourly_rollup(spark, sf_small).collect()
+        return Counter(map(tuple, rows))
+
+    stage = SE.stage_events_with_sentinels(spark, sf_small)
+    before = conf_now()
+    solo = batch()
+    done = threading.Event()
+    errors: list[Exception] = []
+    drained: list[int] = []
+
+    def drain():
+        try:
+            drained.append(
+                SE.run_stream_to_parquet(
+                    spark,
+                    lambda s: SE.sessionize(SE.read_staged_events_stream(s, stage)),
+                    "t_conf_iso_",
+                    "user_id bigint, session_start timestamp,"
+                    " session_end timestamp, n_events bigint",
+                ).count()
+            )
+        except Exception as exc:
+            errors.append(exc)
+        finally:
+            done.set()
+
+    samples: list[tuple] = []
+    concurrent: list[Counter] = []
+    t = threading.Thread(target=drain)
+    t.start()
+    while not done.is_set():
+        samples.append(conf_now())
+        if not concurrent:
+            concurrent.append(batch())
+        time.sleep(0.02)
+    t.join(timeout=300)
+    assert not errors, errors
+    assert drained and drained[0] > 0
+    assert samples and set(samples) == {before}, (before, set(samples))
+    assert concurrent == [solo]

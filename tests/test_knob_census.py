@@ -1,6 +1,7 @@
-"""Census of the environment variables the package reads. Each env
-knob is a place where the benchmarked engine can differ from the one
-the correctness gate verifies, so adding one must update this test on
+"""Census of the environment variables the package reads and of the
+runtime SQL confs it sets. Each env knob or runtime tuning key is a
+place where the benchmarked engine can differ from the one the
+correctness gate verifies, so adding one must update this test on
 purpose."""
 
 from __future__ import annotations
@@ -18,8 +19,17 @@ EXPECTED = {
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_DRIVER_MEM",
     "SPARK_GRAFT_MAX_RESULT",
-    # reference path for the no-data-batch drain (tests/test_streaming.py)
-    "SPARK_GRAFT_STREAM_NODATA_BATCHES",
+}
+
+EXPECTED_CONF_SETS = {
+    # correctness settings that must hold in any caller's plain session
+    # (sources/catalog.py, sources/json_source.py, streaming/events.py)
+    "spark.sql.session.timeZone",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    # set on a stream drain's own child session only
+    # (streaming/events.py::run_stream_to_parquet)
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.noDataMicroBatches.enabled",
 }
 
 
@@ -67,6 +77,38 @@ def env_reads(src: str) -> set[str]:
     return names
 
 
+def conf_sets(src: str) -> set[str]:
+    """Keys passed to ``<x>.conf.set(...)``. A non-literal key shows up
+    as a marker name, and so does any use of a ``.conf`` attribute
+    other than a direct ``.get(...)``/``.set(...)`` call (an alias such
+    as ``c = spark.conf``), so the census cannot be dodged."""
+    tree = ast.parse(src)
+    names: set[str] = set()
+    direct: set[int] = set()
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+            continue
+        f = node.func
+        if f.attr in ("get", "set") and isinstance(f.value, ast.Attribute) and (
+            f.value.attr == "conf"
+        ):
+            direct.add(id(f.value))
+            if f.attr == "set":
+                key = node.args[0] if node.args else None
+                is_literal = isinstance(key, ast.Constant) and isinstance(
+                    key.value, str
+                )
+                names.add(key.value if is_literal else "<non-literal key>")
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Attribute)
+            and node.attr == "conf"
+            and id(node) not in direct
+        ):
+            names.add("<other .conf use>")
+    return names
+
+
 def test_env_reads_detects_every_form():
     src = (
         "import os\n"
@@ -91,3 +133,27 @@ def test_package_reads_exactly_the_known_env_knobs():
         for name in env_reads(path.read_text()):
             found.setdefault(name, []).append(str(path.relative_to(PKG)))
     assert set(found) == EXPECTED, found
+
+
+def test_conf_sets_detects_every_form():
+    src = (
+        "spark.conf.set('a.b', '1')\n"
+        "df.sparkSession.conf.set('c.d', 'x')\n"
+        "spark.conf.get('e.f')\n"
+        "spark.conf.set(key, '2')\n"
+        "c = spark.conf\n"
+    )
+    assert conf_sets(src) == {
+        "a.b",
+        "c.d",
+        "<non-literal key>",
+        "<other .conf use>",
+    }
+
+
+def test_package_sets_exactly_the_known_runtime_confs():
+    found: dict[str, list[str]] = {}
+    for path in sorted(PKG.rglob("*.py")):
+        for name in conf_sets(path.read_text()):
+            found.setdefault(name, []).append(str(path.relative_to(PKG)))
+    assert set(found) == EXPECTED_CONF_SETS, found

@@ -485,11 +485,12 @@ def test_attribution_multi_batch_equals_single_batch(spark):
     stage, n_parts = SE.stage_events_daily(spark, SF, unit="week")
     assert n_parts > 1, "fixture must replay as multiple micro-batches"
 
-    def drain(stream):
+    def drain(read):
         return {
             tuple(r)
             for r in SE.run_stream_to_parquet(
-                SE.attribution_join_stream(stream),
+                spark,
+                lambda s: SE.attribution_join_stream(read(s)),
                 "t_attr_mb_",
                 "purchase_id bigint, user_id bigint,"
                 " purchase_ts timestamp, click_ts timestamp",
@@ -497,10 +498,10 @@ def test_attribution_multi_batch_equals_single_batch(spark):
         }
 
     multi = drain(
-        SE.read_staged_events_stream(spark, stage, max_files_per_trigger=1)
+        lambda s: SE.read_staged_events_stream(s, stage, max_files_per_trigger=1)
     )
     single = drain(
-        SE.read_events_stream(spark, SF, max_files_per_trigger=1_000_000)
+        lambda s: SE.read_events_stream(s, SF, max_files_per_trigger=1_000_000)
     )
     assert multi == single
     assert len(single) > 0
@@ -688,17 +689,19 @@ def test_append_mode_sessionize_drains_via_sentinels(spark):
     assert len(g) > 0
 
 
-def test_drain_without_nodata_batches_equals_with(spark, monkeypatch):
+def test_drain_without_nodata_batches_equals_with(spark, tmp_path):
     """Round-10: the shared drain (``run_stream_to_parquet``) skips
     the engine's zero-row bookkeeping micro-batches — a finite
     AvailableNow replay terminates right after its last data batch,
     so those batches can only pay state-commit cost, never emit rows
     the sink read-back sees. Pinned here on the append-mode
     sessionize shape (the state-FINALIZATION path, where a wrongly
-    skipped batch would silently lose tail sessions): the drained
-    result with no-data batches disabled (the shipped default) equals
-    the drain with them force-enabled via the env override."""
+    skipped batch would silently lose tail sessions): the shipped
+    drain equals a reference drain built here — its own child session
+    with no-data batches ON and the same state-partition count,
+    checkpointed AvailableNow into a parquet sink."""
     from flat_file_social_media_database_engine_spark.streaming.events import (
+        STREAM_STATE_PARTITIONS,
         read_staged_events_stream,
         run_stream_to_parquet,
         sessionize,
@@ -710,21 +713,33 @@ def test_drain_without_nodata_batches_equals_with(spark, monkeypatch):
         "user_id bigint, session_start timestamp,"
         " session_end timestamp, n_events bigint"
     )
+    without = {
+        tuple(r)
+        for r in run_stream_to_parquet(
+            spark,
+            lambda s: sessionize(read_staged_events_stream(s, stage)),
+            "nodata_ab_",
+            schema,
+        ).collect()
+    }
 
-    def drain():
-        return {
-            tuple(r)
-            for r in run_stream_to_parquet(
-                sessionize(read_staged_events_stream(spark, stage)),
-                "nodata_ab_",
-                schema,
-            ).collect()
-        }
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_NODATA_BATCHES", "false")
-    without = drain()
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_NODATA_BATCHES", "true")
-    with_nd = drain()
+    ref = spark.newSession()
+    ref.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
+    ref.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+    out = str(tmp_path / "out")
+    q = (
+        sessionize(read_staged_events_stream(ref, stage))
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    # the reference must really have run a zero-row bookkeeping batch
+    assert any(p["numInputRows"] == 0 for p in q.recentProgress)
+    with_nd = {tuple(r) for r in spark.read.schema(schema).parquet(out).collect()}
     assert without == with_nd
     assert len(without) > 0
 
