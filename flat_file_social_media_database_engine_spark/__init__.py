@@ -18,7 +18,8 @@ Layout
 - ``sources``    : coerce-or-drop CSV reader (S1/S2), parquet catalog,
                    referential-integrity semi/anti joins (S3, J5).
 - ``operators``  : the reference's read queries (Q1/Q2), batch
-                   mutation dataflows (M1-M3), salted skew joins.
+                   mutation dataflows (M1-M3), rank-select and
+                   top-k operators.
 - ``plans``      : versioned snapshot store (atomic multi-table commit).
 - ``functions``  : multimodal column plumbing (decode / features /
                    resize / frame sampling); text/dedup/similarity

@@ -74,14 +74,14 @@ class Engine:
         )
 
     # -- writes (M1/M2/M3) ---------------------------------------------------
-    def update_post_views(self, deltas: DataFrame, persist: bool = True) -> None:
+    def update_post_views(self, deltas: DataFrame) -> None:
         """M1 batched (buzzdb_lab1.cpp:603-631). ``deltas``:
         (id, delta) rows; concurrent increments become rows in one
         batch — associativity replaces Test 7's locking."""
         self.tables["posts"] = apply_view_deltas(self.tables["posts"], deltas)
-        self._commit(["posts"], persist)
+        self._commit(["posts"])
 
-    def add_engagement_records(self, batch: DataFrame, persist: bool = True) -> None:
+    def add_engagement_records(self, batch: DataFrame) -> None:
         """M2 (buzzdb_lab1.cpp:639-673): FK-validated append.
 
         Persisted path is O(batch): only the validated rows are
@@ -93,7 +93,7 @@ class Engine:
             (self.tables["posts"], "postId", "id"),
             (self.tables["users"], "username", "username"),
         ]
-        if persist and self.store is not None:
+        if self.store is not None:
             ok = validate_batch(
                 batch.select(*self.tables["engagements"].columns), checks
             )
@@ -105,9 +105,7 @@ class Engine:
             )
         self._register()
 
-    def update_user_name(
-        self, user_id: int, new_username: str, persist: bool = True
-    ) -> None:
+    def update_user_name(self, user_id: int, new_username: str) -> None:
         """M3 (buzzdb_lab1.cpp:775-963): cascading rename, committed as
         ONE multi-table snapshot (all-or-nothing; stronger than the
         reference's three separate renames)."""
@@ -119,9 +117,9 @@ class Engine:
             new_username,
         )
         self.tables.update(users=u, posts=p, engagements=e)
-        self._commit(["users", "posts", "engagements"], persist)
+        self._commit(["users", "posts", "engagements"])
 
-    def delete_user(self, user_id: int, persist: bool = True) -> None:
+    def delete_user(self, user_id: int) -> None:
         """Cascade user deletion — the inverse of M3's rename cascade
         and the one mutation a social-media engine owes its users
         that the reference never had (its six-method API,
@@ -153,10 +151,12 @@ class Engine:
             .join(F.broadcast(doomed_posts), "postId", "left_anti")
             .select(*eng.columns),
         )
-        self._commit(["users", "posts", "engagements"], persist)
+        self._commit(["users", "posts", "engagements"])
 
-    def _commit(self, changed: list[str], persist: bool) -> None:
-        if persist and self.store is not None:
+    def _commit(self, changed: list[str]) -> None:
+        """Persist ``changed`` exactly when a store is attached — every
+        update is durable, as in the reference (buzzdb_lab1.cpp:1032-1059)."""
+        if self.store is not None:
             self.store.commit({n: self.tables[n] for n in changed})
             # Re-open from storage so downstream plans read the
             # materialized snapshot, not an ever-growing lineage.
@@ -165,9 +165,7 @@ class Engine:
         self._register()
 
     # -- export (reference's durable format) ---------------------------------
-    def maintain(
-        self, vacuum_retain: int = 10, compact: bool = True
-    ) -> dict:
+    def maintain(self, vacuum_retain: int = 10) -> dict:
         """Periodic table maintenance in one call (the cron job a
         long-lived deployment runs): compact every table whose
         manifest has grown past one directory (bounds read fan-in),
@@ -176,20 +174,17 @@ class Engine:
         vacuum then reclaims. Re-resolves the engine's table handles
         afterwards so readers follow the new current version."""
         assert self.store is not None
-        compacted: list[str] = []
-        if compact:
-            fragmented = {
-                name: self.store.read(name)
-                for name, dirs in self.store.tables().items()
-                if len(dirs) > 1
-            }
-            if fragmented:
-                # ONE multi-table commit: N fragmented tables cost one
-                # version (one manifest write, one pointer swap), not N.
-                self.store.commit(fragmented)
-                compacted = sorted(fragmented)
+        fragmented = {
+            name: self.store.read(name)
+            for name, dirs in self.store.tables().items()
+            if len(dirs) > 1
+        }
+        if fragmented:
+            # ONE multi-table commit: N fragmented tables cost one
+            # version (one manifest write, one pointer swap), not N.
+            self.store.commit(fragmented)
         out = self.store.vacuum(retain_last=vacuum_retain)
-        out["compacted"] = compacted
+        out["compacted"] = sorted(fragmented)
         self.load_snapshot()
         return out
 

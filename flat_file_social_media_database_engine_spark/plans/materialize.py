@@ -25,15 +25,13 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 
-def materialize(
-    df: DataFrame, storage_level: StorageLevel = StorageLevel.DISK_ONLY
-) -> DataFrame:
-    """Persist ``df`` at ``storage_level`` (default DISK_ONLY) and run
-    an eager ``count()`` barrier so every consumer reads cached blocks.
+def materialize(df: DataFrame) -> DataFrame:
+    """Persist ``df`` DISK_ONLY and run an eager ``count()`` barrier so
+    every consumer reads cached blocks.
 
     The returned DataFrame keeps its lineage — recomputable after
     block loss, unlike ``localCheckpoint``."""
-    out = df.persist(storage_level)
+    out = df.persist(StorageLevel.DISK_ONLY)
     out.count()
     return out
 

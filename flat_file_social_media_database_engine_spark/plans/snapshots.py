@@ -63,46 +63,6 @@ class ConcurrentWriteError(RuntimeError):
     new current snapshot and retry."""
 
 
-def _zorder_value(df: DataFrame, cols: list[str], bits: int = 4) -> Column:
-    """Morton (Z-order) key over ``cols``: each NUMERIC column is
-    bucketed by its own approximate quantiles into 2^bits ranks, and
-    the rank bits interleave — so sorting by the key keeps rows close
-    in EVERY listed dimension, not just the first. This is what makes
-    multi-column file skipping work: with 1-D range clustering the
-    second column spans its full range inside every file (min/max
-    stats prune nothing); under Z-order each file covers ~a fraction
-    of each dimension.
-
-    Quantile bucketing (vs fixed-width) makes the interleave robust
-    to skewed value distributions; the boundary fetch is one
-    ``approxQuantile`` pass per column returning 2^bits - 1 doubles —
-    metadata-scale. NULLs rank into the lowest bucket. The key is a
-    LAYOUT artifact only (dropped before write): correctness never
-    depends on it, so approximate boundaries are sound."""
-    from functools import reduce
-
-    n = len(cols)
-    buckets = (1 << bits) - 1
-    parts: list[Column] = []
-    for idx, c in enumerate(cols):
-        qs = df.stat.approxQuantile(
-            c, [i / (buckets + 1) for i in range(1, buckets + 1)], 0.01
-        )
-        rank = F.size(
-            F.filter(
-                F.array(*[F.lit(float(q)) for q in qs]),
-                lambda q: F.col(c).cast("double") > q,
-            )
-        )
-        for i in range(bits):
-            parts.append(
-                F.shiftleft(
-                    F.shiftright(rank, i).bitwiseAND(F.lit(1)), i * n + idx
-                )
-            )
-    return reduce(lambda a, b: a.bitwiseOR(b), parts).alias("_zvalue")
-
-
 class SnapshotStore:
     """Directory layout::
 
@@ -199,8 +159,8 @@ class SnapshotStore:
             .parquet(*by_table[name])
         )
 
-    def read_all(self, version: int | None = None) -> dict[str, DataFrame]:
-        return {n: self.read(n, version) for n in self.tables(version)}
+    def read_all(self) -> dict[str, DataFrame]:
+        return {n: self.read(n) for n in self.tables()}
 
     # -- write ------------------------------------------------------------
     def commit(
@@ -208,7 +168,6 @@ class SnapshotStore:
         changed: dict[str, DataFrame],
         partition_by: dict[str, list[str]] | None = None,
         cluster_by: dict[str, tuple[list[str], int]] | None = None,
-        zorder_by: dict[str, tuple[list[str], int]] | None = None,
         meta: dict | None = None,
     ) -> int:
         """Copy-on-write REPLACE: each changed table's file list is
@@ -227,20 +186,11 @@ class SnapshotStore:
         (pinned in tests/test_durability.py). This is the second
         layout lever: parquet footers carry per-column min/max, so a
         range/point predicate on the cluster columns skips whole
-        files at scan time — the poor-man's Z-order that linearizes
-        one dimension exactly. Hive partitioning prunes on LOW-
+        files at scan time. Hive partitioning prunes on LOW-
         cardinality columns (directories); clustering prunes on
         high-cardinality ones (timestamps, keys) without directory
         explosion. Composable with ``partition_by`` (cluster within
         each partition).
-
-        ``zorder_by`` maps table name → (columns, n_files): the
-        MULTI-dimensional clustering lever — rows sort by a Morton
-        interleave of per-column quantile ranks (``_zorder_value``),
-        so every file covers a fraction of EACH listed dimension and
-        min/max footer stats prune on any of them; 1-D ``cluster_by``
-        prunes only on its leading column. Mutually exclusive with
-        ``cluster_by`` for the same table.
 
         ``meta`` rides the same manifest commit as on ``append`` —
         e.g. an incremental-rollup fold marker published atomically
@@ -250,7 +200,6 @@ class SnapshotStore:
             append=False,
             partition_by=partition_by,
             cluster_by=cluster_by,
-            zorder_by=zorder_by,
             meta=meta,
         )
 
@@ -312,13 +261,7 @@ class SnapshotStore:
         v = self.current_version()
         return {} if v == 0 else self._manifest(v).get("meta", {})
 
-    def compact(
-        self,
-        name: str,
-        partition_by: list[str] | None = None,
-        cluster_by: tuple[list[str], int] | None = None,
-        zorder_by: tuple[list[str], int] | None = None,
-    ) -> int:
+    def compact(self, name: str) -> int:
         """Rewrite ``name``'s file list to ONE fresh directory in a
         new version. ``append`` grows the manifest list by one entry
         per batch — unbounded, and at scale each entry is another
@@ -330,16 +273,8 @@ class SnapshotStore:
         manifests and files are untouched and every historical read
         still resolves (pinned in tests/test_durability.py) — until
         an explicit ``vacuum`` later reclaims pre-horizon history.
-        ``partition_by`` / ``cluster_by`` optionally (re)cluster the
-        rewrite so the compacted layout prunes on those columns —
-        compaction is exactly when a 100 TB deployment re-sorts cold
-        data into its read-optimized order."""
-        return self.commit(
-            {name: self.read(name)},
-            partition_by={name: partition_by} if partition_by else None,
-            cluster_by={name: cluster_by} if cluster_by else None,
-            zorder_by={name: zorder_by} if zorder_by else None,
-        )
+        The rewrite is plain: it does not re-partition or re-cluster."""
+        return self.commit({name: self.read(name)})
 
     def vacuum(self, retain_last: int = 10) -> dict:
         """Physically delete data directories unreachable from the
@@ -589,7 +524,6 @@ class SnapshotStore:
         append: bool,
         partition_by: dict[str, list[str]] | None = None,
         cluster_by: dict[str, tuple[list[str], int]] | None = None,
-        zorder_by: dict[str, tuple[list[str], int]] | None = None,
         carry: dict[str, list[str]] | None = None,
         meta: dict | None = None,
     ) -> int:
@@ -605,19 +539,6 @@ class SnapshotStore:
                 cols, n_files = cluster_by[name]
                 df = df.repartitionByRange(n_files, *cols).sortWithinPartitions(
                     *cols
-                )
-            if zorder_by and name in zorder_by:
-                if cluster_by and name in cluster_by:
-                    raise ValueError(
-                        f"'{name}': cluster_by and zorder_by are mutually "
-                        "exclusive (one sort order per rewrite)"
-                    )
-                zcols, n_files = zorder_by[name]
-                df = (
-                    df.withColumn("_zvalue", _zorder_value(df, zcols))
-                    .repartitionByRange(n_files, "_zvalue")
-                    .sortWithinPartitions("_zvalue")
-                    .drop("_zvalue")
                 )
             writer = df.write.mode("overwrite")
             if partition_by and name in partition_by:

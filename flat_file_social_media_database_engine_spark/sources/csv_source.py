@@ -122,13 +122,9 @@ def read_csv_strict(
     return df
 
 
-def load_social_tables(
-    spark: SparkSession,
-    data_dir: str,
-    apply_ri: bool = True,
-    dedupe: bool = True,
-) -> dict[str, DataFrame]:
-    """Load users/posts/engagements CSVs with load-time RI filtering.
+def load_social_tables(spark: SparkSession, data_dir: str) -> dict[str, DataFrame]:
+    """Load users/posts/engagements CSVs, first-wins deduplicated on
+    ``id``, with load-time RI filtering.
 
     RI order matters and is preserved from the reference: posts are
     filtered against users first (buzzdb_lab1.cpp:251-252), then
@@ -146,22 +142,17 @@ def load_social_tables(
     for name, schema in SOCIAL_SCHEMAS.items():
         path = os.path.join(data_dir, f"{name}.csv")
         dfs[name] = read_csv_strict(
-            spark,
-            path,
-            schema,
-            INT_COLUMNS[name],
-            dedupe_keys=["id"] if dedupe else None,
+            spark, path, schema, INT_COLUMNS[name], dedupe_keys=["id"]
         )
-    if apply_ri:
-        users, posts, eng = dfs["users"], dfs["posts"], dfs["engagements"]
-        posts = semi_filter(posts, users, "username", "username")
-        eng = semi_filter(eng, posts, "postId", "id")
-        eng = semi_filter(eng, users, "username", "username")
-        # joins hoist the join key to column 0 — restore the schema's
-        # positional order (the CSV format is positional; reloading an
-        # export depends on it)
-        dfs["posts"] = posts.select([f.name for f in SOCIAL_SCHEMAS["posts"].fields])
-        dfs["engagements"] = eng.select(
-            [f.name for f in SOCIAL_SCHEMAS["engagements"].fields]
-        )
+    users, posts, eng = dfs["users"], dfs["posts"], dfs["engagements"]
+    posts = semi_filter(posts, users, "username", "username")
+    eng = semi_filter(eng, posts, "postId", "id")
+    eng = semi_filter(eng, users, "username", "username")
+    # joins hoist the join key to column 0 — restore the schema's
+    # positional order (the CSV format is positional; reloading an
+    # export depends on it)
+    dfs["posts"] = posts.select([f.name for f in SOCIAL_SCHEMAS["posts"].fields])
+    dfs["engagements"] = eng.select(
+        [f.name for f in SOCIAL_SCHEMAS["engagements"].fields]
+    )
     return dfs

@@ -3,9 +3,10 @@
 The reference enforces logical FKs by load-time filtering
 (buzzdb_lab1.cpp:251-252, :299-302), insert-time probes (:645-661),
 and a post-hoc anti-join sweep (``check_no_dangling_post_ids``,
-:1063-1070). All three are semi/anti equi-joins; at scale the dim-side
-distinct key set is broadcast, exactly like the reference's in-memory
-``unordered_set`` build/probe (:524-547) but shipped to executors.
+:1063-1070). All three are semi/anti equi-joins whose build side is
+the dim's distinct key set — broadcast by AQE while it is small, like
+the reference's in-memory ``unordered_set`` build/probe (:524-547) but
+shipped to executors.
 """
 
 from __future__ import annotations
@@ -14,52 +15,33 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _keys(dim: DataFrame, dim_key: str, fact_key: str, hint: str) -> DataFrame:
-    """Distinct key projection of the build side, optionally with an
-    explicit broadcast hint.
-
-    ``hint='broadcast'`` is for true dimension edges (users, customer)
-    whose distinct key set stays small at any scale — the reference's
-    in-memory ``unordered_set`` build (buzzdb_lab1.cpp:524-547).
-    ``hint='auto'`` is for fact-fact edges (orders→lineitem): a fact
-    key set grows with the data (billions of keys at 100 TB), so the
-    choice is left to AQE / autoBroadcastJoinThreshold, which picks a
-    shuffled hash join once the build side stops fitting.
+def _keys(dim: DataFrame, dim_key: str, fact_key: str) -> DataFrame:
+    """Distinct key projection of the build side, renamed to the fact
+    key. The join strategy is left to AQE / autoBroadcastJoinThreshold:
+    it broadcasts a small key set (the reference's in-memory
+    ``unordered_set`` build, buzzdb_lab1.cpp:524-547) and picks a
+    shuffled hash join once the build side stops fitting (a fact key
+    set grows with the data).
     """
-    keys = dim.select(F.col(dim_key).alias(fact_key)).distinct()
-    if hint == "broadcast":
-        return F.broadcast(keys)
-    return keys
+    return dim.select(F.col(dim_key).alias(fact_key)).distinct()
 
 
 def semi_filter(
-    fact: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str,
-    hint: str = "auto",
+    fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str
 ) -> DataFrame:
     """Keep fact rows whose key exists in dim (left-semi join).
 
     Mirrors buzzdb_lab1.cpp:207-213 (build) + :251-252 (probe). The
     build side is the *distinct key projection*, never the full dim.
     """
-    return fact.join(
-        _keys(dim, dim_key, fact_key, hint), on=fact_key, how="left_semi"
-    )
+    return fact.join(_keys(dim, dim_key, fact_key), on=fact_key, how="left_semi")
 
 
 def anti_filter(
-    fact: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str,
-    hint: str = "auto",
+    fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str
 ) -> DataFrame:
     """Fact rows whose key is missing from dim (dangling FKs)."""
-    return fact.join(
-        _keys(dim, dim_key, fact_key, hint), on=fact_key, how="left_anti"
-    )
+    return fact.join(_keys(dim, dim_key, fact_key), on=fact_key, how="left_anti")
 
 
 def dangling_keys(

@@ -5,7 +5,7 @@ The reference's ingest is a synchronous single-row append
 ingests DOCUMENT BATCHES and needs each batch classified against the
 committed corpus before it is admitted. This module stages the fixture
 documents table as a deterministic batch-file replay for that stream:
-the NEW docs (``doc_id >= N_OLD``) split into ``n_batches`` contiguous
+the NEW docs (``doc_id >= N_OLD``) split into ``N_BATCHES`` contiguous
 doc_id ranges of (near-)equal row counts, one parquet file per batch,
 strictly increasing mtimes so the file source replays them
 oldest-first under ``maxFilesPerTrigger=1``.
@@ -32,11 +32,11 @@ from pyspark.sql import functions as F
 
 from .events import _source_tag
 
+N_BATCHES = 4
 
-def stage_documents_batches(
-    spark: SparkSession, sf_dir: str, n_batches: int = 4
-) -> tuple[str, int]:
-    """Stage new docs as up to ``n_batches`` doc_id-range parquet
+
+def stage_documents_batches(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
+    """Stage new docs as up to ``N_BATCHES`` doc_id-range parquet
     files and return (directory, number of staged files). Zero new
     docs stages an empty directory (the stream drains no batches)."""
     from ..operators.rankselect import rank_select
@@ -46,7 +46,7 @@ def stage_documents_batches(
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
     # rg4m in the tag: stage layout is part of the content key, so the
     # row-group-size change below invalidates stages written before it
-    tag = _source_tag(f"docbatch{n_batches}rg4m", src)
+    tag = _source_tag(f"docbatch{N_BATCHES}rg4m", src)
     stage = os.path.join(tempfile.gettempdir(), f"docs_ingest_{tag}")
     if os.path.isdir(stage):
         return stage, len(
@@ -60,7 +60,7 @@ def stage_documents_batches(
     os.makedirs(tmp, exist_ok=True)
     written = 0
     if n > 0:
-        k = min(n_batches, n)
+        k = min(N_BATCHES, n)
         # exact equal-count boundaries: doc_id at rank floor(n*i/k),
         # i = 1..k-1 — a metadata-sized collect (k-1 rows), the same
         # rank-select machinery the percentile queries run on

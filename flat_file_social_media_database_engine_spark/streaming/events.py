@@ -27,6 +27,7 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
+import threading
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -504,6 +505,47 @@ def stage_events_daily(
 # counts — the deployment sets it per query.
 STREAM_STATE_PARTITIONS = 8
 
+# The drain session of the live SparkContext, as (applicationId,
+# session). Every drain reuses it: each new session leaves a
+# StreamingQueryListenerBus listener on the context's bus for the life
+# of the application, so a session per drain would grow the bus by one
+# per drain. Its conf is set once, at creation, and never changed.
+_DRAIN_SESSION: tuple[str, SparkSession] | None = None
+_DRAIN_SESSION_LOCK = threading.Lock()
+
+
+def _drain_session(spark: SparkSession) -> SparkSession:
+    """The child session (``spark.newSession()``: its own SQL conf, the
+    same SparkContext and cached blocks) that every drain of this
+    application runs in, created on first use with the drain's
+    settings: ``STREAM_STATE_PARTITIONS`` state partitions and no
+    no-data micro-batches.
+
+    Round-10 (guide §5 — commit cost per micro-batch): a FINITE
+    AvailableNow drain terminates right after its last data batch, so
+    the engine's zero-row bookkeeping batches (state eviction /
+    watermark-close checks with no new input) can emit nothing that
+    the sink read-back would see — yet each one still pays query
+    planning + a full state-store commit per store per partition
+    (~0.4-1.0 s here: the attribution join keeps 4 stores × 8
+    partitions). Disabling no-data batches for the drain removes
+    exactly those batches; measured at sf0.1 (min-of-3, identical rows
+    AND value checksum): attribution 2.4→1.5 s, sessionize 2.1→1.8 s.
+    An ALWAYS-ON deployment keeps them enabled (they are what advances
+    emission between sparse arrivals) — hence the setting lives in the
+    drain's own session only."""
+    global _DRAIN_SESSION
+    app = spark.sparkContext.applicationId
+    with _DRAIN_SESSION_LOCK:
+        if _DRAIN_SESSION is None or _DRAIN_SESSION[0] != app:
+            child = spark.newSession()
+            child.conf.set(
+                "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
+            )
+            child.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+            _DRAIN_SESSION = (app, child)
+        return _DRAIN_SESSION[1]
+
 
 def run_stream_to_parquet(
     spark: SparkSession,
@@ -522,22 +564,20 @@ def run_stream_to_parquet(
     standard pattern), appending ``batch_id bigint`` to the read
     schema.
 
-    ``make_stream(child)`` builds the stream in a child session
-    (``spark.newSession()``: its own SQL conf, the same SparkContext
-    and cached blocks) that carries the drain's settings —
-    ``STREAM_STATE_PARTITIONS`` state partitions and no no-data
-    micro-batches. The sink is read back on ``spark``, whose conf the
-    drain never changes, so a query submitted from another thread
-    during the drain plans exactly as it would alone. Only the UTC
-    zone is pinned on it, because the callers cast the read-back
-    instants to TIMESTAMP_NTZ there.
+    ``make_stream(child)`` builds the stream in the application's drain
+    session (``_drain_session``), which carries the drain's settings.
+    The sink is read back on ``spark``, whose conf the drain never
+    changes, so a query submitted from another thread during the drain
+    plans exactly as it would alone. Only the UTC zone is pinned on
+    it, because the callers cast the read-back instants to
+    TIMESTAMP_NTZ there.
 
     Precondition: with no-data batches off, an APPEND-mode watermark
     aggregation emits only what the last DATA batch closes — tail
     windows that would close in a trailing no-data batch are lost. A
     caller draining one must stage sentinel rows past the real event
     horizon first, as ``stage_events_with_sentinels`` does."""
-    child = spark.newSession()
+    child = _drain_session(spark)
     base = tempfile.mkdtemp(prefix=prefix)
     out_dir = os.path.join(base, "out")
     writer = make_stream(child).writeStream
@@ -554,21 +594,6 @@ def run_stream_to_parquet(
         read_schema = read_schema + ", batch_id bigint"
     else:
         writer = writer.format("parquet").option("path", out_dir)
-    child.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    # Round-10 (guide §5 — commit cost per micro-batch): a FINITE
-    # AvailableNow drain terminates right after its last data batch,
-    # so the engine's zero-row bookkeeping batches (state eviction /
-    # watermark-close checks with no new input) can emit nothing that
-    # the sink read-back would see — yet each one still pays query
-    # planning + a full state-store commit per store per partition
-    # (~0.4-1.0 s here: the attribution join keeps 4 stores × 8
-    # partitions). Disabling no-data batches for the drain removes
-    # exactly those batches; measured at sf0.1 (min-of-3, identical
-    # rows AND value checksum): attribution 2.4→1.5 s, sessionize
-    # 2.1→1.8 s. An ALWAYS-ON deployment keeps them enabled (they are
-    # what advances emission between sparse arrivals) — hence the
-    # setting lives in the drain's own session only.
-    child.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     (
         writer.option("checkpointLocation", os.path.join(base, "ckpt"))
         .outputMode(output_mode)

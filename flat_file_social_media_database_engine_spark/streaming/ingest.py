@@ -70,17 +70,16 @@ def append_stream(
     table: str,
     checkpoint_dir: str,
     stream_id: str = "ingest",
-    available_now: bool = True,
 ):
-    """Run ``stream_df`` into ``store[table]`` exactly-once.
+    """Run ``stream_df`` into ``store[table]`` exactly-once, draining
+    the current source contents and stopping (an AvailableNow trigger).
 
     Returns the started StreamingQuery; callers own awaitTermination/
-    stop. ``available_now=True`` drains the current source contents
-    and stops (the backfill/test mode); ``False`` runs continuously.
+    stop.
     """
-    writer = stream_df.writeStream.foreachBatch(
-        make_batch_sink(store, table, stream_id)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (
+        stream_df.writeStream.foreachBatch(make_batch_sink(store, table, stream_id))
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )

@@ -1182,9 +1182,11 @@ def sim_neardup_regenerated_pinned(
 # candidate set is nprobe/C of the corpus per query (vs 100% for
 # brute force); at 100 TB the assignment pass becomes the Arrow
 # matmul pandas_udf (see `_signatures`) and the lists are written
-# bucketed by cell so a probe is partition pruning, not a shuffle
-# (that layout is CODE, not prose: tests/test_bucketed.py pins the
-# cell-bucketed write + SelectedBucketsCount pruning plan property).
+# partitioned by cell so a probe is partition pruning, not a shuffle
+# (that layout is CODE, not prose: `sim_topk_ivf_persisted` reads the
+# `_ivf_index` store, and tests/test_similarity.py
+# ::test_ivf_persisted_matches_inmemory_and_prunes_partitions pins its
+# dynamic-pruning `PartitionFilters` plan property).
 # ---------------------------------------------------------------------------
 IVF_CENTROIDS = 16
 IVF_NPROBE = 4
@@ -1419,7 +1421,13 @@ def sim_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, and ONE window pass (row_number for the multiprobe rank, a
     running conditional sum for the rank WITHIN the in_lsh subset —
     same exchange, same sort) yield both legs' top-k sets; ranking a
-    subset is exact because per-pair cosines are order-free. The ivf
+    subset is exact because per-pair cosines are order-free. The leg
+    identity also assumes the SQL-fold dot signs (k0, which decide
+    pos=0 membership here) agree with the Arrow-matmul signs that key
+    standalone ``sim_topk_lsh``'s query side — the same determinism
+    argument ``_lsh_sig_ctes`` makes for the oracles: a |dot| within
+    float-summation drift of 0 could flip a bit, which is negligible
+    and pinned by test_recall_audit_matches_leg_composition. The ivf
     leg rides the ``_ivf_cells`` index pass. Leg membership and every
     output value are UNCHANGED (hash-green vs the unchanged composed
     oracle, which still recomputes all three legs independently);

@@ -966,6 +966,10 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
 
         u, b = bc.value
+        # invariant: no element of ``batch`` is None — the arrays come
+        # from ``_token_arrays_shared``, whose ``_tokens()`` coalesces
+        # null text to "" (split then yields [""], never NULL), so
+        # len(x) below cannot meet a null list
         lens = np.fromiter(
             (len(x) for x in batch), dtype=np.int64, count=len(batch)
         )
@@ -974,10 +978,14 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         w1 = pd.Series(flat[:-1] if len(flat) > 1 else [], dtype=object)
         w2 = pd.Series(flat[1:] if len(flat) > 1 else [], dtype=object)
         bg = w1 + " " + w2
-        # exact int64 per position; only the doc-BOUNDARY positions
-        # (last token of one doc paired with the next doc's first) can
-        # miss the dicts — they are never inside any doc's summed
-        # segment below, so fillna(0) is inert padding, not semantics
+        # int64 per position, via a float64 round-trip: a boundary miss
+        # is NaN, so map() yields float64 whenever a batch holds more
+        # than one doc, and the counts are exact only below 2^53 (far
+        # above any corpus-frequency count). Only the doc-BOUNDARY
+        # positions (last token of one doc paired with the next doc's
+        # first) can miss the dicts — they are never inside any doc's
+        # summed segment below, so fillna(0) is inert padding, not
+        # semantics
         btf = bg.map(b).fillna(0).astype("int64").to_numpy()
         ptf = w1.map(u).fillna(0).astype("int64").to_numpy()
         ends = np.cumsum(lens)

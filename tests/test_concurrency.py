@@ -83,9 +83,7 @@ def test_threaded_increment_batches_sum_exactly(engine, spark):
     for t in threads:
         t.join()
     assert len(rows) == 100
-    engine.update_post_views(
-        spark.createDataFrame(rows, "id int, delta int"), persist=True
-    )
+    engine.update_post_views(spark.createDataFrame(rows, "id int, delta int"))
     engine.load_snapshot()  # durable across restart
     after = {r["id"]: r["views"] for r in engine.tables["posts"].collect()}
     assert after[19] == before[19] + 100
@@ -226,3 +224,30 @@ def test_stream_drain_leaves_parent_conf_alone(spark, sf_small):
     assert drained and drained[0] > 0
     assert samples and set(samples) == {before}, (before, set(samples))
     assert concurrent == [solo]
+
+
+def test_stream_drains_reuse_one_session(spark, sf_small):
+    """Every session a drain opens leaves a StreamingQueryListenerBus
+    listener on the SparkContext's bus for the life of the application,
+    on top of the one each streaming query's own session clone leaves.
+    Drains must therefore share one drain session: after the first
+    drain, each further drain may add only its query's listener, and
+    each drain still reads back the same rows."""
+    from flat_file_social_media_database_engine_spark.streaming import events as SE
+
+    stage = SE.stage_events_with_sentinels(spark, sf_small)
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def drain():
+        return SE.run_stream_to_parquet(
+            spark,
+            lambda s: SE.sessionize(SE.read_staged_events_stream(s, stage)),
+            "t_listeners_",
+            "user_id bigint, session_start timestamp,"
+            " session_end timestamp, n_events bigint",
+        ).count()
+
+    first = drain()
+    before = bus.listeners().size()
+    assert [drain(), drain()] == [first, first]
+    assert bus.listeners().size() - before <= 2

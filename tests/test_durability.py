@@ -580,15 +580,6 @@ def test_cluster_by_yields_disjoint_file_ranges(spark, tmp_path):
     # layout change is invisible to readers
     assert s.read("events").count() == want_rows
 
-    # compact can (re)cluster cold data the same way
-    more = events.limit(10)
-    s.append({"events": more})
-    s.compact("events", cluster_by=(["ts"], 4))
-    [cpath] = s.tables()["events"]
-    cfiles = sorted(glob.glob(os.path.join(cpath, "part-*.parquet")))
-    assert len(cfiles) > 1
-    assert s.read("events").count() == want_rows + 10
-
 
 # ---------------------------------------------------------------------------
 # Incrementally-maintained rollup (plans/rollup.py)
@@ -683,65 +674,3 @@ def test_rollup_rejects_non_mergeable_aggregates(spark, tmp_path):
     with pytest.raises(ValueError, match="not self-mergeable"):
         MaintainedRollup(s, "bad", "facts", ["k"], {"m": ("median", "x")})
 
-
-def test_zorder_commit_bounds_file_spans_on_both_dimensions(spark, tmp_path):
-    """Z-order vs 1-D clustering on two independent uniform columns:
-    under cluster_by(x) every file spans ~the full y range (y min/max
-    stats prune nothing); under zorder_by(x, y) every file covers a
-    bounded fraction of BOTH dimensions. Read-back content identical."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    rows = [(i, (i * 7919) % 4096, (i * 104729) % 4096) for i in range(4096)]
-    df = spark.createDataFrame(rows, "id int, x int, y int")
-
-    def file_spans(table_dir, col):
-        spans = []
-        for f in glob.glob(f"{table_dir}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            idx = md.schema.names.index(col)
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                mins.append(st.min)
-                maxs.append(st.max)
-            spans.append(max(maxs) - min(mins))
-        return spans
-
-    s = SnapshotStore(spark, str(tmp_path / "zstore"))
-    s.commit({"t": df}, cluster_by={"t": (["x"], 16)})
-    lin_dir = s.tables()["t"][0]
-    s.commit({"t": df}, zorder_by={"t": (["x", "y"], 16)})
-    z_dir = s.tables()["t"][0]
-
-    full = 4096
-
-    def mean(xs):
-        return sum(xs) / len(xs)
-
-    # 1-D clustering: x is tightly bounded per file, y is not — the
-    # second dimension's min/max stats prune nothing
-    assert max(file_spans(lin_dir, "x")) < full * 0.25
-    assert mean(file_spans(lin_dir, "y")) > full * 0.8
-    # Z-order: BOTH dimensions bounded in the MEAN — the curve's
-    # boundary files (a z-range crossing a high-order bit of one
-    # dimension) legitimately span wide, which is Z-order's known
-    # worst case; the pruning win is the expected span over files,
-    # and it must hold on every listed dimension, not just the first
-    assert mean(file_spans(z_dir, "x")) < full * 0.55
-    assert mean(file_spans(z_dir, "y")) < full * 0.55
-    # content identical either way
-    got = sorted(r["id"] for r in s.read("t").collect())
-    assert got == list(range(4096))
-
-
-def test_zorder_and_cluster_by_mutually_exclusive(spark, tmp_path):
-    s = SnapshotStore(spark, str(tmp_path / "zstore2"))
-    df = spark.createDataFrame([(1, 2)], "x int, y int")
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        s.commit(
-            {"t": df},
-            cluster_by={"t": (["x"], 2)},
-            zorder_by={"t": (["x", "y"], 2)},
-        )

@@ -112,7 +112,7 @@ def test_m3_cascading_rename_atomic(engine):
     assert engine.ri_report().filter("dangling_count > 0").count() == 0
     # missing id → all tables unchanged (buzzdb_lab1.cpp:783-785)
     before = engine.tables["users"].count()
-    engine.update_user_name(999, "nobody", persist=False)
+    engine.update_user_name(999, "nobody")
     assert engine.tables["users"].count() == before
     users = {r["id"]: r["username"] for r in engine.tables["users"].collect()}
     assert users[1] == "alice2"
@@ -123,7 +123,7 @@ def test_m1_mixed_sign_batch_clamps_net_sum(engine, spark):
     one batch clamps the NET sum (post 10 has views=5; [-10, +3] nets
     -7 → clamp → 0, where sequential application would give 3)."""
     deltas = spark.createDataFrame([(10, -10), (10, 3)], "id int, delta int")
-    engine.update_post_views(deltas, persist=False)
+    engine.update_post_views(deltas)
     views = {r["id"]: r["views"] for r in engine.tables["posts"].collect()}
     assert views[10] == 0
 

@@ -1,8 +1,11 @@
-"""Census of the environment variables the package reads and of the
-runtime SQL confs it sets. Each env knob or runtime tuning key is a
-place where the benchmarked engine can differ from the one the
-correctness gate verifies, so adding one must update this test on
-purpose."""
+"""Census of the package's settable surface and of its dead code: the
+environment variables it reads, the runtime SQL confs it sets, the
+defaulted parameters of its storage-facing public API, and the
+module-level functions and classes nothing calls. Each env knob,
+runtime tuning key or option is a place where the benchmarked engine
+can differ from the one the correctness gate verifies, and an
+uncalled helper is code nothing verifies, so adding one must update
+this test on purpose."""
 
 from __future__ import annotations
 
@@ -26,11 +29,63 @@ EXPECTED_CONF_SETS = {
     # (sources/catalog.py, sources/json_source.py, streaming/events.py)
     "spark.sql.session.timeZone",
     "spark.sql.legacy.parquet.nanosAsLong",
-    # set on a stream drain's own child session only
-    # (streaming/events.py::run_stream_to_parquet)
+    # set once on the stream drains' own child session only
+    # (streaming/events.py::_drain_session)
     "spark.sql.shuffle.partitions",
     "spark.sql.streaming.noDataMicroBatches.enabled",
 }
+
+
+# Defaulted parameters of the public functions and methods of the
+# modules below, as "module.[Class.]function.parameter". A write
+# persists exactly when a store is attached, maintenance always
+# compacts, and loads always dedup and filter RI, so none of those
+# takes an option.
+PARAM_MODULES = (
+    "engine",
+    "plans.snapshots",
+    "plans.materialize",
+    "sources.integrity",
+    "sources.csv_source",
+    "streaming.ingest",
+)
+
+EXPECTED_PARAMS = {
+    "engine.Engine.__init__.store_root",
+    "engine.Engine.maintain.vacuum_retain",
+    # crash-recovery horizon for an unmanifested version claim
+    "plans.snapshots.SnapshotStore.__init__.stale_claim_seconds",
+    "plans.snapshots.SnapshotStore.append.meta",
+    "plans.snapshots.SnapshotStore.commit.meta",
+    # the committed band index's layout (workloads/dedup.py)
+    "plans.snapshots.SnapshotStore.commit.partition_by",
+    "plans.snapshots.SnapshotStore.commit.cluster_by",
+    # time-travel reads
+    "plans.snapshots.SnapshotStore.read.version",
+    "plans.snapshots.SnapshotStore.tables.version",
+    "plans.snapshots.SnapshotStore.vacuum.retain_last",
+    # parity.py and the loader tests pass different keys
+    "sources.csv_source.read_csv_strict.dedupe_keys",
+    # one progress marker per stream sharing a store
+    "streaming.ingest.append_stream.stream_id",
+    "streaming.ingest.make_batch_sink.stream_id",
+}
+
+# Module-level functions whose only callers are tests, each kept for
+# a stated reason.
+ORPHANS_ALLOWED = {
+    # SCALING.md (prefix-join boundary): the only form of the exact
+    # prefix-filter Jaccard join that completes at sf100; its key-space
+    # passes bound the transient shuffle disk the single-pass join
+    # exhausts there
+    "dedup_prefix_jaccard_bounded",
+    # library operators pinned by their own tests (test_rankselect.py,
+    # test_streaming.py); deletion candidates, ROADMAP item 6(d)
+    "grouped_rank",
+    "cms_sketch_stream",
+}
+
+ROOT = PKG.parent
 
 
 def _is_os_attr(node: ast.AST, attr: str) -> bool:
@@ -157,3 +212,148 @@ def test_package_sets_exactly_the_known_runtime_confs():
         for name in conf_sets(path.read_text()):
             found.setdefault(name, []).append(str(path.relative_to(PKG)))
     assert set(found) == EXPECTED_CONF_SETS, found
+
+
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _public(name: str) -> bool:
+    return not name.startswith("_") or (name.startswith("__") and name.endswith("__"))
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[str]:
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    out = [x.arg for x in pos[len(pos) - len(a.defaults):]] if a.defaults else []
+    return out + [x.arg for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+
+
+def defaulted_params(src: str, module: str) -> set[str]:
+    """Parameters with a default (positional or keyword-only) on the
+    module's public functions and on the public methods, ``__init__``
+    included, of its public classes. Nested functions are not API."""
+    out: set[str] = set()
+    for node in ast.parse(src).body:
+        if isinstance(node, _FUNCS) and _public(node.name):
+            out |= {f"{module}.{node.name}.{p}" for p in _defaulted(node)}
+        elif isinstance(node, ast.ClassDef) and _public(node.name):
+            for f in node.body:
+                if isinstance(f, _FUNCS) and _public(f.name):
+                    out |= {
+                        f"{module}.{node.name}.{f.name}.{p}" for p in _defaulted(f)
+                    }
+    return out
+
+
+def test_defaulted_params_detects_every_form():
+    src = (
+        "def f(a, b=1, *, c=2, d):\n"
+        "    def nested(e=3): pass\n"
+        "def _private(x=1): pass\n"
+        "class C:\n"
+        "    def __init__(self, root=None): pass\n"
+        "    def m(self, /, p=0): pass\n"
+        "    def _h(self, q=0): pass\n"
+        "class _P:\n"
+        "    def m(self, r=0): pass\n"
+    )
+    assert defaulted_params(src, "mod") == {
+        "mod.f.b",
+        "mod.f.c",
+        "mod.C.__init__.root",
+        "mod.C.m.p",
+    }
+
+
+def test_storage_api_takes_exactly_the_known_options():
+    found: set[str] = set()
+    for mod in PARAM_MODULES:
+        path = PKG / (mod.replace(".", "/") + ".py")
+        found |= defaulted_params(path.read_text(), mod)
+    assert found == EXPECTED_PARAMS, (
+        sorted(found - EXPECTED_PARAMS),
+        sorted(EXPECTED_PARAMS - found),
+    )
+
+
+def _registered_as_query(node: ast.AST) -> bool:
+    for d in node.decorator_list:
+        f = d.func if isinstance(d, ast.Call) else d
+        if isinstance(f, ast.Name) and f.id == "query":
+            return True
+    return False
+
+
+def orphans(sources: dict[str, str], package: set[str]) -> set[str]:
+    """Module-level functions and classes of the ``package`` files that
+    no source references outside their own definition, and that are
+    neither registered with ``@query`` nor re-exported by a package
+    ``__init__.py``. A reference is a load of the name or an attribute
+    of that name, matched by name alone, so a same-named attribute
+    elsewhere also counts: the census can miss an orphan but never
+    flags a used function."""
+    defined: dict[str, bool] = {}
+    used: set[str] = set()
+
+    def visit(node: ast.AST, owner: str | None, owned: dict) -> None:
+        owner = owned.get(id(node), owner)
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            if node.id != owner:
+                used.add(node.id)
+        elif isinstance(node, ast.Attribute) and node.attr != owner:
+            used.add(node.attr)
+        for child in ast.iter_child_nodes(node):
+            visit(child, owner, owned)
+
+    for name, src in sources.items():
+        tree = ast.parse(src)
+        owned: dict[int, str] = {}
+        if name in package:
+            for node in tree.body:
+                if isinstance(node, (*_FUNCS, ast.ClassDef)):
+                    owned[id(node)] = node.name
+                    defined[node.name] = defined.get(node.name, False) or (
+                        _registered_as_query(node)
+                    )
+            if name.endswith("__init__.py"):
+                for node in tree.body:
+                    if isinstance(node, ast.ImportFrom):
+                        used |= {a.asname or a.name for a in node.names}
+        visit(tree, None, owned)
+    return {n for n, registered in defined.items() if not registered and n not in used}
+
+
+def test_orphans_detects_every_form():
+    sources = {
+        "pkg/a.py": (
+            "def called(): pass\n"
+            "def recursive(n): return recursive(n - 1)\n"
+            "def uncalled(): called()\n"
+            "@query('q')\n"
+            "def registered(spark, sf): pass\n"
+            "class Used: pass\n"
+            "class Unused: pass\n"
+            "def exported(): pass\n"
+        ),
+        "pkg/__init__.py": "from .a import exported\n",
+        "tools/t.py": "import pkg.a\npkg.a.Used()\n",
+    }
+    assert orphans(sources, {"pkg/a.py", "pkg/__init__.py"}) == {
+        "recursive",
+        "uncalled",
+        "Unused",
+    }
+
+
+def test_every_package_definition_has_a_caller():
+    package = {str(p.relative_to(ROOT)) for p in PKG.rglob("*.py")}
+    callers = [ROOT / "__spark_entry__.py"]
+    callers += sorted((ROOT / "tools").rglob("*.py"))
+    callers += sorted((ROOT / "perfbench").rglob("*.py"))
+    sources = {
+        str(p.relative_to(ROOT)): p.read_text()
+        for p in [*sorted(PKG.rglob("*.py")), *callers]
+    }
+    # equality, so an allowed entry that gains a caller (or is
+    # deleted) must leave the list too
+    assert orphans(sources, package) == ORPHANS_ALLOWED

@@ -1,42 +1,9 @@
-"""Salted join: row-identical to the plain join on a hot-key dataset,
-with the salt visibly part of the join key (the hot key's rows land
-on SALT partitions instead of one)."""
+"""Hot-key skew: the sharded prefix sum splits one dominant group
+across range partitions while matching the monolithic window."""
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 from pyspark.sql import functions as F
-
-from flat_file_social_media_database_engine_spark.operators.skew import salted_join
-
-
-def test_salted_join_matches_plain_join(spark):
-    # 10k rows, 90% on key 1 (the hot key), the rest uniform over 100
-    fact = spark.range(10_000).select(
-        F.when(F.col("id") % 10 != 0, F.lit(1))
-        .otherwise(F.pmod(F.col("id"), 100))
-        .alias("k"),
-        F.col("id").alias("payload"),
-    )
-    dim = spark.range(100).select(
-        F.col("id").alias("dk"), F.concat(F.lit("d"), F.col("id")).alias("attr")
-    )
-    plain = fact.join(dim, fact.k == dim.dk, "inner").select("k", "payload", "attr")
-    salted = salted_join(fact, dim, "k", "dk", "inner", salt=8).select(
-        "k", "payload", "attr"
-    )
-    assert salted.count() == plain.count()
-    assert {tuple(r) for r in salted.collect()} == {
-        tuple(r) for r in plain.collect()
-    }
-
-    # the salt is genuinely in the join key
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        salted_join(fact, dim, "k", "dk", salt=8).explain()
-    assert "__salt" in buf.getvalue()
 
 
 def test_grouped_prefix_sum_splits_hot_group(spark):
@@ -87,13 +54,3 @@ def test_grouped_prefix_sum_splits_hot_group(spark):
     assert len(slice_sizes) > 1
     assert max(r["count"] for r in slice_sizes) < hot_total
 
-
-def test_salted_left_join_keeps_unmatched(spark):
-    fact = spark.range(20).select(
-        (F.col("id") + 1000).alias("k"), F.col("id").alias("payload")
-    )  # no dim match
-    dim = spark.range(10).select(F.col("id").alias("dk"), F.lit("x").alias("attr"))
-    out = salted_join(fact, dim, "k", "dk", "left", salt=4)
-    rows = out.collect()
-    assert len(rows) == 20
-    assert all(r["attr"] is None for r in rows)
