@@ -84,11 +84,14 @@ class Engine:
     def add_engagement_records(self, batch: DataFrame) -> None:
         """M2 (buzzdb_lab1.cpp:639-673): FK-validated append.
 
-        Persisted path is O(batch): only the validated rows are
+        Persisted path writes O(batch): only the validated rows are
         written (``SnapshotStore.append`` adds a file to the table's
         manifest list); the existing table files are never rewritten
         — the reference appends one CSV line (:663-672), and at scale
-        rewriting the fact table per batch would be the bottleneck."""
+        rewriting the fact table per batch would be the bottleneck.
+        Validation scans each dim's key column once, with no shuffle:
+        the batch semi-joins the bare key column, which AQE
+        broadcasts while it is small."""
         checks = [
             (self.tables["posts"], "postId", "id"),
             (self.tables["users"], "username", "username"),

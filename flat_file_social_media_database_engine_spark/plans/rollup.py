@@ -102,28 +102,26 @@ class MaintainedRollup:
     def refresh(self) -> dict:
         """Fold everything not yet folded; returns {"mode", "version",
         "new_dirs"}. No new data → no-op (no version burned)."""
-        current = self.store.tables()[self.source]
+        # plan against one version: its file lists and schema
+        v = self.store.current_version()
+        by_table = self.store.tables(v)
+        current = by_table[self.source]
+        schema = self.store.table_schema(self.source, v)
         folded: list[str] = self.store.meta().get(self._marker_key(), [])
-        have_state = self.table in self.store.tables()
+        have_state = self.table in by_table
 
         rewritten = any(d not in current for d in folded)
         new_dirs = [d for d in current if d not in folded]
         if have_state and not rewritten and not new_dirs:
-            return {"mode": "noop", "version": self.store.current_version(),
-                    "new_dirs": 0}
+            return {"mode": "noop", "version": v, "new_dirs": 0}
 
-        spark = self.store.spark
         if rewritten or not have_state:
             # add-only premise broken (compact/delete/merge/commit
             # rewrote the table) or first fold: full recompute.
-            fresh = self._partial(
-                spark.read.option("mergeSchema", True).parquet(*current)
-            )
+            fresh = self._partial(self.store.read_dirs(current, schema))
             mode = "full"
         else:
-            partial = self._partial(
-                spark.read.option("mergeSchema", True).parquet(*new_dirs)
-            )
+            partial = self._partial(self.store.read_dirs(new_dirs, schema))
             fresh = self._merge(
                 self.read().unionByName(partial, allowMissingColumns=False)
             )

@@ -25,10 +25,16 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+from ..session import default_parallelism
 
 
 _DEFAULT_INDEX_ROOT: str | None = None
@@ -56,6 +62,44 @@ def index_root(spark, prefix: str) -> str:
     return _DEFAULT_INDEX_ROOT
 
 
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` as a parquet read returns it: Spark writes every field,
+    array element, map key and map value as nullable."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _written_schema(df: DataFrame, partition_cols: list[str]) -> StructType:
+    """The schema a parquet read of ``df``'s written directory returns:
+    every field nullable, hive partition columns moved last."""
+    fields = {f.name: f for f in _nullable(df.schema)}
+    return StructType(
+        [f for n, f in fields.items() if n not in partition_cols]
+        + [fields[n] for n in partition_cols]
+    )
+
+
+def _merge_schema(old: dict | None, new: StructType) -> dict | None:
+    """The ``mergeSchema`` union of a table's recorded schema (manifest
+    JSON) and a new directory's: ``old``'s columns in order, then
+    ``new``'s additive ones. None — read by inference — when ``old``
+    is unrecorded or a column changed type."""
+    if old is None:
+        return None
+    have = {f.name: f for f in StructType.fromJson(old)}
+    if any(f.name in have and have[f.name].dataType != f.dataType for f in new):
+        return None
+    added = [f for f in new if f.name not in have]
+    return StructType(list(have.values()) + added).jsonValue()
+
+
 class ConcurrentWriteError(RuntimeError):
     """Another writer committed (or is committing) the version this
     writer tried to claim. The losing commit is cleanly aborted —
@@ -69,19 +113,26 @@ class SnapshotStore:
         root/
           _CURRENT              # json: {"version": N}
           v00001/
-            _MANIFEST.json      # {"tables": {"name": [paths...]}}
-            users/ ...parquet
+            _MANIFEST.json      # {"tables": {"name": [paths...]},
+            users/ ...parquet   #  "schemas": {"name": StructType JSON}}
           v00002/
             _MANIFEST.json      # may point back into v00001 for
             posts/ ...          # tables unchanged by the commit
 
     A table is a *list* of immutable parquet directories; readers
-    union them. ``commit`` replaces a table's list (copy-on-write
-    rewrite — updates/renames), ``append`` adds one directory holding
-    only the new batch — O(batch), not O(table), which is the
-    difference between an append that costs megabytes and one that
-    rewrites a 100 TB fact table (the reference appends a single CSV
-    line, buzzdb_lab1.cpp:663-672; this is its snapshot-safe twin).
+    union them under the table's ``schemas`` entry — the schema a
+    ``mergeSchema`` read of the list returns (every field nullable,
+    partition columns last), recorded by the writer so a read runs no
+    footer-inference job (Delta and Iceberg keep the schema in their
+    metadata log for the same reason). A manifest without ``schemas``
+    (written before they were recorded) is read by inference.
+
+    ``commit`` replaces a table's list (copy-on-write rewrite —
+    updates/renames), ``append`` adds one directory holding only the
+    new batch — O(batch), not O(table), which is the difference
+    between an append that costs megabytes and one that rewrites a
+    100 TB fact table (the reference appends a single CSV line,
+    buzzdb_lab1.cpp:663-672; this is its snapshot-safe twin).
     """
 
     def __init__(
@@ -106,6 +157,8 @@ class SnapshotStore:
             return 0
 
     def _manifest(self, version: int) -> dict:
+        if version == 0:
+            return {}
         with open(os.path.join(self.root, f"v{version:05d}", "_MANIFEST.json")) as f:
             return json.load(f)
 
@@ -135,18 +188,21 @@ class SnapshotStore:
         return {n: [p] if isinstance(p, str) else list(p) for n, p in raw.items()}
 
     def read(self, name: str, version: int | None = None) -> DataFrame:
-        """Union-read the table's file list. ``mergeSchema`` makes the
-        read schema the UNION of all listed directories' schemas, so a
-        column added by a later append is nullable-absent in older
-        files instead of silently dropped — parquet's additive schema
-        evolution, which is the only kind ``append`` can create (a
-        REPLACE commit rewrites to one directory, so mixed schemas
-        only ever arise from appends). Each version's manifest is
-        immutable, so time-travel reads resolve the schema as of that
-        version (pinned in tests/test_durability.py)."""
-        by_table = self.tables(version)
+        """Union-read the table's file list under the version's
+        recorded schema: the UNION of all listed directories' schemas,
+        so a column added by a later append is nullable-absent in
+        older files instead of silently dropped — parquet's additive
+        schema evolution. Passing the schema launches no Spark job; a
+        ``mergeSchema`` footer-inference read is only the fallback for
+        manifests written before schemas were recorded. Each version's
+        manifest is immutable, so time-travel reads resolve the schema
+        as of that version (pinned in tests/test_durability.py)."""
+        v = self.current_version() if version is None else version
+        # resolve the pointer once: the file list and the schema must
+        # come from the same version (tables(None) answers {} on an
+        # empty store)
+        by_table = self.tables(v or version)
         if name not in by_table:
-            v = self.current_version() if version is None else version
             if v and name in self._manifest(v).get("vacuumed_tables", []):
                 raise ValueError(
                     f"table '{name}' at version {v} was vacuumed (its "
@@ -154,10 +210,23 @@ class SnapshotStore:
                     "horizon; see SnapshotStore.vacuum)"
                 )
             raise KeyError(name)
-        return (
-            self.spark.read.option("mergeSchema", True)
-            .parquet(*by_table[name])
-        )
+        return self.read_dirs(by_table[name], self.table_schema(name, v))
+
+    def table_schema(self, name: str, version: int) -> StructType | None:
+        """The schema recorded for table ``name`` at ``version``; None
+        when that manifest predates recorded schemas or a column
+        changed type (read by inference)."""
+        schema = self._manifest(version).get("schemas", {}).get(name)
+        return None if schema is None else StructType.fromJson(schema)
+
+    def read_dirs(self, paths: list[str], schema: StructType | None) -> DataFrame:
+        """Read some of a table's directories under ``schema``, as
+        ``table_schema`` returns it for the version the caller planned
+        against — no Spark job. None falls back to ``mergeSchema``
+        inference, one footer-reading job."""
+        if schema is None:
+            return self.spark.read.option("mergeSchema", True).parquet(*paths)
+        return self.spark.read.schema(schema).parquet(*paths)
 
     def read_all(self) -> dict[str, DataFrame]:
         return {n: self.read(n) for n in self.tables()}
@@ -224,7 +293,7 @@ class SnapshotStore:
         sessions (streaming event-time must be TIMESTAMP while the
         parquet fixtures scan as NTZ, so mixed writers are the normal
         case) — or rejected loudly. Silent drift would poison every
-        later ``mergeSchema`` union read."""
+        later union read."""
         appended = {
             n: self._align_append_schema(n, df) for n, df in appended.items()
         }
@@ -240,8 +309,9 @@ class SnapshotStore:
         current = {f.name: f.dataType for f in self.read(name).schema.fields}
         out, realigned = [], False
         for f in df.schema.fields:
-            want = current.get(f.name, f.dataType)
-            if f.dataType == want:
+            # the table's types are as read back: nested fields nullable
+            want = current.get(f.name)
+            if want is None or _nullable(f.dataType) == want:
                 out.append(F.col(f.name))
             elif isinstance(f.dataType, ts_family) and isinstance(want, ts_family):
                 out.append(F.col(f.name).cast(want).alias(f.name))
@@ -258,8 +328,7 @@ class SnapshotStore:
     def meta(self) -> dict:
         """Writer-defined metadata of the current version (empty for
         v0 and for manifests written before meta existed)."""
-        v = self.current_version()
-        return {} if v == 0 else self._manifest(v).get("meta", {})
+        return self._manifest(self.current_version()).get("meta", {})
 
     def compact(self, name: str) -> int:
         """Rewrite ``name``'s file list to ONE fresh directory in a
@@ -297,8 +366,6 @@ class SnapshotStore:
         already removed are skipped, so loosening ``retain_last``
         between runs is safe. Returns {"removed_dirs",
         "removed_versions", "horizon"}."""
-        import shutil
-
         if retain_last < 1:
             raise ValueError("retain_last must be >= 1")
         cur = self.current_version()
@@ -385,18 +452,21 @@ class SnapshotStore:
         skip whole files) and collects the DIRECTORY NAMES that hold
         matches — metadata-scale, like ``merge_upsert``'s planning —
         then only those entries rewrite into one fresh directory;
-        untouched entries carry forward by reference. The predicate
-        must reference columns present in every entry (delete after
-        ``compact`` if schema evolution split them). A delete that
-        matches nothing is a no-op and does not burn a version."""
+        untouched entries carry forward by reference. Every entry is
+        read under the table's recorded schema, so an entry written
+        before an additive column reads it as NULL, which never
+        deletes. A delete that matches nothing is a no-op and does not
+        burn a version."""
         import functools
 
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        paths = self.tables()[name]
+        v = self.current_version()
+        paths = self.tables(v)[name]
+        schema = self.table_schema(name, v)
         planned = functools.reduce(
             DataFrame.unionByName,
             [
-                self.spark.read.parquet(p)
+                self.read_dirs([p], schema)
                 .filter(cond)
                 .select(F.lit(p).alias("_dir"))
                 for p in paths
@@ -407,10 +477,8 @@ class SnapshotStore:
         kept = [p for p in paths if p not in matched]
         if not touched:
             return self.current_version()
-        survivors = (
-            self.spark.read.option("mergeSchema", True)
-            .parquet(*touched)
-            .filter(~F.coalesce(cond.cast("boolean"), F.lit(False)))
+        survivors = self.read_dirs(touched, schema).filter(
+            ~F.coalesce(cond.cast("boolean"), F.lit(False))
         )
         return self._publish({name: survivors}, append=False, carry={name: kept})
 
@@ -434,12 +502,14 @@ class SnapshotStore:
         ``append``'s O(batch) shape."""
         import functools
 
-        paths = self.tables()[name]
+        v = self.current_version()
+        paths = self.tables(v)[name]
+        schema = self.table_schema(name, v)
         upd_keys = updates.select(*key_cols).distinct()
         tagged = functools.reduce(
             DataFrame.unionByName,
             [
-                self.spark.read.parquet(p)
+                self.read_dirs([p], schema)
                 .select(*key_cols)
                 .withColumn("_dir", F.lit(p))
                 for p in paths
@@ -454,7 +524,7 @@ class SnapshotStore:
         }
         kept = [p for p in paths if p not in touched]
         if touched:
-            base = self.spark.read.option("mergeSchema", True).parquet(*touched)
+            base = self.read_dirs(list(touched), schema)
             merged = base.join(
                 F.broadcast(upd_keys), key_cols, "left_anti"
             ).unionByName(updates, allowMissingColumns=True)
@@ -508,8 +578,6 @@ class SnapshotStore:
                     and time.time() - newest > self.stale_claim_seconds
                 )
                 if stale and attempt == 0:
-                    import shutil
-
                     shutil.rmtree(vdir, ignore_errors=True)
                     continue
                 raise ConcurrentWriteError(
@@ -517,6 +585,23 @@ class SnapshotStore:
                     "writer; re-plan against the current snapshot and retry"
                 ) from None
         raise AssertionError("unreachable")
+
+    def _write_all(self, writes: list[tuple[DataFrameWriter, str]]) -> None:
+        """Run a commit's table writes concurrently, one pool thread per
+        table up to ``default_parallelism()``: at OLTP sizes each write
+        is a few short Spark jobs, so the commit is bound by job latency,
+        not by cores. Every task inherits the caller's local properties
+        (job group, scheduler pool) through ``inheritable_thread_target``,
+        wrapped per task on the caller's thread. Returns after every
+        write has finished; a failed write re-raises."""
+        n_threads = max(1, min(len(writes), default_parallelism()))
+        with ThreadPoolExecutor(n_threads) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(self.spark)(writer.parquet), path)
+                for writer, path in writes
+            ]
+        for future in futures:
+            future.result()
 
     def _publish(
         self,
@@ -527,32 +612,49 @@ class SnapshotStore:
         carry: dict[str, list[str]] | None = None,
         meta: dict | None = None,
     ) -> int:
-        old_tables = self.tables()
-        old_meta = self.meta()
-        version = self.current_version() + 1
+        cur = self.current_version()
+        old = self._manifest(cur)
+        new_tables = self.tables(cur) if cur else {}
+        schemas = dict(old.get("schemas", {}))
+        version = cur + 1
         vdir = self._claim_version(version)
 
-        new_tables = {n: list(ps) for n, ps in old_tables.items()}
-        for name, df in changed.items():
-            path = os.path.join(vdir, name)
-            if cluster_by and name in cluster_by:
-                cols, n_files = cluster_by[name]
-                df = df.repartitionByRange(n_files, *cols).sortWithinPartitions(
-                    *cols
+        try:
+            writes = []
+            for name, df in changed.items():
+                path = os.path.join(vdir, name)
+                parts = (partition_by or {}).get(name, [])
+                if cluster_by and name in cluster_by:
+                    cols, n_files = cluster_by[name]
+                    df = df.repartitionByRange(n_files, *cols).sortWithinPartitions(
+                        *cols
+                    )
+                writer = df.write.mode("overwrite")
+                if parts:
+                    writer = writer.partitionBy(*parts)
+                writes.append((writer, path))
+                if append and name in new_tables:
+                    prior = new_tables[name]
+                elif carry is not None and name in carry:
+                    # partial rewrite (delete_where / merge_upsert):
+                    # untouched directories carry forward by reference
+                    # ahead of the freshly rewritten one.
+                    prior = list(carry[name])
+                else:
+                    prior = []
+                new_tables[name] = prior + [path]
+                written = _written_schema(df, parts)
+                schemas[name] = (
+                    _merge_schema(schemas.get(name), written)
+                    if prior
+                    else written.jsonValue()
                 )
-            writer = df.write.mode("overwrite")
-            if partition_by and name in partition_by:
-                writer = writer.partitionBy(*partition_by[name])
-            writer.parquet(path)
-            if append and name in new_tables:
-                new_tables[name] = new_tables[name] + [path]
-            elif carry is not None and name in carry:
-                # partial rewrite (delete_where / merge_upsert):
-                # untouched directories carry forward by reference
-                # ahead of the freshly rewritten one.
-                new_tables[name] = list(carry[name]) + [path]
-            else:
-                new_tables[name] = [path]
+            self._write_all(writes)
+        except BaseException:
+            # nothing was published: release the claim so the next
+            # commit need not wait out stale_claim_seconds
+            shutil.rmtree(vdir, ignore_errors=True)
+            raise
 
         with open(os.path.join(vdir, "_MANIFEST.json"), "w") as f:
             json.dump(
@@ -561,9 +663,11 @@ class SnapshotStore:
                     "tables": new_tables,
                     # meta carries forward (merged) so progress markers
                     # survive unrelated commits between stream batches.
-                    "meta": {**old_meta, **(meta or {})},
+                    "meta": {**old.get("meta", {}), **(meta or {})},
+                    "schemas": schemas,
                 },
                 f,
+                separators=(",", ":"),
             )
             f.flush()
             os.fsync(f.fileno())

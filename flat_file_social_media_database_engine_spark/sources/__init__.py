@@ -1,13 +1,12 @@
 from .catalog import load_fixture_tables, read_table
 from .csv_source import read_csv_strict, load_social_tables
-from .integrity import dangling_keys, semi_filter, ri_sweep
+from .integrity import semi_filter, ri_sweep
 
 __all__ = [
     "load_fixture_tables",
     "read_table",
     "read_csv_strict",
     "load_social_tables",
-    "dangling_keys",
     "semi_filter",
     "ri_sweep",
 ]

@@ -129,7 +129,7 @@ def load_social_tables(spark: SparkSession, data_dir: str) -> dict[str, DataFram
     RI order matters and is preserved from the reference: posts are
     filtered against users first (buzzdb_lab1.cpp:251-252), then
     engagements against the *surviving* posts and users (:258-264,
-    :299-302). All are left-semi joins over distinct key projections —
+    :299-302). All are left-semi joins against the dims' key columns —
     the Spark-native form of the reference's build-small-probe-large
     unordered_set membership tests (:207,259,524,542). Join strategy
     is left to AQE/threshold ('auto'): it broadcasts the key sets at

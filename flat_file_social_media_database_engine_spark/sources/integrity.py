@@ -4,9 +4,11 @@ The reference enforces logical FKs by load-time filtering
 (buzzdb_lab1.cpp:251-252, :299-302), insert-time probes (:645-661),
 and a post-hoc anti-join sweep (``check_no_dangling_post_ids``,
 :1063-1070). All three are semi/anti equi-joins whose build side is
-the dim's distinct key set — broadcast by AQE while it is small, like
-the reference's in-memory ``unordered_set`` build/probe (:524-547) but
-shipped to executors.
+the dim's key column — broadcast by AQE while it is small, like the
+reference's in-memory ``unordered_set`` build/probe (:524-547) but
+shipped to executors. A semi or anti join keeps or drops each probe
+row whether its key matches once or many times, so the build side
+needs no de-duplication.
 """
 
 from __future__ import annotations
@@ -16,14 +18,17 @@ from pyspark.sql import functions as F
 
 
 def _keys(dim: DataFrame, dim_key: str, fact_key: str) -> DataFrame:
-    """Distinct key projection of the build side, renamed to the fact
-    key. The join strategy is left to AQE / autoBroadcastJoinThreshold:
-    it broadcasts a small key set (the reference's in-memory
+    """Key projection of the build side, renamed to the fact key. It
+    is not de-duplicated: left-semi and left-anti results do not
+    depend on duplicate build keys, and a ``distinct`` would cost two
+    shuffles of the whole key column before the join. The join
+    strategy is left to AQE / autoBroadcastJoinThreshold: it
+    broadcasts a small key column (the reference's in-memory
     ``unordered_set`` build, buzzdb_lab1.cpp:524-547) and picks a
-    shuffled hash join once the build side stops fitting (a fact key
-    set grows with the data).
+    shuffled join once the build side stops fitting (a fact key set
+    grows with the data).
     """
-    return dim.select(F.col(dim_key).alias(fact_key)).distinct()
+    return dim.select(F.col(dim_key).alias(fact_key))
 
 
 def semi_filter(
@@ -32,7 +37,7 @@ def semi_filter(
     """Keep fact rows whose key exists in dim (left-semi join).
 
     Mirrors buzzdb_lab1.cpp:207-213 (build) + :251-252 (probe). The
-    build side is the *distinct key projection*, never the full dim.
+    build side is the dim's key column alone, never the full dim.
     """
     return fact.join(_keys(dim, dim_key, fact_key), on=fact_key, how="left_semi")
 
@@ -42,17 +47,6 @@ def anti_filter(
 ) -> DataFrame:
     """Fact rows whose key is missing from dim (dangling FKs)."""
     return fact.join(_keys(dim, dim_key, fact_key), on=fact_key, how="left_anti")
-
-
-def dangling_keys(
-    fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str
-) -> DataFrame:
-    """Distinct dangling key values (empty ⇔ RI holds).
-
-    Spark-native form of check_no_dangling_post_ids
-    (buzzdb_lab1.cpp:1063-1070).
-    """
-    return anti_filter(fact, dim, fact_key, dim_key).select(fact_key).distinct()
 
 
 def ri_sweep(pairs: list[tuple[DataFrame, DataFrame, str, str, str]]) -> DataFrame:

@@ -2018,7 +2018,7 @@ def _inc_best_match(
 # ---------------------------------------------------------------------------
 BAND_INDEX_BUCKETS = 64
 
-_BAND_INDEX_CACHE: dict[tuple[str, str], dict[str, tuple[list, "object"]]] = {}
+_BAND_INDEX_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
 
 
 def _band_bucket(key: Column) -> Column:
@@ -2052,16 +2052,16 @@ def _band_index_committed(
     filtering the corpus-wide ``_band_table_shared`` pass — the
     commit job is O(corpus) and the probe never triggers a pass
     sized to the whole table (the round-8 decade receipt grew with
-    the tier for exactly that reason). Reads pass the written schema
-    explicitly so an empty corpus (zero files, zero partition dirs)
-    is an empty scan instead of a schema-inference failure — the
-    same contract as the persisted IVF index. Store location policy
-    is ``plans.snapshots.index_root``."""
+    the tier for exactly that reason). ``SnapshotStore.read`` takes
+    the schema from the manifest, so an empty corpus (zero files,
+    zero partition dirs) reads back as an empty scan. The cache keeps
+    the read-back DataFrames, so a probe re-reads no manifest. Store
+    location policy is ``plans.snapshots.index_root``."""
     import hashlib
 
     from ..plans.snapshots import SnapshotStore, index_root
 
-    def build() -> dict[str, tuple[list, "object"]]:
+    def build() -> dict[str, DataFrame]:
         key = (spark.sparkContext.applicationId, sf_dir)
         digest = hashlib.sha256("\x00".join(key).encode()).hexdigest()[:16]
         root = f"{index_root(spark, 'band_index')}/band_{digest}"
@@ -2101,19 +2101,11 @@ def _band_index_committed(
         sh.unpersist()
         bands.unpersist()
         return {
-            name: (store.tables()[name], schema)
-            for name, schema in (
-                ("band_index", bands.schema),
-                ("band_counts", counts.schema),
-                ("corpus_shingles", sh.schema),
-            )
+            n: store.read(n)
+            for n in ("band_index", "band_counts", "corpus_shingles")
         }
 
-    committed = session_cached(_BAND_INDEX_CACHE, spark, sf_dir, build)
-    return {
-        name: spark.read.schema(schema).parquet(*paths)
-        for name, (paths, schema) in committed.items()
-    }
+    return session_cached(_BAND_INDEX_CACHE, spark, sf_dir, build)
 
 
 _BATCH_SIGN_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}

@@ -98,6 +98,7 @@ def test_band_index_concurrent_cold_build_commits_once(spark, tmp_path):
     writer, both read the same tables, and the store holds version 1
     only."""
     import os
+    from urllib.parse import urlparse
 
     from flat_file_social_media_database_engine_spark.plans.snapshots import (
         SnapshotStore,
@@ -136,10 +137,10 @@ def test_band_index_concurrent_cold_build_commits_once(spark, tmp_path):
     assert len(got) == 2 and got[0] == got[1]
     assert len(got[0]["corpus_shingles"]) == 3
 
-    paths, _ = D._BAND_INDEX_CACHE[(spark.sparkContext.applicationId, d)][
-        "band_index"
-    ]
-    store = SnapshotStore(spark, os.path.dirname(os.path.dirname(paths[0])))
+    shingles = D._band_index_committed(spark, d)["corpus_shingles"]
+    shard = urlparse(shingles.inputFiles()[0]).path
+    root = os.path.dirname(os.path.dirname(os.path.dirname(shard)))
+    store = SnapshotStore(spark, root)
     assert store.current_version() == 1
 
 

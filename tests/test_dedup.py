@@ -562,6 +562,7 @@ def test_incremental_persisted_matches_session_path_and_prunes(
     partition directories — and (d) the artifact is a real versioned
     store commit (manifest present, version 1)."""
     import os
+    from urllib.parse import urlparse
 
     from flat_file_social_media_database_engine_spark.plans.snapshots import (
         SnapshotStore,
@@ -616,10 +617,8 @@ def test_incremental_persisted_matches_session_path_and_prunes(
     assert committed["corpus_shingles"].count() == 2  # corpus docs
 
     # durable artifact: a versioned SnapshotStore with fsync'd manifest
-    paths, _ = D._BAND_INDEX_CACHE[
-        (spark.sparkContext.applicationId, str(d))
-    ]["band_index"]
-    root = os.path.dirname(os.path.dirname(paths[0]))
+    shard = urlparse(committed["corpus_shingles"].inputFiles()[0]).path
+    root = os.path.dirname(os.path.dirname(os.path.dirname(shard)))
     store = SnapshotStore(spark, root)
     assert store.current_version() == 1
     assert "band_index" in store.tables()

@@ -674,3 +674,146 @@ def test_rollup_rejects_non_mergeable_aggregates(spark, tmp_path):
     with pytest.raises(ValueError, match="not self-mergeable"):
         MaintainedRollup(s, "bad", "facts", ["k"], {"m": ("median", "x")})
 
+
+
+# ---------------------------------------------------------------------------
+# Recorded schemas: reads launch no Spark job; commits write concurrently
+# ---------------------------------------------------------------------------
+def _jobs_in_group(spark, group, action):
+    """Run ``action`` under job group ``group``; return (result, job ids)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _inferred_schema(spark, store, name, version=None):
+    return (
+        spark.read.option("mergeSchema", True)
+        .parquet(*store.tables(version)[name])
+        .schema
+    )
+
+
+def test_read_launches_no_job_and_matches_inferred_schema(store, spark):
+    """After every kind of write, ``read`` takes its schema from the
+    manifest (no footer-inference job) and that schema equals what a
+    ``mergeSchema`` read of the same directories infers."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    def check(version=None):
+        df, jobs = _jobs_in_group(
+            spark, f"read-{uuid.uuid4().hex}", lambda: store.read("t", version)
+        )
+        assert jobs == []
+        assert df.schema == _inferred_schema(spark, store, "t", version)
+        return df
+
+    check()  # the fixture's commit
+    v1 = store.current_version()
+    store.append(
+        {"t": spark.createDataFrame([(3, "c", 1.5)], "id int, v string, w double")}
+    )
+    assert check().columns == ["id", "v", "w"]
+    store.merge_upsert(
+        "t",
+        spark.range(1, 2).select(
+            F.col("id").cast("int"), F.lit("A").alias("v"),
+            F.lit(2.5).alias("w"), F.array(F.lit(1)).alias("tags"),
+        ),
+        ["id"],
+    )
+    assert check().columns == ["id", "v", "w", "tags"]
+    # the batch's array has non-null elements, the table's as read
+    # back nullable ones: the same column type, so the append lands
+    store.append({"t": spark.range(4, 5).select(
+        F.col("id").cast("int"), F.array(F.lit(4)).alias("tags"))})
+    check()
+    store.delete_where("t", F.col("id") == 2)
+    check()
+    store.compact("t")
+    rows = {r["id"]: (r["v"], r["w"], r["tags"]) for r in check().collect()}
+    assert rows == {1: ("A", 2.5, [1]), 3: ("c", 1.5, None), 4: (None, None, [4])}
+    assert check(v1).columns == ["id", "v"]  # time travel
+
+
+def test_manifest_without_schemas_reads_by_inference(store, spark):
+    """Manifests written before schemas were recorded read through the
+    ``mergeSchema`` fallback, and later writes on such a store still
+    read back correctly."""
+    for v in range(1, store.current_version() + 1):
+        path = os.path.join(store.root, f"v{v:05d}", "_MANIFEST.json")
+        with open(path) as f:
+            m = json.load(f)
+        del m["schemas"]
+        with open(path, "w") as f:
+            json.dump(m, f)
+    assert sorted(tuple(r) for r in store.read("t").collect()) == [(1, "a"), (2, "b")]
+    store.append({"t": spark.createDataFrame([(3, "c", 7)], "id int, v string, w int")})
+    got = sorted(tuple(r) for r in store.read("t").collect())
+    assert got == [(1, "a", None), (2, "b", None), (3, "c", 7)]
+    store.delete_where("t", "id = 1")
+    assert sorted(r["id"] for r in store.read("t").collect()) == [2, 3]
+
+
+def test_empty_partitioned_table_reads_back_empty(spark, tmp_path):
+    """A partitioned commit of zero rows writes no parquet file and no
+    partition directory; the recorded schema (partition columns last)
+    still reads it back as an empty table instead of failing schema
+    inference."""
+    s = SnapshotStore(spark, str(tmp_path / "empty_part"))
+    empty = spark.createDataFrame([], "bucket int, id int, v string")
+    s.commit({"t": empty}, partition_by={"t": ["bucket"]})
+    df = s.read("t")
+    assert df.columns == ["id", "v", "bucket"]
+    assert df.count() == 0
+
+
+def test_multi_table_commit_writes_concurrently_in_callers_job_group(spark, tmp_path):
+    """A 3-table commit runs its table writes at the same time, and
+    every write job carries the committing thread's job group."""
+    s = SnapshotStore(spark, str(tmp_path / "concurrent"))
+    changed = {
+        n: spark.range(0, 300_000, numPartitions=2).selectExpr("id", f"id * {k} AS v")
+        for k, n in enumerate(("a", "b", "c"), start=1)
+    }
+    _, jobs = _jobs_in_group(spark, "concurrent-commit", lambda: s.commit(changed))
+    assert len(jobs) == 3  # one write job per table, all in the group
+    status = spark.sparkContext._jsc.sc().statusStore()
+    spans = [
+        (status.job(j).submissionTime().get().getTime(),
+         status.job(j).completionTime().get().getTime())
+        for j in jobs
+    ]
+    # all three were running at once: the last submission precedes
+    # the first completion
+    assert max(a for a, _ in spans) < min(b for _, b in spans)
+    assert {n: s.read(n).count() for n in changed} == dict.fromkeys(changed, 300_000)
+
+
+def test_failed_table_write_publishes_nothing(store, spark):
+    """One table's write fails inside a multi-table commit: the pointer
+    stays put, readers see the prior version, and the failed commit's
+    claim is released so the next commit takes the same version."""
+    from pyspark.sql import functions as F
+
+    before = store.current_version()
+    good = spark.createDataFrame([(9, "z")], "id int, v string")
+    bad = spark.range(10).select(
+        F.when(F.col("id") == 5, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id"))
+        .alias("id")
+    )
+    with pytest.raises(Exception, match="boom"):
+        store.commit({"t": good, "u": bad, "w": good})
+    assert store.current_version() == before
+    assert set(store.tables()) == {"t"}
+    assert sorted(tuple(r) for r in store.read("t").collect()) == [(1, "a"), (2, "b")]
+    assert not os.path.exists(os.path.join(store.root, f"v{before + 1:05d}"))
+    assert store.commit({"t": good}) == before + 1
+    assert [tuple(r) for r in store.read("t").collect()] == [(9, "z")]

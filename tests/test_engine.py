@@ -118,6 +118,23 @@ def test_m3_cascading_rename_atomic(engine):
     assert users[1] == "alice2"
 
 
+def test_m3_commit_jobs_carry_callers_job_group(engine, spark):
+    """M3 commits three tables at once, each written on its own pool
+    thread; every job of the op still runs under the caller's job
+    group (tracers and ``cancelJobGroup`` key on it) and none escapes
+    it."""
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    spark.sparkContext.setJobGroup("m3-commit", "m3-commit")
+    try:
+        engine.update_user_name(1, "alice2")
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert len(tracker.getJobIdsForGroup("m3-commit")) >= 3  # a write per table
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert "alice2" in {r["username"] for r in engine.tables["users"].collect()}
+
+
 def test_m1_mixed_sign_batch_clamps_net_sum(engine, spark):
     """Documented divergence from the reference's sequential clamp:
     one batch clamps the NET sum (post 10 has views=5; [-10, +3] nets
