@@ -9,7 +9,6 @@ currently the multimodal decode/feature pipeline.
 from .multimodal import (  # noqa: F401
     MEDIA_SCHEMA,
     decode_media,
-    extract_features,
     resize_media,
     sample_frames,
     synthesize_media_from_documents,

@@ -419,12 +419,6 @@ def decode_media(media: DataFrame) -> DataFrame:
     return spread(media.select(*cols)).mapInPandas(run, schema=DECODED_SCHEMA)
 
 
-def extract_features(media: DataFrame) -> DataFrame:
-    """(media_id, features array<float>) — the embedding-ingest shape
-    the similarity tier consumes."""
-    return decode_media(media).select("media_id", "features")
-
-
 def sample_frames(media: DataFrame, every_k: int = 2) -> DataFrame:
     """Explode videos into every-k-th FRAME PAYLOAD (frame 0 always
     kept): each output row carries one standalone P6 image, sliced

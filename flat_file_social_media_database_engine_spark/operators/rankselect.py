@@ -102,69 +102,6 @@ def _sentinel_group(proj):
     return proj.withColumn(_GRP, F.lit(0))
 
 
-def grouped_rank(
-    df: DataFrame,
-    group_cols: list[str],
-    order_by: list[Column],
-    rank_col: str = "rn",
-    total_col: str | None = None,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """``row_number() OVER (PARTITION BY group_cols ORDER BY
-    order_by)`` (1-based; global when ``group_cols`` is empty),
-    computed with bounded windows only — see module docstring.
-
-    ``order_by`` are column sort expressions (e.g.
-    ``F.col("v").asc()``) forming, together with ``group_cols``, a
-    TOTAL order. ``total_col`` additionally attaches the group's row
-    count (the ``count(*) OVER (PARTITION BY group)`` twin, needed by
-    percentile-style consumers without a second data-sized window).
-
-    Returns ``df``'s columns plus the rank (and optional total);
-    the returned frame reads a DISK_ONLY-persisted stamp of ``df`` —
-    callers sharing it across actions should session-cache it.
-    """
-    spark = df.sparkSession
-    parts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    src = df if group_cols else _sentinel_group(df)
-    grp_cols = list(group_cols) or [_GRP]
-    part_keys = [F.col(c).asc() for c in grp_cols] + list(order_by)
-    stamped = materialize(
-        src.repartitionByRange(parts, *part_keys).withColumn(
-            _PID, F.spark_partition_id()
-        )
-    )
-
-    counts = stamped.groupBy(_PID, *grp_cols).agg(
-        F.count(F.lit(1)).alias(_CNT)
-    )
-    # ≤ partitions rows per window partition (the sentinel keeps the
-    # no-group case partitioned — see _sentinel_group).
-    off_w = (
-        Window.partitionBy(*grp_cols)
-        .orderBy(_PID)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.withColumn(
-        _OFF, F.coalesce(F.sum(_CNT).over(off_w), F.lit(0))
-    )
-    if total_col is not None:
-        tot_w = Window.partitionBy(*grp_cols)
-        offsets = offsets.withColumn(total_col, F.sum(_CNT).over(tot_w))
-    offsets = offsets.drop(_CNT)
-
-    # partitions × groups rows — metadata-scale for the intended
-    # consumers (groups: 1 for a global rank, |event types| for the
-    # percentile report); a huge-group caller should drop the hint.
-    ranked = _nullsafe_join(stamped, offsets, [_PID], grp_cols)
-    local_w = Window.partitionBy(_PID, *grp_cols).orderBy(*order_by)
-    out = ranked.withColumn(
-        rank_col,
-        (F.row_number().over(local_w) + F.col(_OFF)).cast("bigint"),
-    ).drop(_PID, _OFF)
-    return out if group_cols else out.drop(_GRP)
-
-
 def grouped_prefix_sum(
     df: DataFrame,
     group_cols: list[str],
@@ -176,8 +113,9 @@ def grouped_prefix_sum(
     """EXCLUSIVE running sum — ``sum(value_col) OVER (PARTITION BY
     group_cols ORDER BY order_by ROWS BETWEEN UNBOUNDED PRECEDING AND
     1 PRECEDING)``, 0 for each group's first row — computed with
-    bounded windows only (the ``grouped_rank`` decomposition with the
-    per-(partition, group) COUNT pass generalized to a SUM pass):
+    bounded windows only (the module docstring's rank decomposition
+    with the per-(partition, group) COUNT pass generalized to a SUM
+    pass):
 
     1. range-repartition on (group_cols, order_by) — the order must
        end in a unique tiebreak, making the composite key a total
@@ -189,9 +127,12 @@ def grouped_prefix_sum(
     4. broadcast back, local exclusive running sum per (partition,
        group) + the partition's offset.
 
-    Telescoping is exact for any boundary placement (same argument as
-    ``grouped_rank``); the stamp is materialized so the sum pass and
-    the local pass see identical boundaries. Unlike a
+    Telescoping is exact for any boundary placement: every row of an
+    earlier range partition of the same group precedes every row of a
+    later one in the total order, so the partition's offset (the sum
+    over the group's earlier partitions) plus the local running sum
+    IS the group-wide running sum. The stamp is materialized so the
+    sum pass and the local pass see identical boundaries. Unlike a
     ``partitionBy(group)`` window, a group holding most of the table
     (e.g. one dominant ``source`` at 100 TB) never becomes one
     unsplittable sort task. Consumer: ``docs_pack_sequences``
@@ -246,13 +187,17 @@ def rank_select(
     1-based rank expression — the row at that rank under
     ``order_cols`` (all ascending; must end in a unique tiebreak).
 
-    Cheaper than ``grouped_rank`` + filter when only a few ranks are
-    needed (quartile boundaries, p50/p90/p99): the per-(partition,
-    group) counts LOCATE the one range partition holding each target
-    rank, a broadcast semi-join keeps only those partitions' rows,
-    and the local sort runs over ≤ |cuts| partition slices instead of
-    re-shuffling the whole table — the full-data work is exactly one
-    range repartition plus one map-side-combined count pass.
+    Ranks telescope like ``grouped_prefix_sum``'s running sums: a
+    row's global rank is its range partition's offset (the group's row
+    count in earlier partitions) plus its local ``row_number``, exact
+    for any boundary placement that respects key order. So only a few
+    ranks (quartile boundaries, p50/p90/p99) never need a full
+    ranking: the per-(partition, group) counts LOCATE the one range
+    partition holding each target rank, a broadcast semi-join keeps
+    only those partitions' rows, and the local sort runs over ≤ |cuts|
+    partition slices instead of re-shuffling the whole table — the
+    full-data work is exactly one range repartition plus one
+    map-side-combined count pass.
 
     Returns one row per group present in ``df`` (exactly one row,
     all-null cuts, when ``group_cols`` is empty and ``df`` has no

@@ -164,8 +164,7 @@ class SnapshotStore:
 
     # -- read -------------------------------------------------------------
     def tables(self, version: int | None = None) -> dict[str, list[str]]:
-        """Manifest as name → list of parquet dirs (older single-path
-        manifests are normalized to 1-element lists). ``version``
+        """Manifest as name → list of parquet dirs. ``version``
         time-travels to any committed snapshot — commits never delete
         prior versions' files, so every manifest stays readable (the
         Iceberg/Delta read-at-version contract) UNTIL an explicit
@@ -179,13 +178,12 @@ class SnapshotStore:
         if v == 0:
             return {}
         try:
-            raw = self._manifest(v)["tables"]
+            return self._manifest(v)["tables"]
         except FileNotFoundError:
             raise ValueError(
                 f"version {v} was vacuumed (pre-horizon history is "
                 "physically reclaimed; see SnapshotStore.vacuum)"
             ) from None
-        return {n: [p] if isinstance(p, str) else list(p) for n, p in raw.items()}
 
     def read(self, name: str, version: int | None = None) -> DataFrame:
         """Union-read the table's file list under the version's
@@ -413,10 +411,7 @@ class SnapshotStore:
                 removed_versions += 1
             elif os.path.exists(manifest_path):
                 m = self._manifest(v)
-                tbls = {
-                    n: [p] if isinstance(p, str) else list(p)
-                    for n, p in m["tables"].items()
-                }
+                tbls = m["tables"]
                 live = {
                     n: ps
                     for n, ps in tbls.items()

@@ -173,19 +173,6 @@ EMBEDDINGS = StructType(
     ]
 )
 
-FIXTURE_TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
 FIXTURE_SCHEMAS = {
     "region": REGION,
     "nation": NATION,

@@ -1,9 +1,8 @@
-from .catalog import load_fixture_tables, read_table
+from .catalog import read_table
 from .csv_source import read_csv_strict, load_social_tables
 from .integrity import semi_filter, ri_sweep
 
 __all__ = [
-    "load_fixture_tables",
     "read_table",
     "read_csv_strict",
     "load_social_tables",

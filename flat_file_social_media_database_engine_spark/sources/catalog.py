@@ -1,10 +1,9 @@
 """Parquet fixture catalog.
 
-Loads the driver-provided tables and registers them as temp views so
-every operator is also runnable as plain Spark SQL — the engine's
-"commit" is view registration, mirroring the reference's
-build-then-swap load protocol (buzzdb_lab1.cpp:308-315) with
-immutable DataFrames instead of a mutex'd pointer swap.
+``read_table`` loads one fixture table with its scan layout
+normalized; registering the result as a temp view
+(``createOrReplaceTempView``) makes every operator also runnable as
+plain Spark SQL (tests/test_sql_surface.py).
 """
 
 from __future__ import annotations
@@ -15,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from ..schemas import FIXTURE_TABLES, EVENTS
+from ..schemas import EVENTS
 
 
 # Spread grain: one spread partition per this many COMPRESSED input
@@ -185,19 +184,3 @@ def _scan_shape(path: str) -> dict:
         "input_bytes": os.path.getsize(path),
         "current_parallelism": pq.ParquetFile(path).metadata.num_row_groups,
     }
-
-
-def load_fixture_tables(
-    spark: SparkSession, sf_dir: str, register_views: bool = False
-) -> dict[str, DataFrame]:
-    """Load all fixture tables; optionally register `name` temp views."""
-    dfs: dict[str, DataFrame] = {}
-    for name in FIXTURE_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        df = read_table(spark, sf_dir, name)
-        dfs[name] = df
-        if register_views:
-            df.createOrReplaceTempView(name)
-    return dfs

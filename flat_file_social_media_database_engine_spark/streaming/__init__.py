@@ -1,12 +1,4 @@
 """Structured Streaming tier: the events workloads re-expressed over
 ``readStream`` (see ``streaming.events``)."""
 
-from .events import (  # noqa: F401
-    dedupe_stream,
-    enrich_stream,
-    json_extract_rollup,
-    read_events_stream,
-    running_value_clamp,
-    sessionize,
-    tumbling_counts,
-)
+from .events import read_events_stream, sessionize  # noqa: F401

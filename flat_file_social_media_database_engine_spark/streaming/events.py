@@ -10,8 +10,6 @@ incrementally-maintained results with late-data handling.
 Design notes (100 TB / always-on posture):
 - State is bounded by watermarks: ``withWatermark`` lets Spark expire
   window/session state once event time passes window_end + delay.
-- ``tumbling_counts`` ≙ ``events_hourly_rollup``: same aggregate
-  expressions (count + DECIMAL-exact sum cast back to double).
 - ``sessionize`` ≙ ``events_sessionize``: the batch twin derives
   sessions with two window functions; streaming uses the built-in
   ``session_window`` (gap-close semantics are identical — a session
@@ -205,26 +203,6 @@ def stage_events_with_sentinels(spark: SparkSession, sf_dir: str) -> str:
     return stage
 
 
-def tumbling_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming twin of ``events_hourly_rollup``: 1-hour tumbling
-    windows per event_type. Watermark bounds state: a window's state
-    is dropped once event time passes window_end + watermark."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(28,6)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
 def sessionize(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Streaming twin of ``events_sessionize``: 30-minute-gap sessions
     per user via the built-in ``session_window`` (stateful merging
@@ -243,21 +221,7 @@ def sessionize(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     )
 
 
-def json_extract_rollup(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming twin of ``events_json_extract`` with the grouped
-    rollup windowed by hour (a global no-window aggregate would need
-    complete-mode state forever; windowing it is the streaming-honest
-    form)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .withColumn("k", F.get_json_object("props", "$.k").cast("bigint"))
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.sum("k").alias("sum_k"), F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "sum_k", "n")
-    )
-
-
-def running_value_clamp(
+def running_net_clamp_micro(
     events: DataFrame,
     watermark: str = "1 hour",
     retention_ms: int = 2 * 60 * 60 * 1000,
@@ -266,89 +230,33 @@ def running_value_clamp(
     running net-sum of ``value`` clamped at zero once per micro-batch
     — the STREAMING twin of the M1 mutation's batch-clamp semantics
     (operators/mutations.py: ``greatest(0, state + net_delta)`` per
-    batch, exactly the model pinned in tests/test_properties.py).
+    batch).
 
     Built-in windowed aggregates can't express this: the clamp makes
     the fold non-associative, so it needs explicit per-key state
     carried across micro-batches — the documented escape hatch is
     arbitrary stateful processing over Arrow batches.
 
-    State is one (double, bigint) pair per user, and it is BOUNDED:
-    an event-time timeout expires users idle past
+    Values enter the fold in exact integer MICRO-UNITS,
+    ``floor(value * 1e6)`` int64, so the per-batch net-sum is an
+    integer (associative, order-free) and the whole trajectory is
+    bit-identical to any independent replay of the same batch
+    partitioning — the property that makes the operator
+    DIFFERENTIALLY CHECKABLE (events_stream_clamp's DuckDB recursive-
+    CTE oracle) rather than only model-checkable. A float fold cannot
+    offer that: pandas' pairwise summation vs an oracle's sequential
+    fold diverge in low bits.
+
+    State is one (int, int) pair per user, and it is BOUNDED: an
+    event-time timeout expires users idle past
     ``max(watermark, their own event-time frontier) + retention_ms``
     (the always-on TTL posture; an expired user's counter restarts
     from zero, like any TTL'd running counter — see the timeout
     comment below for why the group frontier participates). Null
     ``value`` rows count toward n_events but contribute 0 to the sum
-    (SQL SUM-ignores-NULL semantics, matching the batch twin).
-    Emits one updated (user_id, cum_value, n_events) row per user per
-    micro-batch — update output mode."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def update(key, pdfs, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        total = 0.0
-        n = 0
-        mx_ms = 0
-        for pdf in pdfs:
-            total += float(pdf["value"].sum())  # pandas sum skips NaN
-            n += len(pdf)
-            mx = pdf["ts"].max()  # skips NaT; NaT only if ALL are
-            if len(pdf) and pd.notna(mx):
-                mx_ms = max(mx_ms, int(mx.value // 1_000_000))
-        cum, seen = state.get if state.exists else (0.0, 0)
-        cum = max(0.0, cum + total)  # net-sum clamp, once per batch
-        seen += n
-        state.update((cum, seen))
-        wm = state.getCurrentWatermarkMs()
-        # Schedule expiry relative to the event-time frontier THIS
-        # GROUP has reached, not the global watermark alone: in the
-        # FIRST micro-batch the watermark is still 0 (it advances
-        # between batches), so `wm + retention` lands near the 1970
-        # epoch and fires as soon as the watermark jumps to real event
-        # time — wiping state for every user absent from the second
-        # batch. Found by the chunked-replay differential
-        # (events_stream_clamp); pinned in tests/test_streaming.py.
-        state.setTimeoutTimestamp(max(wm, mx_ms) + retention_ms)
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "cum_value": [cum], "n_events": [seen]}
-        )
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            "user_id bigint, cum_value double, n_events bigint",
-            "cum_value double, n_events bigint",
-            "update",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def running_net_clamp_micro(
-    events: DataFrame,
-    watermark: str = "1 hour",
-    retention_ms: int = 2 * 60 * 60 * 1000,
-) -> DataFrame:
-    """``running_value_clamp`` in exact integer MICRO-UNITS: values
-    enter the fold as ``floor(value * 1e6)`` int64, so the per-batch
-    net-sum is an integer (associative, order-free) and the whole
-    trajectory is bit-identical to any independent replay of the same
-    batch partitioning — the property that makes the operator
-    DIFFERENTIALLY CHECKABLE (events_stream_clamp's DuckDB recursive-
-    CTE oracle) rather than only model-checkable. The float form
-    above cannot offer that: pandas' pairwise summation vs an
-    oracle's sequential fold diverge in low bits.
-
-    Same state contract: one (int, int) pair per user, event-time
-    timeout at frontier + retention, update-mode emission of
-    (user_id, cum_micro, n_events) per touched user per batch."""
+    (SQL SUM-ignores-NULL semantics, matching the batch twin). Emits
+    one updated (user_id, cum_micro, n_events) row per touched user
+    per micro-batch — update output mode."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     def update(key, pdfs, state):
@@ -379,7 +287,14 @@ def running_net_clamp_micro(
         seen += n
         state.update((cum, seen))
         wm = state.getCurrentWatermarkMs()
-        # group frontier, not bare watermark — see running_value_clamp
+        # Schedule expiry relative to the event-time frontier THIS
+        # GROUP has reached, not the global watermark alone: in the
+        # FIRST micro-batch the watermark is still 0 (it advances
+        # between batches), so `wm + retention` lands near the 1970
+        # epoch and fires as soon as the watermark jumps to real event
+        # time — wiping state for every user absent from the second
+        # batch. Found by the chunked-replay differential
+        # (events_stream_clamp); pinned in tests/test_streaming.py.
         state.setTimeoutTimestamp(max(wm, mx_ms) + retention_ms)
         yield pd.DataFrame(
             {"user_id": [key[0]], "cum_micro": [cum], "n_events": [seen]}
@@ -605,43 +520,13 @@ def run_stream_to_parquet(
     return spark.read.schema(read_schema).parquet(out_dir)
 
 
-def dedupe_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming exactly-once-per-key dedup: drop repeated event_ids
-    arriving within the watermark horizon
-    (``dropDuplicatesWithinWatermark`` — state holds one timestamp per
-    key and expires with the watermark, unlike ``dropDuplicates``
-    whose key set grows forever). The streaming leg of the dedup
-    tier: at-least-once sources (replayed files, Kafka redeliveries)
-    become effectively-once downstream."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-
-
-def enrich_stream(events: DataFrame, customer: DataFrame) -> DataFrame:
-    """Stream-static join: enrich the event stream with the customer
-    dimension (user_id → c_custkey). The static side is planned per
-    micro-batch — a broadcast at dim scale — so the stream never
-    shuffles; re-reading the dim each batch also means slowly-changing
-    dims pick up updates without restarting the query. Stateless
-    (no watermark needed): each event joins alone."""
-    dim = customer.select(
-        F.col("c_custkey").alias("user_id"),
-        F.col("c_name").alias("customer_name"),
-        F.col("c_mktsegment").alias("mktsegment"),
-    )
-    return events.join(F.broadcast(dim), "user_id", "left")
-
-
 def attribution_join_stream(
     events: DataFrame, watermark: str = "1 hour"
 ) -> DataFrame:
     """Stream-STREAM interval self-join — the streaming twin of
     ``events_range_attribution``'s inner core: every (purchase, click)
     pair of the same user with the click inside the purchase's
-    trailing hour. Completes the streaming operator matrix (windowed
-    aggs, session windows, stateful clamp, dedup, stream-static
-    enrich, and now stream-stream).
+    trailing hour.
 
     Both sides carry a watermark and the join condition bounds
     click_ts to a finite interval around purchase_ts, so Spark can
@@ -681,24 +566,4 @@ def attribution_join_stream(
         F.col("p_user_id").alias("user_id"),
         "purchase_ts",
         "click_ts",
-    )
-
-
-def cms_sketch_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming twin of ``events_heavy_hitters``'s sketch side:
-    per-1-hour-window count-min counters (window_start, d, w, cnt).
-
-    CMS is LINEAR — the global sketch is the element-wise sum of the
-    per-window sketches — so an always-on pipeline emits bounded
-    watermarked window sketches (state: d*w counters per open window,
-    dropped at window_end + watermark) and any reader folds the
-    windows it cares about into one sketch; the batch-equivalence
-    test pins exactly that fold against the batch query's counters."""
-    from ..workloads.eventflow import cms_cells
-
-    cells = cms_cells(events.withWatermark("ts", watermark), ["ts"])
-    return (
-        cells.groupBy(F.window("ts", "1 hour").alias("win"), "d", "w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(F.col("win.start").alias("window_start"), "d", "w", "cnt")
     )

@@ -63,8 +63,7 @@ def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Tumbling 1-hour window rollup — batch twin of
-# streaming/events.py::tumbling_counts (F.window ≙ time_bucket).
+# Tumbling 1-hour window rollup (F.window ≙ time_bucket).
 # ---------------------------------------------------------------------------
 @query(
     "events_hourly_rollup",
@@ -1022,10 +1021,9 @@ _CMS_J = ", ".join(str(j) for j in range(CMS_D))
 def cms_cells(src: DataFrame, keep: list[str]) -> DataFrame:
     """Fan each row into its CMS_D (d, w) sketch cells, carrying the
     ``keep`` columns through. THE single definition of the cell
-    derivation — the batch query, the streaming twin
-    (streaming/events.py::cms_sketch_stream), and the equivalence
-    test all call this, so the sketch geometry cannot silently
-    diverge between them."""
+    derivation — the sketch build and the heavy-hitter probes both
+    call this, so the sketch geometry cannot silently diverge between
+    them."""
     uid = F.col("user_id")
     return src.select(
         *keep,
@@ -1730,7 +1728,7 @@ def events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (user, present-week)). Building
 # this differential found a real bug in the first-batch timeout
 # scheduling of the shipped clamp (state wiped for any user absent
-# from batch 2) — see running_value_clamp's timeout comment.
+# from batch 2) — see running_net_clamp_micro's timeout comment.
 # ---------------------------------------------------------------------------
 _STREAM_CLAMP_CACHE: dict = {}
 

@@ -346,11 +346,12 @@ def _corpus_ext_bits(spark: SparkSession, sf_dir: str) -> int:
     corpus row count (one count job, cached per (application,
     sf_dir)). 0 on the driver fixtures — see the ladder note at
     ``_ext_bits``."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EXT_BITS_CACHE:
-        n = read_table(spark, sf_dir, "embeddings").count()
-        _EXT_BITS_CACHE[key] = _ext_bits(n)
-    return _EXT_BITS_CACHE[key]
+    from ..plans.materialize import session_cached
+
+    def build():
+        return _ext_bits(read_table(spark, sf_dir, "embeddings").count())
+
+    return session_cached(_EXT_BITS_CACHE, spark, sf_dir, build)
 
 
 def _keyed_sigs(sigs: DataFrame, ext: int) -> DataFrame:

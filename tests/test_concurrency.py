@@ -162,6 +162,27 @@ def test_reset_session_caches_empties_ivf_index(spark, sf_small):
     assert S._ivf_index(spark, sf_small).count() == n
 
 
+def test_reset_session_caches_empties_ext_bits(spark, tmp_path):
+    """The LSH extension-bit count is memoized through
+    ``session_cached`` too, so a reset forgets it."""
+    from flat_file_social_media_database_engine_spark.plans.materialize import (
+        reset_session_caches,
+    )
+    from flat_file_social_media_database_engine_spark.workloads import (
+        similarity as S,
+    )
+
+    spark.createDataFrame(
+        [(i, [float(i), 1.0], 0) for i in range(5)],
+        "vec_id long, embedding array<float>, label int",
+    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+    key = (spark.sparkContext.applicationId, str(tmp_path))
+    assert S._corpus_ext_bits(spark, str(tmp_path)) == 0
+    assert key in S._EXT_BITS_CACHE
+    reset_session_caches()
+    assert key not in S._EXT_BITS_CACHE
+
+
 def test_stream_drain_leaves_parent_conf_alone(spark, sf_small):
     """A streaming drain runs in its own child session: while a
     sessionize drain runs on one thread, a second thread keeps reading

@@ -79,10 +79,6 @@ ORPHANS_ALLOWED = {
     # passes bound the transient shuffle disk the single-pass join
     # exhausts there
     "dedup_prefix_jaccard_bounded",
-    # library operators pinned by their own tests (test_rankselect.py,
-    # test_streaming.py); deletion candidates, ROADMAP item 6(d)
-    "grouped_rank",
-    "cms_sketch_stream",
 }
 
 ROOT = PKG.parent
@@ -286,12 +282,13 @@ def _registered_as_query(node: ast.AST) -> bool:
 
 def orphans(sources: dict[str, str], package: set[str]) -> set[str]:
     """Module-level functions and classes of the ``package`` files that
-    no source references outside their own definition, and that are
-    neither registered with ``@query`` nor re-exported by a package
-    ``__init__.py``. A reference is a load of the name or an attribute
-    of that name, matched by name alone, so a same-named attribute
-    elsewhere also counts: the census can miss an orphan but never
-    flags a used function."""
+    no source references outside their own definition and that are
+    not registered with ``@query``. A reference is a load of the name
+    or an attribute of that name, matched by name alone, so a
+    same-named attribute elsewhere also counts: the census can miss an
+    orphan but never flags a used function. An import is not a
+    reference, so a package ``__init__.py`` re-export alone leaves a
+    function orphaned."""
     defined: dict[str, bool] = {}
     used: set[str] = set()
 
@@ -315,10 +312,6 @@ def orphans(sources: dict[str, str], package: set[str]) -> set[str]:
                     defined[node.name] = defined.get(node.name, False) or (
                         _registered_as_query(node)
                     )
-            if name.endswith("__init__.py"):
-                for node in tree.body:
-                    if isinstance(node, ast.ImportFrom):
-                        used |= {a.asname or a.name for a in node.names}
         visit(tree, None, owned)
     return {n for n, registered in defined.items() if not registered and n not in used}
 
@@ -342,6 +335,7 @@ def test_orphans_detects_every_form():
         "recursive",
         "uncalled",
         "Unused",
+        "exported",
     }
 
 

@@ -121,10 +121,12 @@ def test_decode_parses_pixels_and_counts_frames(spark, media):
 
 
 def test_features_feed_similarity_shape(spark, media):
-    out = M.extract_features(media)
-    assert [f.name for f in out.schema.fields] == ["media_id", "features"]
-    row = out.first()
-    assert len(row["features"]) == M.FEATURE_DIM
+    """Every decoded row carries a FEATURE_DIM float vector — the
+    embedding-ingest shape the similarity tier consumes."""
+    out = M.decode_media(media).select("media_id", "features")
+    assert out.schema["features"].dataType.simpleString() == "array<float>"
+    rows = out.collect()
+    assert rows and all(len(r["features"]) == M.FEATURE_DIM for r in rows)
 
 
 def test_frame_sampling_slices_real_frames(media):

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from flat_file_social_media_database_engine_spark.operators.rankselect import (
     grouped_prefix_sum,
-    grouped_rank,
     rank_select,
 )
 
@@ -34,93 +33,6 @@ def _synthetic(spark, n=5000, groups=4):
         # range partitions only because the composite key includes id
         (F.xxhash64("id") % 8).alias("v"),
         F.col("id").alias("tid"),
-    )
-
-
-def test_grouped_rank_matches_window_global(spark):
-    df = _synthetic(spark)
-    got = grouped_rank(
-        df, [], [F.col("v").asc(), F.col("tid").asc()], rank_col="rn"
-    )
-    w = Window.partitionBy(F.lit(0)).orderBy("v", "tid")
-    want = df.withColumn("rn", F.row_number().over(w).cast("bigint"))
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
-
-
-def test_grouped_rank_matches_window_grouped_with_total(spark):
-    df = _synthetic(spark)
-    got = grouped_rank(
-        df,
-        ["g"],
-        [F.col("v").desc(), F.col("tid").asc()],
-        rank_col="rn",
-        total_col="n",
-    )
-    w = Window.partitionBy("g").orderBy(F.col("v").desc(), "tid")
-    want = df.select(
-        "g",
-        "v",
-        "tid",
-        F.row_number().over(w).cast("bigint").alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("g")).alias("n"),
-    )
-    assert sorted(map(tuple, got.select(*want.columns).collect())) == sorted(
-        map(tuple, want.collect())
-    )
-
-
-@pytest.mark.parametrize("parts", [1, 7, 64])
-def test_grouped_rank_partition_count_invariant(spark, parts):
-    """Ranks cannot depend on where the sampled range boundaries
-    fall — any partition count gives the same answer."""
-    df = _synthetic(spark, n=997, groups=3)
-    base = None
-    got = sorted(
-        map(
-            tuple,
-            grouped_rank(
-                df,
-                ["g"],
-                [F.col("v").asc(), F.col("tid").asc()],
-                num_partitions=parts,
-            ).collect(),
-        )
-    )
-    w = Window.partitionBy("g").orderBy("v", "tid")
-    base = sorted(
-        map(
-            tuple,
-            df.withColumn(
-                "rn", F.row_number().over(w).cast("bigint")
-            ).collect(),
-        )
-    )
-    assert got == base
-
-
-def test_grouped_rank_keeps_null_group(spark):
-    """NULL is a real group under PARTITION BY semantics; the offset
-    join must be null-safe or every NULL-group row silently vanishes
-    (the round-4 null-robustness catch on events_value_percentiles)."""
-    df = spark.range(100).select(
-        F.when(F.col("id") % 3 == 0, None)
-        .otherwise(F.col("id") % 3)
-        .alias("g"),
-        (F.col("id") % 7).alias("v"),
-        F.col("id").alias("tid"),
-    )
-    got = grouped_rank(
-        df, ["g"], [F.col("v").asc(), F.col("tid").asc()], rank_col="rn"
-    )
-    assert got.count() == 100
-    from collections import Counter
-
-    w = Window.partitionBy("g").orderBy("v", "tid")
-    want = df.withColumn("rn", F.row_number().over(w).cast("bigint"))
-    assert Counter(map(tuple, got.select(*want.columns).collect())) == Counter(
-        map(tuple, want.collect())
     )
 
 
@@ -460,13 +372,11 @@ def test_value_percentiles_pin_to_window_formulation(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # Property differential: random tiny frames (NULL groups, heavy ties,
-# varying partition counts) vs a pure-Python ranking model. The fixture
+# varying partition counts) vs a pure-Python rank-lookup model. The fixture
 # differentials above pin the two shipped consumers; this pins the
 # operator CONTRACT itself across the input space — the same strategy
 # that caught the null-group join drop would have caught it pre-ship.
 # ---------------------------------------------------------------------------
-from collections import Counter  # noqa: E402
-
 from hypothesis import HealthCheck, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
@@ -482,44 +392,6 @@ def _mk_df(spark, rows):
         [(g, v, i) for i, (g, v) in enumerate(rows)],
         "g int, v int, tid int",
     )
-
-
-def _model_rank(rows):
-    """(g, v, tid, rank, total) under PARTITION BY g ORDER BY v, tid
-    with NULL a real group (None sorts via the (is-None, value) trick
-    only within model bookkeeping — rank never compares across groups)."""
-    by_g: dict = {}
-    for i, (g, v) in enumerate(rows):
-        by_g.setdefault(g, []).append((v, i))
-    out = []
-    for g, vs in by_g.items():
-        vs.sort()
-        for rn, (v, i) in enumerate(vs, start=1):
-            out.append((g, v, i, rn, len(vs)))
-    return Counter(out)
-
-
-@given(rows=_frame_st, parts=st.sampled_from([1, 2, 7]))
-@settings(
-    max_examples=12,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_grouped_rank_matches_model(spark, rows, parts):
-    df = _mk_df(spark, rows)
-    got = grouped_rank(
-        df,
-        ["g"],
-        [F.col("v").asc(), F.col("tid").asc()],
-        rank_col="rn",
-        total_col="n",
-        num_partitions=parts,
-    )
-    have = Counter(
-        (r.g, r.v, r.tid, r.rn, r.n)
-        for r in got.select("g", "v", "tid", "rn", "n").collect()
-    )
-    assert have == _model_rank(rows)
 
 
 @given(rows=_frame_st, parts=st.sampled_from([1, 3]))

@@ -8,16 +8,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flat_file_social_media_database_engine_spark.sources.catalog import (
-    load_fixture_tables,
-)
+from flat_file_social_media_database_engine_spark.sources.catalog import read_table
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_views_register_and_sql_matches_dataframe(spark):
-    dfs = load_fixture_tables(spark, SF, register_views=True)
-    assert {"orders", "lineitem", "customer"} <= set(dfs)
+    orders = read_table(spark, SF, "orders")
+    orders.createOrReplaceTempView("orders")
 
     sql = spark.sql(
         """
@@ -28,8 +26,7 @@ def test_views_register_and_sql_matches_dataframe(spark):
         """
     )
     df = (
-        dfs["orders"]
-        .filter(F.col("o_totalprice") > 1000)
+        orders.filter(F.col("o_totalprice") > 1000)
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -37,7 +34,8 @@ def test_views_register_and_sql_matches_dataframe(spark):
 
 
 def test_sql_join_semi_equivalence(spark):
-    load_fixture_tables(spark, SF, register_views=True)
+    for name in ("lineitem", "orders"):
+        read_table(spark, SF, name).createOrReplaceTempView(name)
     semi = spark.sql(
         """
         SELECT count(*) AS n FROM lineitem l
@@ -56,7 +54,7 @@ def test_sql_join_semi_equivalence(spark):
 
 def test_events_view_timestamp_semantics(spark):
     """The nanos→micros conversion must hold through the view path."""
-    load_fixture_tables(spark, SF, register_views=True)
+    read_table(spark, SF, "events").createOrReplaceTempView("events")
     row = spark.sql(
         "SELECT min(ts) AS lo, max(ts) AS hi, count(*) AS n FROM events"
     ).collect()[0]

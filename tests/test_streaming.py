@@ -1,6 +1,8 @@
 """Streaming-vs-batch equivalence on sf0.001: the Structured
 Streaming twins must produce the same results as the batch operators
-they mirror (complete-mode memory sink, AvailableNow trigger).
+they mirror (complete-mode memory sink, AvailableNow trigger), and
+the stateful clamp (``running_net_clamp_micro``) must follow the
+per-batch M1 clamp model exactly, in integer micro-units.
 """
 
 from __future__ import annotations
@@ -29,16 +31,6 @@ def _run_stream(spark, df, name: str):
     return spark.sql(f"SELECT * FROM {name}")
 
 
-def test_tumbling_counts_matches_batch_rollup(spark, tmp_path):
-    stream = SE.read_events_stream(spark, SF, max_files_per_trigger=1)
-    got = _run_stream(spark, SE.tumbling_counts(stream), "t_tumbling")
-    want = BE.events_hourly_rollup(spark, SF)
-    g = {tuple(r) for r in got.collect()}
-    w = {tuple(r) for r in want.collect()}
-    assert g == w
-    assert len(g) > 0
-
-
 def test_sessionize_matches_batch_sessions(spark):
     stream = SE.read_events_stream(spark, SF)
     got = _run_stream(spark, SE.sessionize(stream), "t_sessions")
@@ -51,27 +43,14 @@ def test_sessionize_matches_batch_sessions(spark):
     assert len(g) > 0
 
 
-def test_json_extract_rollup_totals_match_batch(spark):
-    """The streaming form windows by hour; summed across windows it
-    must reproduce the batch global rollup."""
-    from pyspark.sql import functions as F
-
-    stream = SE.read_events_stream(spark, SF)
-    got = (
-        _run_stream(spark, SE.json_extract_rollup(stream), "t_json")
-        .groupBy("event_type")
-        .agg(F.sum("sum_k").alias("sum_k"), F.sum("n").alias("n"))
-    )
-    want = BE.events_json_extract(spark, SF)
-    g = {tuple(r) for r in got.collect()}
-    w = {tuple(r) for r in want.collect()}
-    assert g == w
-
-
 def test_multi_batch_incremental_equals_batch(spark, tmp_path):
     """Split events into 3 files and stream them one file per
-    trigger: 3 micro-batches of incremental state updates must land
-    on the same final answer as one batch pass."""
+    trigger: 3 micro-batches of incremental session-window state
+    updates must land on the same sessions as one batch pass. The %3
+    split is not time-ordered, so a session's events arrive in
+    several batches and must merge in state; the watermark is set
+    huge to keep late-row filtering out of the picture
+    (test_watermark_drops_too_late_events covers it)."""
     from pyspark.sql import functions as F
 
     import glob
@@ -95,15 +74,20 @@ def test_multi_batch_incremental_equals_batch(spark, tmp_path):
         shutil.copy(part, str(d / "events.parquet" / f"batch_{i}.parquet"))
     # read the staged directory as a stream, one file per trigger
     stream = SE.read_events_stream(spark, str(d), max_files_per_trigger=1)
-    got = _run_stream(spark, SE.tumbling_counts(stream), "t_incremental")
-    want = BE.events_hourly_rollup(spark, SF)
+    got = _run_stream(
+        spark, SE.sessionize(stream, watermark="3650 days"), "t_incremental"
+    )
+    want = BE.events_sessionize(spark, SF).select(
+        "user_id", "session_start", "session_end", "n_events"
+    )
     assert {tuple(r) for r in got.collect()} == {tuple(r) for r in want.collect()}
 
 
 def test_watermark_drops_too_late_events(spark, tmp_path):
     """Append-mode + watermark: an event arriving after the watermark
-    has passed its window's close must not reopen the window. File 1
-    advances event time far ahead; file 2 carries the straggler."""
+    has passed its session's close must neither reopen that session
+    nor start a new one. File 1 advances event time far ahead; file 2
+    carries the straggler."""
     import time as _t
 
     from pyspark.sql import functions as F
@@ -132,7 +116,7 @@ def test_watermark_drops_too_late_events(spark, tmp_path):
 
     write(rows_on_time, "f0")
     stream = SE.read_events_stream(spark, str(d.parent), max_files_per_trigger=1)
-    agg = SE.tumbling_counts(stream, watermark="1 hour")
+    agg = SE.sessionize(stream, watermark="1 hour")
     q = (
         agg.writeStream.format("memory")
         .queryName("t_late")
@@ -148,19 +132,27 @@ def test_watermark_drops_too_late_events(spark, tmp_path):
             _t.sleep(0.5)
         write(rows_late, "f1")  # straggler arrives
         for _ in range(60):
-            p = q.lastProgress
-            if p and p["batchId"] >= 3:
+            # all three rows read: the straggler's batch has committed
+            if sum(p["numInputRows"] for p in q.recentProgress) >= 3:
                 break
             _t.sleep(0.5)
     finally:
         q.stop()
     out = {
-        (r["window_start"].isoformat(), r["n_events"])
+        (r["session_start"].isoformat(), r["n_events"])
         for r in spark.sql("SELECT * FROM t_late").collect()
     }
-    # the 00:00 window closed with ONE event; the late one was dropped
-    assert ("2024-01-01T00:00:00", 1) in out
-    assert ("2024-01-01T00:00:00", 2) not in out
+    # the 00:10 session closed with ONE event; the late one was dropped
+    # (kept, it would have emitted its own closed 00:20 session); the
+    # 06:00 session is still open
+    assert out == {("2024-01-01T00:10:00", 1)}
+
+
+def _micro(col: str):
+    """The clamp's integer micro-unit of a value column."""
+    from pyspark.sql import functions as F
+
+    return F.floor(F.col(col) * 1e6)
 
 
 def _run_stream_update(spark, df, name: str):
@@ -180,32 +172,28 @@ def _run_stream_update(spark, df, name: str):
 
 def test_running_clamp_single_batch_matches_m1_model(spark):
     """One micro-batch: the stateful counter must equal the batch
-    M1-clamp expression greatest(0, sum(value)) per user."""
+    M1-clamp expression greatest(0, sum(value)) per user, in integer
+    micro-units, exactly."""
     from pyspark.sql import functions as F
 
     stream = SE.read_events_stream(spark, SF, max_files_per_trigger=10_000)
-    got = _run_stream_update(spark, SE.running_value_clamp(stream), "t_clamp1")
+    got = _run_stream_update(spark, SE.running_net_clamp_micro(stream), "t_clamp1")
     want = (
         BE.read_table(spark, SF, "events")
         .groupBy("user_id")
         .agg(
-            F.greatest(F.lit(0.0), F.sum("value")).alias("cum_value"),
+            F.greatest(F.lit(0), F.sum(_micro("value"))).alias("cum_micro"),
             F.count(F.lit(1)).alias("n_events"),
         )
     )
-    g = {r["user_id"]: (r["cum_value"], r["n_events"]) for r in got.collect()}
-    w = {r["user_id"]: (r["cum_value"], r["n_events"]) for r in want.collect()}
-    assert set(g) == set(w) and len(g) > 0
-    for uid, (cum, n) in w.items():
-        # pandas and Spark sum in different orders — value is approx,
-        # the count and the clamp semantics are exact
-        assert g[uid][1] == n
-        assert g[uid][0] == pytest.approx(cum, rel=1e-9, abs=1e-9)
+    g = {r["user_id"]: (r["cum_micro"], r["n_events"]) for r in got.collect()}
+    w = {r["user_id"]: (r["cum_micro"], r["n_events"]) for r in want.collect()}
+    assert g == w and len(g) > 0
 
 
 def test_running_clamp_incremental_trajectory(spark, tmp_path):
     """Three micro-batches with mixed-sign values: each user's emitted
-    (cum_value, n_events) trajectory must be reproducible by the
+    (cum_micro, n_events) trajectory must be reproducible by the
     per-batch net-sum clamp model under SOME ordering of their batches
     (the %3 split is not time-ordered, so the watermark is set huge to
     keep late-row filtering out of the picture — the single-batch and
@@ -223,7 +211,17 @@ def test_running_clamp_incremental_trajectory(spark, tmp_path):
     splits = []
     for i in range(3):
         part_df = staged.filter(F.col("event_id") % 3 == i)
-        splits.append(part_df.select("user_id", "value").toPandas())
+        splits.append(
+            {
+                r["user_id"]: (r["net"], r["n"])
+                for r in part_df.groupBy("user_id")
+                .agg(
+                    F.coalesce(F.sum(_micro("value")), F.lit(0)).alias("net"),
+                    F.count(F.lit(1)).alias("n"),
+                )
+                .collect()
+            }
+        )
         staging = tmp_path / f"clamp_stage_{i}"
         (
             part_df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
@@ -237,7 +235,7 @@ def test_running_clamp_incremental_trajectory(spark, tmp_path):
     stream = SE.read_events_stream(spark, str(tmp_path / "clamp_zone"), 1)
     log = _run_stream_update(
         spark,
-        SE.running_value_clamp(stream, watermark="3650 days"),
+        SE.running_net_clamp_micro(stream, watermark="3650 days"),
         "t_clamp3",
     )
     rows = log.collect()
@@ -246,52 +244,35 @@ def test_running_clamp_incremental_trajectory(spark, tmp_path):
     by_user: dict[int, list] = {}
     for r in rows:
         by_user.setdefault(r["user_id"], []).append(r)
-    batch_net = [
-        {int(u): (float(g["value"].sum()), len(g)) for u, g in s.groupby("user_id")}
-        for s in splits
-    ]
     clamp_fired = False
     for uid, emitted in by_user.items():
         emitted.sort(key=lambda r: r["n_events"])
-        nets = [bn[uid] for bn in batch_net if uid in bn]
+        nets = [bn[uid] for bn in splits if uid in bn]
         assert len(emitted) == len(nets), f"user {uid}: missed emissions"
         assert _replayable(emitted, nets), f"user {uid}: no order replays the log"
-        clamp_fired = clamp_fired or any(r["cum_value"] == 0.0 for r in emitted)
+        clamp_fired = clamp_fired or any(r["cum_micro"] == 0 for r in emitted)
     assert clamp_fired  # the recentering must actually exercise the clamp
 
 
-def _replayable(emitted, nets, cum=0.0, seen=0):
+def _replayable(emitted, nets, cum=0, seen=0):
     """DFS: does some ordering of the (net, cnt) batches reproduce the
     emission trajectory under the per-batch clamp model?"""
     if not nets:
         return not emitted
     head = emitted[0]
     for j, (net, cnt) in enumerate(nets):
-        c2 = max(0.0, cum + net)
-        if seen + cnt == head["n_events"] and head["cum_value"] == pytest.approx(
-            c2, rel=1e-9, abs=1e-9
-        ):
+        c2 = max(0, cum + net)
+        if seen + cnt == head["n_events"] and head["cum_micro"] == c2:
             if _replayable(emitted[1:], nets[:j] + nets[j + 1 :], c2, seen + cnt):
                 return True
     return False
 
 
-@pytest.mark.parametrize(
-    "op,val_col,expect",
-    [
-        ("float", "cum_value", [(5.0, 1), (10.0, 1)]),
-        ("micro", "cum_micro", [(5_000_000, 1), (10_000_000, 1)]),
-    ],
-    ids=["float", "micro"],
-)
-def test_running_clamp_state_expires_after_retention(
-    spark, tmp_path, op, val_col, expect
-):
+@pytest.mark.parametrize("op", ["micro"])
+def test_running_clamp_state_expires_after_retention(spark, tmp_path, op):
     """Event-time timeout: a user idle past THEIR event-time frontier
     + retention is expired; their next event restarts the counter from
-    zero. Parametrized over BOTH stateful clamps — the float
-    production operator and its integer-micro differential twin carry
-    the same timeout-scheduling lines, so both stay pinned.
+    zero.
 
     Batch anatomy (watermark delay 1h, retention 1h — user 7's
     timeout is therefore due at Jan 1 02:00 event time):
@@ -334,88 +315,18 @@ def test_running_clamp_state_expires_after_retention(
         shutil.copy(part, str(d / f"batch_{i}.parquet"))
 
     stream = SE.read_events_stream(spark, str(tmp_path / "ttl_zone"), 1)
-    make = SE.running_value_clamp if op == "float" else SE.running_net_clamp_micro
     log = _run_stream_update(
         spark,
-        make(stream, watermark="1 hour", retention_ms=3600_000),
+        SE.running_net_clamp_micro(
+            stream, watermark="1 hour", retention_ms=3600_000
+        ),
         f"t_clamp_ttl_{op}",
     )
     u7 = sorted(
-        ((r[val_col], r["n_events"]) for r in log.collect() if r["user_id"] == 7),
+        ((r["cum_micro"], r["n_events"]) for r in log.collect() if r["user_id"] == 7),
     )
     # first emission: cum 10, n 1; post-expiry emission restarts: cum 5, n 1
-    assert u7 == expect
-
-
-def test_dedupe_stream_drops_redelivered_events(spark, tmp_path):
-    """File 2 redelivers half of file 1's events (same event_ids,
-    within the watermark): each event_id must come out exactly once,
-    and the union of both files' distinct ids must survive."""
-    import glob
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    events = BE.read_table(spark, SF, "events")
-    d = tmp_path / "dup_zone" / "events.parquet"
-    d.mkdir(parents=True)
-    first = events.filter(F.col("event_id") % 2 == 0)
-    redelivered = events.filter(F.col("event_id") % 4 == 0)  # half of file 1
-    fresh = events.filter(F.col("event_id") % 2 == 1)
-    for i, part_df in enumerate((first, redelivered.union(fresh))):
-        staging = tmp_path / f"dup_stage_{i}"
-        (
-            part_df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(str(staging))
-        )
-        part = glob.glob(str(staging / "part-*.parquet"))[0]
-        shutil.copy(part, str(d / f"batch_{i}.parquet"))
-
-    stream = SE.read_events_stream(spark, str(tmp_path / "dup_zone"), 1)
-    q = (
-        SE.dedupe_stream(stream, watermark="3650 days")
-        .writeStream.format("memory")
-        .queryName("t_dedupe")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(300)
-    finally:
-        q.stop()
-    got = [r["event_id"] for r in spark.sql("SELECT event_id FROM t_dedupe").collect()]
-    assert len(got) == len(set(got)), "an event_id was emitted twice"
-    assert set(got) == {r["event_id"] for r in events.collect()}
-
-
-def test_enrich_stream_matches_batch_join(spark):
-    """Stream-static enrichment ≡ the batch left join, row for row."""
-    customer = BE.read_table(spark, SF, "customer")
-    stream = SE.read_events_stream(spark, SF)
-    enriched = SE.enrich_stream(stream, customer)
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName("t_enrich")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(300)
-    finally:
-        q.stop()
-    got = {tuple(r) for r in spark.sql("SELECT * FROM t_enrich").collect()}
-    want = {
-        tuple(r)
-        for r in SE.enrich_stream(
-            BE.read_table(spark, SF, "events"), customer
-        ).collect()
-    }
-    assert got == want
-    assert len(got) == BE.read_table(spark, SF, "events").count()
+    assert u7 == [(5_000_000, 1), (10_000_000, 1)]
 
 
 def test_attribution_join_stream_matches_batch_pairs(spark):
@@ -558,37 +469,6 @@ def test_exactly_once_ingest_into_snapshot_store(spark, tmp_path):
     # Markers survive unrelated commits (meta carries forward).
     store.compact("events")
     assert store.meta()["stream::t::events"] == last + 1
-
-
-def test_cms_sketch_stream_folds_to_batch_sketch(spark):
-    """CMS linearity: summing the streaming per-window counters over
-    all windows must equal the batch global sketch the heavy-hitters
-    query probes — so streaming estimates are the batch estimates."""
-    from pyspark.sql import functions as F
-
-    from flat_file_social_media_database_engine_spark.workloads.eventflow import (
-        cms_cells,
-    )
-    from flat_file_social_media_database_engine_spark.sources.catalog import (
-        read_table,
-    )
-
-    stream = SE.read_events_stream(spark, SF)
-    folded = (
-        _run_stream(spark, SE.cms_sketch_stream(stream), "t_cms")
-        .groupBy("d", "w")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    ev = read_table(spark, SF, "events")
-    batch = (
-        cms_cells(ev, [])
-        .groupBy("d", "w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    g = {tuple(r) for r in folded.collect()}
-    b = {tuple(r) for r in batch.collect()}
-    assert g == b
-    assert len(g) > 0
 
 
 def test_stream_ingest_feeds_maintained_rollup(spark, tmp_path):
@@ -751,7 +631,7 @@ def test_running_clamp_state_survives_skipped_batch(spark, tmp_path):
     and fired as soon as the watermark advanced to real event time,
     wiping state for every user absent from the second batch. With a
     10-day retention nothing should expire here; under the bug user
-    7's counter restarts and the final emission is (5.0, 1)."""
+    7's counter restarts and the final emission is (5_000_000, 1)."""
     import glob
     import shutil
 
@@ -783,15 +663,15 @@ def test_running_clamp_state_survives_skipped_batch(spark, tmp_path):
     stream = SE.read_events_stream(spark, str(tmp_path / "skip_zone"), 1)
     log = _run_stream_update(
         spark,
-        SE.running_value_clamp(
+        SE.running_net_clamp_micro(
             stream, watermark="1 hour", retention_ms=10 * 24 * 3600_000
         ),
         "t_clamp_skip",
     )
     u7 = sorted(
-        ((r["cum_value"], r["n_events"]) for r in log.collect() if r["user_id"] == 7),
+        ((r["cum_micro"], r["n_events"]) for r in log.collect() if r["user_id"] == 7),
     )
-    assert u7 == [(10.0, 1), (15.0, 2)]
+    assert u7 == [(10_000_000, 1), (15_000_000, 2)]
 
 
 def test_micro_clamp_null_value_contributes_zero(spark, tmp_path):
