@@ -1,5 +1,5 @@
-"""Distributed exact rank: global/grouped ``row_number`` without an
-unpartitioned window.
+"""Distributed exact rank: k-th-smallest lookups and running sums
+without an unpartitioned window.
 
 Spark's ``Window.orderBy(...)`` (no partitionBy) funnels EVERY row
 through one reducer — fine on a reduced fixture table, a

@@ -34,8 +34,6 @@ from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
-from ..session import default_parallelism
-
 
 _DEFAULT_INDEX_ROOT: str | None = None
 
@@ -583,13 +581,15 @@ class SnapshotStore:
 
     def _write_all(self, writes: list[tuple[DataFrameWriter, str]]) -> None:
         """Run a commit's table writes concurrently, one pool thread per
-        table up to ``default_parallelism()``: at OLTP sizes each write
-        is a few short Spark jobs, so the commit is bound by job latency,
-        not by cores. Every task inherits the caller's local properties
+        table up to the session's ``defaultParallelism``: at OLTP sizes
+        each write is a few short Spark jobs, so the commit is bound by
+        job latency, not by cores. Every task inherits the caller's local properties
         (job group, scheduler pool) through ``inheritable_thread_target``,
         wrapped per task on the caller's thread. Returns after every
         write has finished; a failed write re-raises."""
-        n_threads = max(1, min(len(writes), default_parallelism()))
+        n_threads = max(
+            1, min(len(writes), self.spark.sparkContext.defaultParallelism)
+        )
         with ThreadPoolExecutor(n_threads) as pool:
             futures = [
                 pool.submit(inheritable_thread_target(self.spark)(writer.parquet), path)

@@ -414,10 +414,11 @@ def stage_events_daily(
 # 2.45/1.72/2.02/2.77 s and 7-micro-batch production shape
 # 4.13/4.30/5.49/8.43 s across 4/8/16/32 partitions, identical rows at
 # every point — 8 is the single-shape optimum and within noise of the
-# multi-shape one. Batch plans are untouched: with AQE's
-# ``initialPartitionNum`` they never read ``shuffle.partitions``. At
-# 100 TB this grows with stream volume exactly like batch reducer
-# counts — the deployment sets it per query.
+# multi-shape one. It is set on the drains' child session only
+# (``_drain_session``), so batch plans keep the parent session's
+# ``shuffle.partitions``. At 100 TB this grows with stream volume
+# exactly like batch reducer counts — the deployment sets it per
+# query.
 STREAM_STATE_PARTITIONS = 8
 
 # The drain session of the live SparkContext, as (applicationId,

@@ -423,8 +423,10 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix is its whole set — the asymmetry of containment.) The
     all-pairs oracle proves completeness differentially: a dropped
     true pair is a hash mismatch. Survivors verify exactly against
-    the cached shingle ARRAYS (same tail as the Jaccard prefix join);
-    the threshold compare stays the double form the oracle uses.
+    the cached shingle ARRAYS in a stage ``defaultParallelism`` tasks
+    wide (``_pair_overlaps``, the same tail as the Jaccard prefix
+    join); the threshold compare stays the double form the oracle
+    uses.
     Replaces the df²-per-key inverted-index self-join: per key the
     join cost is prefix_count(h) × df(h), and hot (stopword) shingles
     land in almost no prefix — measured 17.5 → ~4 s at sf10."""
@@ -450,26 +452,9 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("doc_p", "doc_f").alias("doc_id_a"),
             F.greatest("doc_p", "doc_f").alias("doc_id_b"),
         )
-        .distinct()
-    )
-    sha = sh.select(
-        F.col("doc_id").alias("doc_id_a"), F.col("harr").alias("sh_a")
-    )
-    shb = sh.select(
-        F.col("doc_id").alias("doc_id_b"), F.col("harr").alias("sh_b")
     )
     return (
-        cand.join(sha, "doc_id_a")
-        .join(shb, "doc_id_b")
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            .cast("bigint")
-            .alias("common"),
-            F.size("sh_a").cast("bigint").alias("n_a"),
-            F.size("sh_b").cast("bigint").alias("n_b"),
-        )
+        _pair_overlaps(sh, cand)
         .withColumn(
             "containment", F.col("common") / F.least("n_a", "n_b")
         )
@@ -595,9 +580,10 @@ def dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix rows on shingle, guarded by the size filter
     (t·max(n_a,n_b) <= min — integer-exact as 7·max <= 10·min);
     (4) verify the small distinct candidate set against the cached
-    shingle ARRAYS with ``array_intersect`` — the same no-second-
-    index-pass verification as ``dedup_minhash_lsh``. All arithmetic
-    that gates rows is integer (prefix length n - ceil(7n/10) + 1 is
+    shingle ARRAYS with ``array_intersect`` in a stage
+    ``defaultParallelism`` tasks wide (``_pair_overlaps``) — the same
+    no-second-index-pass verification as ``dedup_minhash_lsh``. All
+    arithmetic that gates rows is integer (prefix length n - ceil(7n/10) + 1 is
     ``n - (7n+9) div 10 + 1``; the threshold test is
     ``10·common >= 7·(n_a+n_b-common)``), so both engines agree
     bit-for-bit; the reported ``jaccard`` double is a single divide
@@ -626,16 +612,28 @@ def dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .select("doc_id_a", "doc_id_b")
-        .distinct()
     )
     return _prefix_verify(sh, cand)
 
 
-def _prefix_verify(sh: DataFrame, cand: DataFrame) -> DataFrame:
-    """Exact-Jaccard verification tail of the prefix-filter join
-    (shared by the single-pass query and the bounded-pass mode):
-    candidate pairs joined against the cached shingle ARRAYS, the
-    integer-exact threshold test, and the single reported divide."""
+def _pair_overlaps(sh: DataFrame, cand: DataFrame) -> DataFrame:
+    """Exact overlap of each distinct candidate pair: ``cand``
+    (doc_id_a, doc_id_b), duplicates allowed, joined against the
+    cached shingle ARRAYS, with ``common`` = |A∩B| from
+    ``array_intersect`` and the two set sizes.
+
+    A candidate row is ~16 bytes but costs an array_intersect over
+    two shingle sets, so AQE's byte-grained coalescing (1 MB floor)
+    folds the distinct's shuffle into one task at any core count. The
+    distinct therefore runs over an explicit hash
+    ``repartition(defaultParallelism, pair)``, which AQE never
+    coalesces (a repartition to a number) and which already satisfies
+    the distinct, so it replaces that shuffle rather than adding one:
+    the verify stage is ``defaultParallelism`` tasks wide while the
+    shingle arrays are broadcast. Where they are too big to
+    broadcast, the shuffled join's own exchange carries real bytes
+    and coalesces to cluster width by itself."""
+    n = sh.sparkSession.sparkContext.defaultParallelism
     sha = sh.select(
         F.col("doc_id").alias("doc_id_a"), F.col("harr").alias("sh_a")
     )
@@ -643,7 +641,9 @@ def _prefix_verify(sh: DataFrame, cand: DataFrame) -> DataFrame:
         F.col("doc_id").alias("doc_id_b"), F.col("harr").alias("sh_b")
     )
     return (
-        cand.join(sha, "doc_id_a")
+        cand.repartition(n, "doc_id_a", "doc_id_b")
+        .distinct()
+        .join(sha, "doc_id_a")
         .join(shb, "doc_id_b")
         .select(
             "doc_id_a",
@@ -652,6 +652,16 @@ def _prefix_verify(sh: DataFrame, cand: DataFrame) -> DataFrame:
             F.size("sh_a").cast("bigint").alias("n_a"),
             F.size("sh_b").cast("bigint").alias("n_b"),
         )
+    )
+
+
+def _prefix_verify(sh: DataFrame, cand: DataFrame) -> DataFrame:
+    """Exact-Jaccard verification tail of the prefix-filter join
+    (shared by the single-pass query and the bounded-pass mode): the
+    distinct candidates' exact overlaps (``_pair_overlaps``), the
+    integer-exact threshold test, and the single reported divide."""
+    return (
+        _pair_overlaps(sh, cand)
         .filter(
             PREFIX_TAU_DEN * F.col("common")
             >= PREFIX_TAU_NUM * (F.col("n_a") + F.col("n_b") - F.col("common"))
@@ -727,8 +737,7 @@ def dedup_prefix_jaccard_bounded(
         del pa, pb, sl
         gc.collect()
         spark.sparkContext._jvm.System.gc()
-    cand = spark.read.parquet(out).distinct()
-    return _prefix_verify(sh, cand)
+    return _prefix_verify(sh, spark.read.parquet(out))
 
 
 # ---------------------------------------------------------------------------

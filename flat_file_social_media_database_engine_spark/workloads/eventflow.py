@@ -688,8 +688,7 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# At-least-once redelivery reconciliation — the batch twin of
-# streaming/events.py::deduped_stream (dropDuplicatesWithinWatermark).
+# At-least-once redelivery reconciliation (keep-earliest per event_id).
 # The fixture's event_ids are unique, so redeliveries are synthesized
 # deterministically (the p6 dirty-data pattern): every 10th event is
 # re-sent 5s late, and every 20th instead arrives 3s EARLY

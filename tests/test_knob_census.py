@@ -1,11 +1,11 @@
 """Census of the package's settable surface and of its dead code: the
-environment variables it reads, the runtime SQL confs it sets, the
-defaulted parameters of its storage-facing public API, and the
-module-level functions and classes nothing calls. Each env knob,
-runtime tuning key or option is a place where the benchmarked engine
-can differ from the one the correctness gate verifies, and an
-uncalled helper is code nothing verifies, so adding one must update
-this test on purpose."""
+environment variables it reads, the configs its session builder sets,
+the runtime SQL confs it sets, the defaulted parameters of its
+storage-facing public API, and the module-level functions and classes
+nothing calls. Each env knob, session config, runtime tuning key or
+option is a place where the benchmarked engine can differ from the one
+the correctness gate verifies, and an uncalled helper is code nothing
+verifies, so adding one must update this test on purpose."""
 
 from __future__ import annotations
 
@@ -21,7 +21,21 @@ EXPECTED = {
     # deployment settings (session.py)
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_DRIVER_MEM",
-    "SPARK_GRAFT_MAX_RESULT",
+}
+
+# Keys of the ``.config(...)`` calls in session.py: beyond Spark's
+# defaults, the engine's own session sets only these, so it differs
+# from a caller's plain session in nothing else.
+EXPECTED_SESSION_CONFIGS = {
+    # deployment settings
+    "spark.driver.memory",
+    "spark.ui.enabled",
+    # the reducer count AQE coalesces from: one per core
+    "spark.sql.shuffle.partitions",
+    "spark.sql.execution.arrow.pyspark.enabled",
+    # correctness settings read_table also sets at runtime
+    "spark.sql.session.timeZone",
+    "spark.sql.legacy.parquet.nanosAsLong",
 }
 
 EXPECTED_CONF_SETS = {
@@ -158,6 +172,40 @@ def conf_sets(src: str) -> set[str]:
         ):
             names.add("<other .conf use>")
     return names
+
+
+def session_configs(src: str) -> set[str]:
+    """Keys passed to ``<x>.config(...)`` calls. A non-literal key, or
+    a call with no positional key (``.config(conf=...)``, a
+    ``.config(map=...)``), shows up as a marker name, so the census
+    cannot be dodged."""
+    names: set[str] = set()
+    for node in ast.walk(ast.parse(src)):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "config"
+        ):
+            key = node.args[0] if node.args else None
+            is_literal = isinstance(key, ast.Constant) and isinstance(key.value, str)
+            names.add(key.value if is_literal else "<non-literal key>")
+    return names
+
+
+def test_session_configs_detects_every_form():
+    src = (
+        "b = SparkSession.builder.appName('x').master('local[2]')\n"
+        "b = b.config('a.b', '1').config('c.d', str(2))\n"
+        "b = b.config(key, '3')\n"
+        "b = b.config(map={'e.f': '4'})\n"
+    )
+    assert session_configs(src) == {"a.b", "c.d", "<non-literal key>"}
+
+
+def test_session_sets_exactly_the_known_configs():
+    assert session_configs((PKG / "session.py").read_text()) == (
+        EXPECTED_SESSION_CONFIGS
+    )
 
 
 def test_env_reads_detects_every_form():

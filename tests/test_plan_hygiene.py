@@ -414,3 +414,38 @@ def test_relayout_normalizes_packed_scans(spark, tmp_path):
     # (plan strings elide long paths — assert on what must NOT appear:
     # materialize_parquet dirs are named sparkgraft_relayout_*)
     assert "sparkgraft_relayout" not in tiny_plan, tiny_plan
+
+
+@pytest.mark.parametrize(
+    "name", ["dedup_containment_pairs", "dedup_prefix_jaccard"]
+)
+def test_verify_tail_runs_at_default_parallelism(spark, sf_medium, name):
+    """The exact-verify tails of the prefix-filter joins run one
+    array_intersect per candidate pair over ~16-byte rows, so AQE's
+    byte-grained coalescing would fold the verify stage into one task
+    at any core count. ``_pair_overlaps`` pins its width with a hash
+    repartition to ``defaultParallelism``: the executed plan must
+    carry that exchange over the candidate pairs, and the final
+    (verify) stage must have run that many tasks."""
+    sc = spark.sparkContext
+    n = sc.defaultParallelism
+    assert n > 1, "one core cannot tell a pinned stage from a coalesced one"
+    group = f"verify-tail-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        df = entrymod.queries()[name](spark, sf_medium)
+        assert df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan
+    assert re.search(
+        rf"Exchange hashpartitioning\(doc_id_a#\d+L, doc_id_b#\d+L, {n}\), "
+        r"REPARTITION_BY_NUM",
+        plan,
+    ), plan
+    tracker = sc.statusTracker()
+    last_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+    verify = tracker.getStageInfo(max(last_job.stageIds))
+    assert verify.numTasks == n, (verify.numTasks, n)
