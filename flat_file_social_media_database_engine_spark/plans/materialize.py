@@ -55,12 +55,24 @@ _SESSION_CACHE_LOCK = threading.RLock()
 # its full lineage per action while claiming to be a cached pass.
 _REGISTERED_CACHES: list[dict] = []
 
-# Every temp dir materialize_parquet ever wrote, so reset_session_caches
-# can reclaim the disk: without this, each flagged-query retest in
-# tools/scaling.py rebuilt the corpus-sized span-gram pass into a FRESH
-# mkdtemp and the retest loop accumulated tens of GB (round-8 advisor —
-# the same disk-exhaustion failure mode the sf100 fixes target).
+# Every scratch_dir ever made, so reset_session_caches can reclaim the
+# disk: without this, each flagged-query retest in tools/scaling.py
+# rebuilt the corpus-sized span-gram pass into a FRESH temp dir and the
+# retest loop accumulated tens of GB (round-8 advisor — the same
+# disk-exhaustion failure mode the sf100 fixes target).
 _PARQUET_DIRS: list[str] = []
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh temp dir for files a returned DataFrame reads (a
+    materialized pass, a stream's sink and checkpoint, a scratch
+    store), deleted by ``reset_session_caches``."""
+    import tempfile
+
+    out = tempfile.mkdtemp(prefix=f"sparkgraft_{prefix}_")
+    with _SESSION_CACHE_LOCK:
+        _PARQUET_DIRS.append(out)
+    return out
 
 
 def _unpersist_value(got) -> None:
@@ -81,12 +93,12 @@ def _unpersist_value(got) -> None:
 def reset_session_caches() -> int:
     """Empty every session_cached dict (unpersisting what they held,
     including DataFrames nested in tuple values) and delete every
-    materialize_parquet temp dir, so the next consumer re-runs
+    ``scratch_dir``, so the next consumer re-runs
     build() from scratch — the REQUIRED companion to
     ``spark.catalog.clearCache()`` in measurement harnesses (round-7
     advisor: clearCache alone turns every memoized shared pass into
     an uncached full-lineage replay on each downstream action).
-    Frames read back from a deleted parquet pass become invalid —
+    Frames read back from a deleted scratch dir become invalid —
     callers must re-fetch through the cache after a reset, which is
     exactly what the retest harness does. Returns the number of
     entries dropped."""
@@ -120,11 +132,7 @@ def materialize_parquet(spark, df: DataFrame, prefix: str) -> DataFrame:
     JVM's temp dir for the application lifetime — same lifetime as a
     session cache, with the same immutable-input contract as
     ``session_cached``."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix=f"sparkgraft_{prefix}_")
-    with _SESSION_CACHE_LOCK:
-        _PARQUET_DIRS.append(out)
+    out = scratch_dir(prefix)
     # zstd over the default snappy (guide §6): the span-gram pass was
     # the sf100 I/O boundary — every consumer re-reads it — and zstd's
     # better ratio on the delta/dictionary-encoded gram columns cuts

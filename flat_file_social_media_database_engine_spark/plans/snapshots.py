@@ -23,6 +23,7 @@ the single-writer case the reference supports).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -58,6 +59,17 @@ def index_root(spark, prefix: str) -> str:
         _DEFAULT_INDEX_ROOT = tempfile.mkdtemp(prefix=f"{prefix}_")
         atexit.register(shutil.rmtree, _DEFAULT_INDEX_ROOT, True)
     return _DEFAULT_INDEX_ROOT
+
+
+def index_dir(spark, stem: str, sf_dir: str) -> str:
+    """The store directory of the ``stem`` index over the corpus at
+    ``sf_dir``: ``<index_root>/<stem>_<digest>``, the digest being
+    sha256(application id, sf_dir) cut to 16 hex digits, so a rebuild
+    in the same application reuses its own store instead of leaking a
+    new one."""
+    key = f"{spark.sparkContext.applicationId}\x00{sf_dir}"
+    digest = hashlib.sha256(key.encode()).hexdigest()[:16]
+    return f"{index_root(spark, stem)}/{stem}_{digest}"
 
 
 def _nullable(dt: DataType) -> DataType:

@@ -31,6 +31,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.materialize import scratch_dir
 from ..schemas import EVENTS
 from ..workloads.eventflow import SESSION_GAP_US
 
@@ -472,7 +473,8 @@ def run_stream_to_parquet(
     stamp_epoch: bool = False,
 ) -> DataFrame:
     """Drain a finite streaming DataFrame (AvailableNow trigger) into
-    an append-only parquet log under a fresh temp dir and read it back
+    an append-only parquet log under a fresh ``scratch_dir`` (deleted
+    by ``reset_session_caches``) and read it back
     with the pinned schema — the shared sink plumbing of every
     driver-visible streaming entry. ``stamp_epoch=True`` routes
     through ``foreachBatch`` and stamps ``batch_id`` on every row
@@ -494,7 +496,7 @@ def run_stream_to_parquet(
     caller draining one must stage sentinel rows past the real event
     horizon first, as ``stage_events_with_sentinels`` does."""
     child = _drain_session(spark)
-    base = tempfile.mkdtemp(prefix=prefix)
+    base = scratch_dir(prefix)
     out_dir = os.path.join(base, "out")
     writer = make_stream(child).writeStream
     if stamp_epoch:

@@ -54,6 +54,7 @@ from ..operators.graph import connected_components
 from ..plans.materialize import (
     materialize,
     materialize_parquet,
+    scratch_dir,
     session_cached,
 )
 from ..sources.catalog import read_table, spread
@@ -424,8 +425,8 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs oracle proves completeness differentially: a dropped
     true pair is a hash mismatch. Survivors verify exactly against
     the cached shingle ARRAYS in a stage ``defaultParallelism`` tasks
-    wide (``_pair_overlaps``, the same tail as the Jaccard prefix
-    join); the threshold compare stays the double form the oracle
+    wide (``_pair_overlaps``, which ``_prefix_verify`` also runs
+    on); the threshold compare stays the double form the oracle
     uses.
     Replaces the df²-per-key inverted-index self-join: per key the
     join cost is prefix_count(h) × df(h), and hot (stopword) shingles
@@ -595,14 +596,21 @@ def dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     positional filtering and suffix filtering (PPJoin+) — prunes
     candidates further without changing this plan's shape."""
     sh = _shingle_arrays(spark, sf_dir)
-    prefix = _prefix_rows_shared(spark, sf_dir)
+    return _prefix_verify(sh, _prefix_candidates(_prefix_rows_shared(spark, sf_dir)))
+
+
+def _prefix_candidates(prefix: DataFrame) -> DataFrame:
+    """(doc_id_a, doc_id_b) candidate pairs of prefix rows (doc_id, n,
+    h): docs sharing a prefix shingle whose sizes pass the size filter
+    t·max(n_a, n_b) <= min(n_a, n_b). A pair sharing several prefix
+    shingles repeats; ``_pair_overlaps`` takes the distinct."""
     pa = prefix.select(
         F.col("doc_id").alias("doc_id_a"), F.col("n").alias("pn_a"), "h"
     )
     pb = prefix.select(
         F.col("doc_id").alias("doc_id_b"), F.col("n").alias("pn_b"), "h"
     )
-    cand = (
+    return (
         pa.join(pb, "h")
         .filter(
             (F.col("doc_id_a") < F.col("doc_id_b"))
@@ -613,7 +621,6 @@ def dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id_a", "doc_id_b")
     )
-    return _prefix_verify(sh, cand)
 
 
 def _pair_overlaps(sh: DataFrame, cand: DataFrame) -> DataFrame:
@@ -656,9 +663,9 @@ def _pair_overlaps(sh: DataFrame, cand: DataFrame) -> DataFrame:
 
 
 def _prefix_verify(sh: DataFrame, cand: DataFrame) -> DataFrame:
-    """Exact-Jaccard verification tail of the prefix-filter join
-    (shared by the single-pass query and the bounded-pass mode): the
-    distinct candidates' exact overlaps (``_pair_overlaps``), the
+    """Exact-Jaccard verification tail of ``_prefix_candidates``' pairs,
+    in one pass or gathered over the bounded mode's key-space slices:
+    the distinct candidates' exact overlaps (``_pair_overlaps``), the
     integer-exact threshold test, and the single reported divide."""
     return (
         _pair_overlaps(sh, cand)
@@ -703,29 +710,14 @@ def dedup_prefix_jaccard_bounded(
     multi-shingle overlaps) and exercised at sf100 by the scaling
     audit."""
     import gc
-    import tempfile
 
     sh = _shingle_arrays(spark, sf_dir)
     prefix = _prefix_rows_shared(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="sparkgraft_prefixpass_")
+    out = scratch_dir("prefixpass")
     for i in range(passes):
         sl = prefix.filter(F.pmod(F.col("h"), F.lit(passes)) == i)
-        pa = sl.select(
-            F.col("doc_id").alias("doc_id_a"), F.col("n").alias("pn_a"), "h"
-        )
-        pb = sl.select(
-            F.col("doc_id").alias("doc_id_b"), F.col("n").alias("pn_b"), "h"
-        )
         (
-            pa.join(pb, "h")
-            .filter(
-                (F.col("doc_id_a") < F.col("doc_id_b"))
-                & (
-                    PREFIX_TAU_NUM * F.greatest("pn_a", "pn_b")
-                    <= PREFIX_TAU_DEN * F.least("pn_a", "pn_b")
-                )
-            )
-            .select("doc_id_a", "doc_id_b")
+            _prefix_candidates(sl)
             .distinct()
             .write.mode("append")
             .parquet(out)
@@ -734,7 +726,7 @@ def dedup_prefix_jaccard_bounded(
         # ContextCleaner reclaims the pass's shuffle files BEFORE the
         # next slice shuffles — the whole point of the mode is that
         # per-pass transient disk never accumulates across passes.
-        del pa, pb, sl
+        del sl
         gc.collect()
         spark.sparkContext._jvm.System.gc()
     return _prefix_verify(sh, spark.read.parquet(out))
@@ -1920,8 +1912,6 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     never corpus-sized. The oracle replays the FULL pair pipeline and
     filters to boundary-straddling pairs, so this query's cheaper
     candidate generation is differentially proven equivalent."""
-    from pyspark.sql import Window
-
     docs = read_table(spark, sf_dir, "documents")
     sh = _shingle_arrays(spark, sf_dir)
     # Same hot-bucket cap as the full pair pipeline, keyed on TOTAL
@@ -2065,16 +2055,11 @@ def _band_index_committed(
     the schema from the manifest, so an empty corpus (zero files,
     zero partition dirs) reads back as an empty scan. The cache keeps
     the read-back DataFrames, so a probe re-reads no manifest. Store
-    location policy is ``plans.snapshots.index_root``."""
-    import hashlib
-
-    from ..plans.snapshots import SnapshotStore, index_root
+    location policy is ``plans.snapshots.index_dir``."""
+    from ..plans.snapshots import SnapshotStore, index_dir
 
     def build() -> dict[str, DataFrame]:
-        key = (spark.sparkContext.applicationId, sf_dir)
-        digest = hashlib.sha256("\x00".join(key).encode()).hexdigest()[:16]
-        root = f"{index_root(spark, 'band_index')}/band_{digest}"
-        store = SnapshotStore(spark, root)
+        store = SnapshotStore(spark, index_dir(spark, "band", sf_dir))
         corpus_docs = spread(
             read_table(spark, sf_dir, "documents").filter(
                 F.col("doc_id") < N_OLD
@@ -2107,6 +2092,8 @@ def _band_index_committed(
             partition_by={"band_index": ["band_bucket"]},
             cluster_by={"band_index": (["band_key"], 2)},
         )
+        # a rebuild after reset_session_caches supersedes the last one
+        store.vacuum(retain_last=1)
         sh.unpersist()
         bands.unpersist()
         return {
@@ -2191,12 +2178,9 @@ def dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     flat across tiers."""
     docs = read_table(spark, sf_dir, "documents")
     committed = _band_index_committed(spark, sf_dir)
-    idx = committed["band_index"]
     sh_b, bands_b = _batch_signing(spark, sf_dir)
     # Hot-bucket cap on TOTAL bucket size (committed corpus counts +
-    # this batch's counts): hot keys are rare by definition, so the
-    # set broadcasts at any corpus size while the batch side stays
-    # map-only (left_anti), same shape as _capped_bands.
+    # this batch's counts).
     hot = (
         bands_b.groupBy("band_key")
         .agg(F.count(F.lit(1)).alias("c_b"))
@@ -2207,32 +2191,50 @@ def dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("band_key")
     )
-    batch = bands_b.join(F.broadcast(hot), "band_key", "left_anti").withColumn(
+    return _probe_committed(
+        committed, docs.filter(F.col("doc_id") >= N_OLD), sh_b, bands_b, hot
+    )
+
+
+def _probe_committed(
+    committed: dict[str, DataFrame],
+    docs: DataFrame,
+    sh: DataFrame,
+    bands: DataFrame,
+    hot: DataFrame,
+) -> DataFrame:
+    """Best committed-corpus match of each batch doc: the batch's
+    (doc_id, band_key) ``bands`` minus the ``hot`` band keys probe the
+    committed band index on [band_bucket, band_key], and the distinct
+    candidates verify against the committed corpus shingles
+    (``_inc_best_match``). ``docs`` and ``sh`` are the batch's rows and
+    shingle arrays.
+
+    Hot keys are rare by definition, so the set broadcasts at any
+    corpus size while the batch side stays map-only (left_anti), same
+    shape as _capped_bands. The batch side itself is NOT
+    force-broadcast: a trickle batch is kilobytes and the planner
+    broadcasts it unhinted — which is what arms DPP
+    (reuseBroadcastOnly) — while a bulk backfill batch is corpus-sized
+    and force-broadcasting it collected 80M rows through the driver
+    at the sf100 tier (driver.maxResultSize abort; 73s of
+    collect+relation-build at sf10). In the bulk shape the planner
+    instead broadcasts the small COMMITTED-INDEX side and the batch
+    stays map-only — the correct plan in both regimes, chosen by
+    size, not by hint."""
+    batch = bands.join(F.broadcast(hot), "band_key", "left_anti").withColumn(
         "band_bucket", _band_bucket(F.col("band_key"))
     )
-    # NO forced broadcast on the batch side (round-8 fix): a trickle
-    # batch is kilobytes and the planner broadcasts it unhinted —
-    # which is what arms DPP (reuseBroadcastOnly) — while a bulk
-    # backfill batch is corpus-sized and force-broadcasting it
-    # collected 80M rows through the driver at the sf100 tier
-    # (driver.maxResultSize abort; 73s of collect+relation-build at
-    # sf10). In the bulk shape the planner instead broadcasts the
-    # small COMMITTED-INDEX side and the batch stays map-only — the
-    # correct plan in both regimes, chosen by size, not by hint.
     cand = (
-        idx.join(
+        committed["band_index"]
+        .join(
             batch.select("doc_id", "band_key", "band_bucket"),
             ["band_bucket", "band_key"],
         )
         .select("doc_id", "corpus_doc_id")
         .distinct()
     )
-    return _inc_best_match(
-        docs.filter(F.col("doc_id") >= N_OLD),
-        sh_b,
-        cand,
-        sh_corpus=committed["corpus_shingles"],
-    )
+    return _inc_best_match(docs, sh, cand, sh_corpus=committed["corpus_shingles"])
 
 
 # ---------------------------------------------------------------------------
@@ -2312,31 +2314,15 @@ def _probe_classify_batch(
 ) -> DataFrame:
     """Classify ONE ingest batch (doc_id, text, ...) against the
     committed corpus artifacts — the per-micro-batch body of the
-    streaming entry. Everything is sized to the batch or committed
-    metadata: Arrow shingle+band signing over the batch rows, the
-    corpus-occupancy hot-key set broadcast against the batch bands,
-    the DPP-prunable index probe, exact-Jaccard verify against
-    committed corpus_shingles."""
+    streaming entry: Arrow shingle+band signing over the batch rows,
+    then ``_probe_committed`` with the hot keys taken from committed
+    corpus occupancy alone."""
     committed = _band_index_committed(spark, sf_dir)
     sh_b = batch_docs.select("doc_id", _shingles_udf()("text").alias("harr"))
     hot = committed["band_counts"].filter(
         F.col("c_idx") > HOT_BUCKET_CAP
     ).select("band_key")
-    batch = _band_table(sh_b).join(
-        F.broadcast(hot), "band_key", "left_anti"
-    ).withColumn("band_bucket", _band_bucket(F.col("band_key")))
-    cand = (
-        committed["band_index"]
-        .join(
-            batch.select("doc_id", "band_key", "band_bucket"),
-            ["band_bucket", "band_key"],
-        )
-        .select("doc_id", "corpus_doc_id")
-        .distinct()
-    )
-    return _inc_best_match(
-        batch_docs, sh_b, cand, sh_corpus=committed["corpus_shingles"]
-    )
+    return _probe_committed(committed, batch_docs, sh_b, _band_table(sh_b), hot)
 
 
 _STREAM_INGEST_CACHE: dict[tuple[str, str], DataFrame] = {}
@@ -2366,11 +2352,9 @@ def docs_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches classify in O(batch) forever."""
 
     def build() -> DataFrame:
-        import hashlib
         import os as _os
-        import tempfile as _tf
 
-        from ..plans.snapshots import SnapshotStore, index_root
+        from ..plans.snapshots import SnapshotStore, index_dir
         from ..streaming.docs import stage_documents_batches
         from ..streaming.ingest import make_batch_sink
         from ..schemas import FIXTURE_SCHEMAS
@@ -2382,11 +2366,7 @@ def docs_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         stage, n_files = stage_documents_batches(spark, sf_dir)
         if n_files == 0:  # no new docs → no batches → empty result
             return spark.createDataFrame([], out_schema)
-        digest = hashlib.sha256(
-            f"{spark.sparkContext.applicationId}\x00{sf_dir}".encode()
-        ).hexdigest()[:16]
-        root = f"{index_root(spark, 'ingest_dedup')}/res_{digest}"
-        store = SnapshotStore(spark, root)
+        store = SnapshotStore(spark, index_dir(spark, "res", sf_dir))
         sink = make_batch_sink(store, "ingest_dedup", stream_id="docs")
         # Commit the corpus index on THIS thread: foreachBatch runs on
         # a stream thread, and this build holds the session-cache lock
@@ -2401,7 +2381,7 @@ def docs_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(stage)
         )
-        ckpt = _tf.mkdtemp(prefix="ingest_dedup_ckpt_")
+        ckpt = scratch_dir("ingest_dedup_ckpt")
         q = (
             stream.writeStream.foreachBatch(classify_sink)
             .option("checkpointLocation", _os.path.join(ckpt, "ckpt"))

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.rankselect import rank_select
-from ..plans.materialize import session_cached
+from ..plans.materialize import scratch_dir, session_cached
 from ..sources.catalog import read_table
 from . import ORACLE, query
 
@@ -1587,7 +1587,7 @@ def events_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda s: attribution_join_stream(
                 read_events_stream(s, sf_dir, max_files_per_trigger=1_000_000)
             ),
-            "stream_attr_",
+            "stream_attr",
             "purchase_id bigint, user_id bigint,"
             " purchase_ts timestamp, click_ts timestamp",
         )
@@ -1699,7 +1699,7 @@ def events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         got = run_stream_to_parquet(
             spark,
             lambda s: sessionize(read_staged_events_stream(s, stage)),
-            "stream_sess_",
+            "stream_sess",
             "user_id bigint, session_start timestamp,"
             " session_end timestamp, n_events bigint",
         )
@@ -1817,7 +1817,7 @@ def events_stream_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
                 read_staged_events_stream(s, stage),
                 retention_ms=90 * 24 * 3600 * 1000,  # past the fixture span
             ),
-            "stream_clamp_",
+            "stream_clamp",
             out_schema,
             output_mode="update",
             stamp_epoch=True,
@@ -1883,7 +1883,6 @@ def events_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         import os
-        import tempfile
 
         from ..plans.snapshots import SnapshotStore
         from ..streaming.events import (
@@ -1899,7 +1898,7 @@ def events_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         stage, n_weeks = stage_events_daily(spark, sf_dir, unit="week")
         if n_weeks == 0:
             return spark.createDataFrame([], out_schema)
-        base = tempfile.mkdtemp(prefix="stream_ingest_")
+        base = scratch_dir("stream_ingest")
         store = SnapshotStore(spark, os.path.join(base, "store"))
         q = append_stream(
             store,

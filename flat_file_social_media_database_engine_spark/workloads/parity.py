@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.mutations import apply_view_deltas, rekey_cascade, validated_append
+from ..plans.materialize import scratch_dir
 from ..sources.catalog import read_table
 from ..sources.integrity import anti_filter, semi_filter
 from . import query
@@ -538,14 +539,12 @@ def m3_rekey_cascade_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def m4_delete_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..plans.snapshots import SnapshotStore
 
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    store = SnapshotStore(spark, tempfile.mkdtemp(prefix="snap_m4_"))
+    store = SnapshotStore(spark, scratch_dir("snap_m4"))
     # two manifest entries so the delete/merge exercise partial rewrite
     store.commit({"orders": orders.filter(F.col("o_orderkey") % 2 == 0)})
     store.append({"orders": orders.filter(F.col("o_orderkey") % 2 == 1)})
@@ -608,14 +607,12 @@ def m4_delete_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def m5_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..plans.snapshots import SnapshotStore
 
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    store = SnapshotStore(spark, tempfile.mkdtemp(prefix="snap_m5_"))
+    store = SnapshotStore(spark, scratch_dir("snap_m5"))
     v1 = store.commit({"orders": orders})
     store.delete_where(
         "orders",
@@ -730,12 +727,10 @@ def p6_p7_trim_strict_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s5_snapshot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..plans.snapshots import SnapshotStore
 
     part = read_table(spark, sf_dir, "part")
-    store = SnapshotStore(spark, tempfile.mkdtemp(prefix="snap_rt_"))
+    store = SnapshotStore(spark, scratch_dir("snap_rt"))
     store.commit({"part": part})
     return store.read("part").select(
         "p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice"
@@ -910,8 +905,6 @@ def s7_multiformat_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     union aggregates with ordinary map-side combine. The sum over
     doubles goes through DECIMAL (see analytics._dsum rationale).
     """
-    import tempfile
-
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -925,7 +918,7 @@ def s7_multiformat_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.json_source import read_jsonl, write_jsonl
 
     events = read_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="s7_fed_")
+    tmp = scratch_dir("s7_fed")
     mod = F.col("event_id") % 4
 
     pq_slice = events.filter(mod == 0)
@@ -1030,8 +1023,6 @@ def s8_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic — the fold order (which directories arrived when) can
     never show through to the values, which is precisely what makes
     the incremental fold ≡ full recompute differential meaningful."""
-    import tempfile
-
     from ..plans.rollup import MaintainedRollup
     from ..plans.snapshots import SnapshotStore
 
@@ -1040,7 +1031,7 @@ def s8_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
         F.col("o_totalprice").cast("decimal(28,6)").alias("price_d"),
     )
-    store = SnapshotStore(spark, tempfile.mkdtemp(prefix="rollup_s8_"))
+    store = SnapshotStore(spark, scratch_dir("rollup_s8"))
     store.commit({"orders": orders.filter(F.col("o_orderkey") % 4 != 0)})
     r = MaintainedRollup(
         store,

@@ -161,6 +161,87 @@ def _dot_sql(a: str, b: str) -> str:
 
 
 # ---------------------------------------------------------------------------
+# The verify-and-rank tail. Every front below is a candidate generator
+# (all pairs, LSH buckets, IVF cells, quantized scans) feeding the same
+# exact sequential-fold cosine and the same (cosine DESC, neighbor_id)
+# rank, so the oracle-checked answer depends on the generator only
+# through which pairs it proposes.
+# ---------------------------------------------------------------------------
+def _normed(emb: DataFrame) -> DataFrame:
+    """(vec_id, embedding, nrm): each vector with its fold norm."""
+    return emb.select(
+        "vec_id", "embedding", F.sqrt(_norm2("embedding")).alias("nrm")
+    )
+
+
+def _side(base: DataFrame, id_col: str, e: str, n: str) -> DataFrame:
+    """``base``'s (vec_id, embedding, nrm) renamed to one side of a pair."""
+    return base.select(
+        F.col("vec_id").alias(id_col), F.col("embedding").alias(e), F.col("nrm").alias(n)
+    )
+
+
+def _queries(base: DataFrame) -> DataFrame:
+    """(query_id, qe, qn): the fixed query set, vec_id < N_QUERIES."""
+    return _side(base.filter(F.col("vec_id") < N_QUERIES), "query_id", "qe", "qn")
+
+
+def _rescore(cand: DataFrame, base: DataFrame, keep: list[str]) -> DataFrame:
+    """Exact cosine of each (query_id, neighbor_id, *keep) candidate:
+    the query side broadcasts, the neighbor side joins on its id."""
+    return (
+        cand.join(F.broadcast(_queries(base)), "query_id")
+        .join(_side(base, "neighbor_id", "ne", "nn"), "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            *keep,
+            _cos(_dot("qe", "ne"), F.col("qn") * F.col("nn")).alias("cosine"),
+        )
+    )
+
+
+def _ranked(scored: DataFrame, by: list, score: str, k: int) -> DataFrame:
+    """Rows of ``scored`` numbered ``rank`` by (``score`` DESC,
+    neighbor_id) within ``by``, keeping rank <= k."""
+    w = Window.partitionBy(*by).orderBy(F.col(score).desc(), "neighbor_id")
+    return scored.withColumn("rank", F.row_number().over(w).cast("bigint")).filter(
+        F.col("rank") <= k
+    )
+
+
+def _two_phase(scored: DataFrame, score: str, k: int) -> DataFrame:
+    """``_ranked`` per query over a full scan, in two phases: survivors
+    per (query, partition) first, so the global window never sees more
+    than Q·k·P rows."""
+    local = _ranked(scored, ["query_id", F.spark_partition_id()], score, k)
+    return _ranked(local, ["query_id"], score, k)
+
+
+def _top_k(scored: DataFrame, cols: list) -> DataFrame:
+    """Each query's TOP_K rows by exact cosine: (query_id, rank,
+    neighbor_id, *cols, cosine)."""
+    return _ranked(scored, ["query_id"], "cosine", TOP_K).select(
+        "query_id", "rank", "neighbor_id", *cols, "cosine"
+    )
+
+
+def _verify_pairs(cand: DataFrame, base: DataFrame) -> DataFrame:
+    """(vec_id_a, vec_id_b, cosine): the candidate pairs whose exact
+    cosine reaches NEARDUP_COSINE."""
+    return (
+        cand.join(_side(base, "vec_id_a", "ea", "na"), "vec_id_a")
+        .join(_side(base, "vec_id_b", "eb", "nb"), "vec_id_b")
+        .select(
+            "vec_id_a",
+            "vec_id_b",
+            _cos(_dot("ea", "eb"), F.col("na") * F.col("nb")).alias("cosine"),
+        )
+        .filter(F.col("cosine") >= NEARDUP_COSINE)
+    )
+
+
+# ---------------------------------------------------------------------------
 # Brute-force cosine top-k (exactness baseline, two-phase at scale)
 # ---------------------------------------------------------------------------
 @query(
@@ -195,36 +276,17 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactness baseline: work is corpus x fixed-Q by design; the
     # scoring fold runs on the (read_table-spread) scan partitions,
     # the q side only broadcasts.
-    emb = read_table(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", "embedding", F.sqrt(_norm2("embedding")).alias("nrm"))
-    q = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
+    base = _normed(read_table(spark, sf_dir, "embeddings"))
     scored = (
-        base.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
+        base.join(F.broadcast(_queries(base)), F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             _cos(_dot("qe", "embedding"), F.col("qn") * F.col("nrm")).alias("cosine"),
         )
     )
-    # Two-phase top-k: survivors per (query, partition) first, so the
-    # global window never sees more than Q*k*P rows.
-    w_local = Window.partitionBy("query_id", F.spark_partition_id()).orderBy(
-        F.col("cosine").desc(), "neighbor_id"
-    )
-    local = scored.withColumn("r", F.row_number().over(w_local)).filter(
-        F.col("r") <= TOP_K
-    )
-    w_global = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), "neighbor_id"
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w_global).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", "cosine")
+    return _two_phase(scored, "cosine", TOP_K).select(
+        "query_id", "rank", "neighbor_id", "cosine"
     )
 
 
@@ -287,10 +349,10 @@ _SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 def _corpus_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus-side (vec_id, t, sig) signature table, materialized
-    once per (application, sf_dir) — shared by the three LSH consumers
-    (single-probe top-k, multi-probe top-k, bucketed near-dup), which
-    each previously re-ran the full Arrow matmul pass. Same policy as
-    ``_kmeans_train``'s cache and the dedup tier's shared passes."""
+    once per (application, sf_dir) for the LSH consumers (single-probe
+    top-k, multi-probe top-k, bucketed near-dup, the recall audit).
+    Same policy as ``_kmeans_train``'s cache and the dedup tier's
+    shared passes."""
     from ..plans.materialize import materialize, session_cached
 
     def build():
@@ -442,8 +504,7 @@ def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: signatures are one broadcast-join pass (P×b=128 dims),
     the bucket join shuffles (table, key) keys only, and exact scoring
     touches |candidates| ≪ N rows per query."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", "embedding", F.sqrt(_norm2("embedding")).alias("nrm"))
+    base = _normed(read_table(spark, sf_dir, "embeddings"))
     keyed = _keyed_sigs(
         _corpus_signatures(spark, sf_dir), _corpus_ext_bits(spark, sf_dir)
     )
@@ -457,32 +518,7 @@ def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
         .distinct()
     )
-
-    q = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    nb = base.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ne"),
-        F.col("nrm").alias("nn"),
-    )
-    scored = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(nb, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cos(_dot("qe", "ne"), F.col("qn") * F.col("nn")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return _top_k(_rescore(cand, base, []), [])
 
 
 # ---------------------------------------------------------------------------
@@ -494,6 +530,55 @@ def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # recall at fixed table count (more probes ≪ more tables in memory).
 # ---------------------------------------------------------------------------
 MULTIPROBE_FLIPS = 2  # probe sig0 plus each of the 2 lowest-|dot| flips
+
+
+def _probe_groups(
+    spark: SparkSession, q: DataFrame, e: int
+) -> tuple[DataFrame, Column]:
+    """The multi-probe sets of the query set ``q`` (query_id, qe, ...):
+    the (query_id, t, k0, mb) groups and the probe-key array over them
+    — the base key k0, then k0 with each of its ``MULTIPROBE_FLIPS +
+    e`` lowest-margin bits flipped.
+
+    The per-(query, table) bit set is tiny and bounded (<= LSH_BITS +
+    e), so ONE groupBy collects it and pure array arithmetic yields
+    the probe keys: sort the (|d|, b) structs for the margin ranking
+    (the oracle's (abs(d), b) tie-break), fold the sign bits for k0,
+    flip the first MULTIPROBE_FLIPS + e. Flipping distinct bits of k0
+    yields pairwise-distinct keys != k0, so the oracle's union +
+    distinct is subsumed by exploding the array."""
+    hp = spark.createDataFrame(
+        [
+            (t, b, h)
+            for t, b, h in [*_HYPERPLANES, *_HYPERPLANES_EXT]
+            if b < LSH_BITS + e
+        ],
+        "t int, b int, h array<double>",
+    )
+    dots = (
+        q.select("query_id", "qe")
+        .crossJoin(F.broadcast(hp))
+        .select("query_id", "t", "b", _dot("qe", "h").alias("d"))
+    )
+    grp = dots.groupBy("query_id", "t").agg(
+        F.sum(
+            F.when(
+                F.col("d") >= 0, F.expr("shiftleft(CAST(1 AS BIGINT), b)")
+            ).otherwise(F.lit(0))
+        )
+        .cast("bigint")
+        .alias("k0"),
+        F.array_sort(
+            F.collect_list(F.struct(F.abs(F.col("d")).alias("ad"), "b"))
+        ).alias("mb"),
+    )
+    keys = F.expr(
+        f"concat(array(k0), transform("
+        f"slice(mb, 1, {MULTIPROBE_FLIPS + e}), "
+        f"s -> CAST(k0 ^ shiftleft(CAST(1 AS BIGINT), s.b) "
+        f"AS BIGINT)))"
+    )
+    return grp, keys
 
 
 def _multiprobe_oracle() -> str:
@@ -580,92 +665,18 @@ def sim_topk_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature per vector per table via the map-only Arrow pass, and
     the bucket join stays a (table, key) join with ~(1+flips)×
     the single-probe candidate volume."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", "embedding", F.sqrt(_norm2("embedding")).alias("nrm"))
+    base = _normed(read_table(spark, sf_dir, "embeddings"))
     e = _corpus_ext_bits(spark, sf_dir)
     keyed = _keyed_sigs(_corpus_signatures(spark, sf_dir), e)
-
-    q = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    hp = spark.createDataFrame(
-        [
-            (t, b, h)
-            for t, b, h in [*_HYPERPLANES, *_HYPERPLANES_EXT]
-            if b < LSH_BITS + e
-        ],
-        "t int, b int, h array<double>",
-    )
-    dots = (
-        q.select("query_id", "qe")
-        .crossJoin(F.broadcast(hp))
-        .select("query_id", "t", "b", _dot("qe", "h").alias("d"))
-    )
-    # Round-9 (guide §2.4): the probe-set construction — base key k0
-    # plus the lowest-|margin| bit flips — previously ran a
-    # row_number window, a separate k0 aggregation, a join and a
-    # union+distinct (4 shuffles over the Q×T×B probe rows). The
-    # per-(query, table) bit set is tiny and bounded (≤ LSH_BITS +
-    # ext), so ONE groupBy collects it and pure array arithmetic
-    # yields the identical probe keys: sort the (|d|, b) structs for
-    # the margin ranking (same (abs(d), b) tie-break as the window),
-    # fold the sign bits for k0, flip the first MULTIPROBE_FLIPS + e.
-    # All probe keys are distinct by construction (flipping distinct
-    # bits of k0 yields pairwise-distinct keys ≠ k0), so the union+
-    # distinct is subsumed by the explode.
-    grp = dots.groupBy("query_id", "t").agg(
-        F.sum(
-            F.when(
-                F.col("d") >= 0, F.expr("shiftleft(CAST(1 AS BIGINT), b)")
-            ).otherwise(F.lit(0))
-        )
-        .cast("bigint")
-        .alias("k0"),
-        F.array_sort(
-            F.collect_list(F.struct(F.abs(F.col("d")).alias("ad"), "b"))
-        ).alias("mb"),
-    )
-    probes = grp.select(
-        "query_id",
-        "t",
-        F.explode(
-            F.expr(
-                f"concat(array(k0), transform("
-                f"slice(mb, 1, {MULTIPROBE_FLIPS + e}), "
-                f"s -> CAST(k0 ^ shiftleft(CAST(1 AS BIGINT), s.b) "
-                f"AS BIGINT)))"
-            )
-        ).alias("k"),
-    )
-
+    grp, keys = _probe_groups(spark, _queries(base), e)
+    probes = grp.select("query_id", "t", F.explode(keys).alias("k"))
     cand = (
         probes.join(keyed, ["t", "k"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
         .distinct()
     )
-    nb = base.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ne"),
-        F.col("nrm").alias("nn"),
-    )
-    scored = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(nb, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cos(_dot("qe", "ne"), F.col("qn") * F.col("nn")).alias("cosine"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(wr).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return _top_k(_rescore(cand, base, []), [])
 
 
 # ---------------------------------------------------------------------------
@@ -784,31 +795,11 @@ def sim_neardup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-exact sequential fold re-scores only those survivors — the
     margin is 9 orders of magnitude above double drift, so the final
     filter is decided by the fold alone and the output matches the
-    naive form bit-for-bit. At 100 TB the same verify step runs on
-    LSH-bucketed candidates instead (`sim_topk_lsh`'s shape)."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", "embedding", F.sqrt(_norm2("embedding")).alias("nrm"))
-    cand = _neardup_candidates(spark, base)
-    a = base.select(
-        F.col("vec_id").alias("vec_id_a"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = base.select(
-        F.col("vec_id").alias("vec_id_b"),
-        F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    return (
-        cand.join(a, "vec_id_a")
-        .join(b, "vec_id_b")
-        .select(
-            "vec_id_a",
-            "vec_id_b",
-            _cos(_dot("ea", "eb"), F.col("na") * F.col("nb")).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= NEARDUP_COSINE)
-    )
+    naive form bit-for-bit. At 100 TB the same ``_verify_pairs``
+    step runs on LSH-bucketed candidates instead
+    (``_bucket_neardups``, `sim_neardup_lsh`)."""
+    base = _normed(read_table(spark, sf_dir, "embeddings"))
+    return _verify_pairs(_neardup_candidates(spark, base), base)
 
 
 # ---------------------------------------------------------------------------
@@ -822,6 +813,44 @@ def sim_neardup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # this at every scale, so driver results are unchanged; the
 # degenerate-embedding suite plants the pathological case.
 from ._caps import HOT_BUCKET_CAP as _EMB_BUCKET_CAP
+
+
+def _over_cap(sigs: DataFrame, cap: int) -> DataFrame:
+    """(t, k) of the buckets holding more than ``cap`` vectors."""
+    return (
+        sigs.groupBy("t", "k")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .filter(F.col("c") > cap)
+        .select("t", "k")
+    )
+
+
+def _bucket_neardups(base: DataFrame, sigs: DataFrame, hot: DataFrame) -> DataFrame:
+    """The verified near-dup pairs of a (vec_id, t, k) bucket-key table:
+    buckets in ``hot`` are dropped, every a < b pair sharing a
+    remaining bucket is a candidate, and ``_verify_pairs`` keeps those
+    at cosine >= NEARDUP_COSINE.
+
+    The cap is a hot-bucket cap, mirroring the text pipeline's
+    (dedup.py): mass-duplicate embeddings — and EVERY failed-encoder
+    zero vector, whose sign bits all agree — land in one bucket whose
+    self-join is quadratic. Buckets past the cap are degenerate
+    duplicate clusters (exact dedup territory); the oracles apply the
+    identical HAVING filter, so the cap is differential. The hot set
+    is rare by definition (kilobytes at any scale), so it broadcasts
+    into an anti-join and the key side stays map-only."""
+    sigs_c = sigs.join(F.broadcast(hot), ["t", "k"], "left_anti")
+    cand = (
+        sigs_c.select("t", "k", F.col("vec_id").alias("vec_id_a"))
+        .join(
+            sigs_c.select("t", "k", F.col("vec_id").alias("vec_id_b")),
+            ["t", "k"],
+        )
+        .filter(F.col("vec_id_a") < F.col("vec_id_b"))
+        .select("vec_id_a", "vec_id_b")
+        .distinct()
+    )
+    return _verify_pairs(cand, base)
 
 
 _HOT_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
@@ -840,12 +869,7 @@ def _hot_sig_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
             _corpus_signatures(spark, sf_dir),
             _corpus_ext_bits(spark, sf_dir),
         )
-        return materialize(
-            sigs.groupBy("t", "k")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("c") > _EMB_BUCKET_CAP)
-            .select("t", "k")
-        )
+        return materialize(_over_cap(sigs, _EMB_BUCKET_CAP))
 
     return session_cached(_HOT_SIG_CACHE, spark, sf_dir, build)
 
@@ -889,71 +913,32 @@ _NEARDUP_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 def _neardup_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The VERIFIED embedding near-dup pair set (vec_id_a, vec_id_b,
-    cosine ≥ threshold), built once per (application, sf_dir) and
-    materialized — the embedding twin of dedup.lsh_pairs_shared. Two
-    consumers: the near-dup report (`sim_neardup_lsh`) and the
-    cell-confirmed semantic dedup (`sim_semantic_dedup`)."""
+    cosine ≥ threshold) of the corpus signature table, through
+    ``_bucket_neardups`` with the shared cap, built once per
+    (application, sf_dir) and materialized — the embedding twin of
+    dedup.lsh_pairs_shared. Two consumers: the near-dup report
+    (`sim_neardup_lsh`) and the cell-confirmed semantic dedup
+    (`sim_semantic_dedup`).
+
+    The bucket key is ADAPTIVE: base sig + ext_bits(N) extension bits.
+    With the key fixed at 7 bits, every bucket floods past the cap
+    once N ≫ cap·2^bits (measured: ALL 4096 buckets over cap at 200k
+    vectors ⇒ zero candidates). The ladder keeps expected occupancy
+    in the dozens through ~2M vectors while the driver fixtures
+    (ext=0) keep the 7-bit key."""
     from ..plans.materialize import materialize, session_cached
 
     def build() -> DataFrame:
-        emb = read_table(spark, sf_dir, "embeddings")
-        base = emb.select(
-            "vec_id", "embedding", F.sqrt(_norm2("embedding")).alias("nrm")
-        )
-        # ADAPTIVE bucket key (round-6): base sig + ext_bits(N)
-        # extension bits — with the key fixed at 7 bits, every bucket
-        # floods past the cap once N ≫ cap·2^bits (measured: ALL 4096
-        # buckets over cap at 200k vectors ⇒ zero candidates). The
-        # ladder keeps expected occupancy in the dozens through ~2M
-        # vectors while the driver fixtures (ext=0) keep the round-5
-        # key bit-identically.
         sigs = _keyed_sigs(
             _corpus_signatures(spark, sf_dir),
             _corpus_ext_bits(spark, sf_dir),
         )
-        # Hot-bucket cap, mirroring the text pipeline's (dedup.py):
-        # mass-duplicate embeddings — and EVERY failed-encoder zero
-        # vector, whose sign bits all agree — land in one (t, k)
-        # bucket whose self-join is quadratic. Buckets past the cap
-        # are degenerate duplicate clusters (exact dedup territory);
-        # the oracle applies the identical HAVING filter, so the cap
-        # is differential. broadcast the HOT set (rare by definition
-        # — kilobytes at any scale) and anti-join, keeping the
-        # signature side map-only
-        sigs_c = sigs.join(
-            F.broadcast(_hot_sig_keys(spark, sf_dir)), ["t", "k"], "left_anti"
-        )
-        cand = (
-            sigs_c.select("t", "k", F.col("vec_id").alias("vec_id_a"))
-            .join(
-                sigs_c.select("t", "k", F.col("vec_id").alias("vec_id_b")),
-                ["t", "k"],
-            )
-            .filter(F.col("vec_id_a") < F.col("vec_id_b"))
-            .select("vec_id_a", "vec_id_b")
-            .distinct()
-        )
-        a = base.select(
-            F.col("vec_id").alias("vec_id_a"),
-            F.col("embedding").alias("ea"),
-            F.col("nrm").alias("na"),
-        )
-        b = base.select(
-            F.col("vec_id").alias("vec_id_b"),
-            F.col("embedding").alias("eb"),
-            F.col("nrm").alias("nb"),
-        )
         return materialize(
-            cand.join(a, "vec_id_a")
-            .join(b, "vec_id_b")
-            .select(
-                "vec_id_a",
-                "vec_id_b",
-                _cos(_dot("ea", "eb"), F.col("na") * F.col("nb")).alias(
-                    "cosine"
-                ),
+            _bucket_neardups(
+                _normed(read_table(spark, sf_dir, "embeddings")),
+                sigs,
+                _hot_sig_keys(spark, sf_dir),
             )
-            .filter(F.col("cosine") >= NEARDUP_COSINE)
         )
 
     return session_cached(_NEARDUP_PAIRS_CACHE, spark, sf_dir, build)
@@ -1034,59 +1019,21 @@ def sim_neardup_regenerated(
     spark: SparkSession, sf_dir: str, bits: int, cap: int = _EMB_BUCKET_CAP
 ) -> DataFrame:
     """The near-dup pair front on a REGENERATED ``bits``-wide
-    signature table: same hot-bucket cap policy (``cap`` defaults to
-    the shared constant; a deployment re-tunes it with the width —
+    signature table: ``_bucket_neardups``, as for the corpus signature
+    table, with the hot set counted inline at ``cap`` (defaults to the
+    shared constant; a deployment re-tunes it with the width —
     candidate volume is bounded by (rows/cap)·C(cap,2), linear in
-    rows at fixed cap, so cap picks the shuffle budget), same exact
-    re-score at the shared threshold — only the bucket key family
-    differs. The PINNED-width wrapper below registers this as the
-    driver query ``sim_neardup_regenerated`` (REGEN_BITS); the width
-    argument stays so pytest can exercise other widths and a
-    deployment can re-pin without touching the pipeline."""
+    rows at fixed cap, so cap picks the shuffle budget). Only the
+    bucket key family differs. The PINNED-width wrapper below
+    registers this as the driver query ``sim_neardup_regenerated``
+    (REGEN_BITS); the width argument stays so pytest can exercise
+    other widths and a deployment can re-pin without touching the
+    pipeline."""
     emb = read_table(spark, sf_dir, "embeddings")
-    base = emb.select(
-        "vec_id", "embedding", F.sqrt(_norm2("embedding")).alias("nrm")
-    )
     sigs = regenerated_keyed_sigs(
         emb.select("vec_id", "embedding"), "vec_id", bits
     )
-    hot = (
-        sigs.groupBy("t", "k")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") > cap)
-        .select("t", "k")
-    )
-    sigs_c = sigs.join(F.broadcast(hot), ["t", "k"], "left_anti")
-    cand = (
-        sigs_c.select("t", "k", F.col("vec_id").alias("vec_id_a"))
-        .join(
-            sigs_c.select("t", "k", F.col("vec_id").alias("vec_id_b")),
-            ["t", "k"],
-        )
-        .filter(F.col("vec_id_a") < F.col("vec_id_b"))
-        .select("vec_id_a", "vec_id_b")
-        .distinct()
-    )
-    a = base.select(
-        F.col("vec_id").alias("vec_id_a"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = base.select(
-        F.col("vec_id").alias("vec_id_b"),
-        F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    return (
-        cand.join(a, "vec_id_a")
-        .join(b, "vec_id_b")
-        .select(
-            "vec_id_a",
-            "vec_id_b",
-            _cos(_dot("ea", "eb"), F.col("na") * F.col("nb")).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= NEARDUP_COSINE)
-    )
+    return _bucket_neardups(_normed(emb), sigs, _over_cap(sigs, cap))
 
 
 # Pinned regeneration width/cap for the DRIVER entry (round-7
@@ -1250,12 +1197,10 @@ def _ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled centroids — the ASSIGNMENT half of the IVF index,
     materialized once per (application, sf_dir).
 
-    Round-10 (verdict item 7): ``sim_topk_ivf``, ``sim_topk_ivfpq``
-    and the recall audit's ivf leg each re-planned and re-executed
-    this identical broadcast-centroid scoring + per-vector rank
-    window on EVERY call — the quantizer's cell assignment is an
-    index artifact (the same thing ``_ivf_index`` persists partitioned
-    by cell for the trained quantizer, and the committed band index
+    Read by ``sim_topk_ivf``, ``sim_topk_ivfpq`` and the recall
+    audit's ivf leg. The quantizer's cell assignment is an index
+    artifact (the same thing ``_ivf_index`` persists partitioned by
+    cell for the trained quantizer, and the committed band index
     stores for LSH), not a query result: the declared outputs are the
     ranked top-k rows, computed fresh from this pass + the embeddings
     on every action. Keeping only rnk<=nprobe keeps the pass
@@ -1265,15 +1210,8 @@ def _ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.materialize import materialize, session_cached
 
     def build():
-        emb = read_table(spark, sf_dir, "embeddings")
-        base = emb.select(
-            "vec_id", "embedding", F.sqrt(_norm2("embedding")).alias("nrm")
-        )
-        cents = base.filter(F.col("vec_id") < IVF_CENTROIDS).select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("ce"),
-            F.col("nrm").alias("cn"),
-        )
+        base = _normed(read_table(spark, sf_dir, "embeddings"))
+        cents = _side(base.filter(F.col("vec_id") < IVF_CENTROIDS), "cid", "ce", "cn")
         asn = (
             base.join(F.broadcast(cents))
             .select(
@@ -1308,8 +1246,7 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline is pinned in tests/test_similarity.py. Cell assignments
     come from the session's ``_ivf_cells`` index pass (round-10);
     list contents, probe scoring and ranking compute fresh per call."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", "embedding", F.sqrt(_norm2("embedding")).alias("nrm"))
+    base = _normed(read_table(spark, sf_dir, "embeddings"))
     asn = _ivf_cells(spark, sf_dir)
     lists = (
         asn.filter(F.col("rnk") == 1)
@@ -1319,14 +1256,7 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = (
         asn.filter((F.col("vec_id") < N_QUERIES) & (F.col("rnk") <= IVF_NPROBE))
         .select(F.col("vec_id").alias("query_id"), F.col("cid").alias("cell"))
-        .join(
-            base.select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("qe"),
-                F.col("nrm").alias("qn"),
-            ),
-            "query_id",
-        )
+        .join(_side(base, "query_id", "qe", "qn"), "query_id")
     )
     scored = (
         lists.join(F.broadcast(probes), "cell")
@@ -1338,12 +1268,7 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             _cos(_dot("qe", "embedding"), F.col("qn") * F.col("nrm")).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", "cell", "cosine")
-    )
+    return _top_k(scored, ["cell"])
 
 
 # ---------------------------------------------------------------------------
@@ -1443,77 +1368,20 @@ def sim_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             sim_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
         ),
     )
-    emb = read_table(spark, sf_dir, "embeddings")
-    base = emb.select(
-        "vec_id", "embedding", F.sqrt(_norm2("embedding")).alias("nrm")
-    )
+    base = _normed(read_table(spark, sf_dir, "embeddings"))
     e = _corpus_ext_bits(spark, sf_dir)
     keyed = _keyed_sigs(_corpus_signatures(spark, sf_dir), e)
-    q = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    hp = spark.createDataFrame(
-        [
-            (t, b, h)
-            for t, b, h in [*_HYPERPLANES, *_HYPERPLANES_EXT]
-            if b < LSH_BITS + e
-        ],
-        "t int, b int, h array<double>",
-    )
-    dots = (
-        q.select("query_id", "qe")
-        .crossJoin(F.broadcast(hp))
-        .select("query_id", "t", "b", _dot("qe", "h").alias("d"))
-    )
-    grp = dots.groupBy("query_id", "t").agg(
-        F.sum(
-            F.when(
-                F.col("d") >= 0, F.expr("shiftleft(CAST(1 AS BIGINT), b)")
-            ).otherwise(F.lit(0))
-        )
-        .cast("bigint")
-        .alias("k0"),
-        F.array_sort(
-            F.collect_list(F.struct(F.abs(F.col("d")).alias("ad"), "b"))
-        ).alias("mb"),
-    )
+    grp, keys = _probe_groups(spark, _queries(base), e)
     # pos = 0 <=> the base bucket k0 — i.e. exactly the single-probe
     # leg's bucket set; pos >= 1 are the lowest-margin flip probes.
-    probes = grp.select(
-        "query_id",
-        "t",
-        F.posexplode(
-            F.expr(
-                f"concat(array(k0), transform("
-                f"slice(mb, 1, {MULTIPROBE_FLIPS + e}), "
-                f"s -> CAST(k0 ^ shiftleft(CAST(1 AS BIGINT), s.b) "
-                f"AS BIGINT)))"
-            )
-        ).alias("pos", "k"),
-    )
+    probes = grp.select("query_id", "t", F.posexplode(keys).alias("pos", "k"))
     cand = (
         probes.join(keyed, ["t", "k"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.max(F.col("pos") == 0).alias("in_lsh"))
     )
-    nb = base.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ne"),
-        F.col("nrm").alias("nn"),
-    )
-    scored = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(nb, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "in_lsh",
-            _cos(_dot("qe", "ne"), F.col("qn") * F.col("nn")).alias("cosine"),
-        )
-    )
+    scored = _rescore(cand, base, ["in_lsh"])
     # Both ranks off ONE exchange + sort: row_number is the multiprobe
     # rank; the running sum over in_lsh rows is the row_number the
     # single-probe leg would assign within its (subset) candidate set.
@@ -1810,20 +1678,19 @@ def _kmeans_train(
 KMEANS_NPROBE = 4
 
 
-def _ivf_probe_set(base: DataFrame, cents: DataFrame, bigint: bool = False):
+def _ivf_probe_set(base: DataFrame, cents: DataFrame) -> DataFrame:
     """(query_id, cell): each query's nprobe nearest trained cells —
     rank the K centroid distances per query (Q·K rows, a broadcast
     cross join of the K-row centroid set). Map-only per query; shared
     by the in-memory and the persisted IVF read paths (and by the
     pruning test, which asserts the probe union is a strict subset of
     the index's cells on a clustered corpus)."""
-    cell = F.col("cid").cast("bigint") if bigint else F.col("cid")
     qd2 = (
         base.filter(F.col("vec_id") < N_QUERIES)
         .crossJoin(F.broadcast(cents.select("cid", F.col("v").alias("cv"))))
         .select(
             F.col("vec_id").alias("query_id"),
-            cell.alias("cell"),
+            F.col("cid").alias("cell"),
             _km_d2(F.col("v"), F.col("cv")).alias("d2"),
         )
     )
@@ -1832,6 +1699,36 @@ def _ivf_probe_set(base: DataFrame, cents: DataFrame, bigint: bool = False):
         qd2.withColumn("rn", F.row_number().over(w_probe))
         .filter(F.col("rn") <= KMEANS_NPROBE)
         .select("query_id", "cell")
+    )
+
+
+def _ivf_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, cell, embedding, nrm): every vector in its nearest
+    trained cell — the IVF lists both the in-memory and the persisted
+    read path scan."""
+    base, cents = _kmeans_train(spark, sf_dir)
+    asn = _km_assign(base, cents).select("vec_id", "cell")
+    return asn.join(_normed(read_table(spark, sf_dir, "embeddings")), "vec_id")
+
+
+def _probe_cells(lists: DataFrame, probes: DataFrame, q: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cell, cosine): every list member of each
+    query's probed cells, exactly scored. The probe set and the query
+    vectors both broadcast, so the lists side is one map-only scan —
+    and, for the persisted index, a broadcast join on its partition
+    column, which is what arms dynamic partition pruning."""
+    return (
+        lists.join(F.broadcast(probes), "cell")
+        .join(F.broadcast(q), "query_id")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            "cell",
+            _cos(_dot("qe", "embedding"), F.col("qn") * F.col("nrm")).alias(
+                "cosine"
+            ),
+        )
     )
 
 
@@ -1900,43 +1797,12 @@ def sim_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning, not a shuffle — this query IS the read path that
     ``sim_kmeans_assign``'s offline training job feeds."""
     base, cents = _kmeans_train(spark, sf_dir)
-    asn = _km_assign(base, cents).select("vec_id", "cell")
-    emb = read_table(spark, sf_dir, "embeddings")
-    fullv = emb.select(
-        "vec_id", "embedding", F.sqrt(_norm2("embedding")).alias("nrm")
+    scored = _probe_cells(
+        _ivf_lists(spark, sf_dir),
+        _ivf_probe_set(base, cents),
+        _queries(_normed(read_table(spark, sf_dir, "embeddings"))),
     )
-    lists = asn.join(fullv, "vec_id")
-    probes = _ivf_probe_set(base, cents)
-    q = fullv.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    scored = (
-        lists.join(F.broadcast(probes), "cell")
-        .join(F.broadcast(q), "query_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "cell",
-            _cos(_dot("qe", "embedding"), F.col("qn") * F.col("nrm")).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "rank",
-            "neighbor_id",
-            F.col("cell").cast("bigint").alias("cell"),
-            "cosine",
-        )
-    )
+    return _top_k(scored, [F.col("cell").cast("bigint").alias("cell")])
 
 
 # ---------------------------------------------------------------------------
@@ -1948,46 +1814,30 @@ def sim_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests/test_similarity.py. Same answer set as sim_topk_ivf_kmeans
 # (identical quantizer, nprobe, scoring), so it shares that oracle.
 # ---------------------------------------------------------------------------
-_IVF_INDEX_CACHE: dict[tuple[str, str], tuple[str, "object"]] = {}
+_IVF_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Write the IVF lists (vec_id, embedding, nrm, partitioned by
+    """Commit the IVF lists (vec_id, embedding, nrm, partitioned by
     cell) once per (application, sf_dir) — the offline index build —
-    and return the read-back DataFrame. The store lives under
-    ``_index_root`` (configurable shared storage on a cluster;
-    cleaned-up temp dir in local mode), keyed by a digest of
-    (app, sf_dir) so repeated builds overwrite instead of leak.
+    and return the read-back DataFrame. The store is a SnapshotStore
+    at ``plans.snapshots.index_dir``, like the committed band index.
     Deterministic contents: the k-means quantizer is seeded and
     session-cached, so assignment is a pure function of the corpus.
-    The read passes the written schema EXPLICITLY: an empty corpus
-    writes zero parquet files and zero partition directories, so
-    schema inference on the bare store would fail (caught by the
-    empty-tables differential) — with the schema supplied, an empty
-    index is just an empty scan."""
-    import hashlib
-
+    ``SnapshotStore.read`` takes the schema from the manifest, so an
+    empty corpus (zero files, zero partition dirs) reads back as an
+    empty scan."""
     from ..plans.materialize import session_cached
-    from ..plans.snapshots import index_root
+    from ..plans.snapshots import SnapshotStore, index_dir
 
-    def build() -> tuple[str, "object"]:
-        base, cents = _kmeans_train(spark, sf_dir)
-        asn = _km_assign(base, cents).select(
-            "vec_id", F.col("cell").cast("int").alias("cell")
-        )
-        emb = read_table(spark, sf_dir, "embeddings")
-        fullv = emb.select(
-            "vec_id", "embedding", F.sqrt(_norm2("embedding")).alias("nrm")
-        )
-        lists = asn.join(fullv, "vec_id")
-        key = (spark.sparkContext.applicationId, sf_dir)
-        digest = hashlib.sha256("\x00".join(key).encode()).hexdigest()[:16]
-        path = f"{index_root(spark, 'ivf_index')}/ivf_{digest}"
-        lists.write.mode("overwrite").partitionBy("cell").parquet(path)
-        return path, lists.schema
+    def build() -> DataFrame:
+        store = SnapshotStore(spark, index_dir(spark, "ivf", sf_dir))
+        store.commit({"ivf": _ivf_lists(spark, sf_dir)}, partition_by={"ivf": ["cell"]})
+        # a rebuild after reset_session_caches supersedes the last one
+        store.vacuum(retain_last=1)
+        return store.read("ivf")
 
-    path, schema = session_cached(_IVF_INDEX_CACHE, spark, sf_dir, build)
-    return spark.read.schema(schema).parquet(path)
+    return session_cached(_IVF_INDEX_CACHE, spark, sf_dir, build)
 
 
 @query("sim_topk_ivf_persisted", oracle=_ivf_kmeans_oracle())
@@ -2005,38 +1855,16 @@ def sim_topk_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_similarity.py, with a strict-subset check so the
     assertion can't go vacuously green). No collect, no driver
     round-trip, no literal list to outgrow: the identical plan
-    serves K in the tens of thousands and streams of query batches
-    — the round-6 `isin`-literal form survives only in git history."""
+    serves K in the tens of thousands and streams of query batches.
+    The scan-and-rank tail is ``sim_topk_ivf_kmeans``' own
+    (``_probe_cells``, ``_top_k``); only the lists' source differs."""
     base, cents = _kmeans_train(spark, sf_dir)
-    idx = _ivf_index(spark, sf_dir).withColumn(
-        "cell", F.col("cell").cast("bigint")
+    scored = _probe_cells(
+        _ivf_index(spark, sf_dir),
+        _ivf_probe_set(base, cents),
+        _queries(_normed(read_table(spark, sf_dir, "embeddings"))),
     )
-    probes = _ivf_probe_set(base, cents, bigint=True)
-    emb = read_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.sqrt(_norm2("embedding")).alias("qn"),
-    )
-    scored = (
-        idx.join(F.broadcast(probes), "cell")
-        .join(F.broadcast(q), "query_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "cell",
-            _cos(_dot("qe", "embedding"), F.col("qn") * F.col("nrm")).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", "cell", "cosine")
-    )
+    return _top_k(scored, ["cell"])
 
 
 # ---------------------------------------------------------------------------
@@ -2192,9 +2020,9 @@ def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: the stats pass is one posexplode + per-dim min/max
     agg whose 64-row result collapses to a single broadcast row (the
     codebook); quantize/dequantize are map-only array expressions;
-    the approximate scan reuses the brute-force two-phase top-k
-    discipline; re-scoring touches Q·3k rows. At 100 TB the codes
-    column (64 bytes/vector vs 256+) is what actually sits in the IVF
+    the approximate scan ranks through the brute-force query's
+    ``_two_phase`` top-k; re-scoring touches Q·3k rows. At 100 TB the
+    codes column (64 bytes/vector vs 256+) is what actually sits in the IVF
     lists, and the stats pass runs once offline — determinism here
     (min/max are order-free aggregates, floor/clamp and folds are
     exact IEEE) is what lets the oracle pin the entire path."""
@@ -2207,7 +2035,6 @@ def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fused formula is the oracle's code→dequantize arithmetic
     # composed symbolically — identical double ops in identical
     # order, each element O(1).
-    emb = read_table(spark, sf_dir, "embeddings")
     dnorm = _dequantized_shared(spark, sf_dir)
     q = dnorm.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -2219,51 +2046,11 @@ def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"),
         _cos(_dot("qv", "dv"), F.col("qn") * F.col("dn")).alias("acos"),
     )
-    w_local = Window.partitionBy("query_id", F.spark_partition_id()).orderBy(
-        F.col("acos").desc(), "neighbor_id"
+    cand = _two_phase(approx, "acos", PQ_OVERFETCH * TOP_K).select(
+        "query_id", "neighbor_id"
     )
-    over = PQ_OVERFETCH * TOP_K
-    local = approx.withColumn("r", F.row_number().over(w_local)).filter(
-        F.col("r") <= over
-    )
-    w_global = Window.partitionBy("query_id").orderBy(
-        F.col("acos").desc(), "neighbor_id"
-    )
-    cand = (
-        local.withColumn("arnk", F.row_number().over(w_global))
-        .filter(F.col("arnk") <= over)
-        .select("query_id", "neighbor_id")
-    )
-    fullv = emb.select(
-        "vec_id", "embedding", F.sqrt(_norm2("embedding")).alias("nrm")
-    )
-    qf = fullv.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn2"),
-    )
-    nf = fullv.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ne"),
-        F.col("nrm").alias("nn2"),
-    )
-    rescored = (
-        cand.join(F.broadcast(qf), "query_id")
-        .join(nf, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cos(_dot("qe", "ne"), F.col("qn2") * F.col("nn2")).alias("cosine"),
-        )
-    )
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), "neighbor_id"
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w_final).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    base = _normed(read_table(spark, sf_dir, "embeddings"))
+    return _top_k(_rescore(cand, base, []), [])
 
 
 # ---------------------------------------------------------------------------
@@ -2384,14 +2171,7 @@ def sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned BYTES per row ~4× — multiplicative at scale, where the
     lists are written bucketed by cell and only the codes column is
     resident. Recall vs brute force pinned in pytest."""
-    # Cell assignment rides the session's ``_ivf_cells`` index pass
-    # (round-10) — the identical broadcast-centroid argmax this query
-    # previously re-derived inline.
     asn = _ivf_cells(spark, sf_dir)
-    emb = read_table(spark, sf_dir, "embeddings")
-    fullv = emb.select(
-        "vec_id", "embedding", F.sqrt(_norm2("embedding")).alias("nrm")
-    )
     dnorm = _dequantized_shared(spark, sf_dir)
     lists = (
         asn.filter(F.col("rnk") == 1)
@@ -2417,47 +2197,12 @@ def sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             _cos(_dot("qv", "dv"), F.col("qn") * F.col("dn")).alias("acos"),
         )
     )
-    w_over = Window.partitionBy("query_id").orderBy(
-        F.col("acos").desc(), "neighbor_id"
+    cand = _ranked(approx, ["query_id"], "acos", PQ_OVERFETCH * TOP_K).select(
+        "query_id", "neighbor_id", "cell"
     )
-    cand = (
-        approx.withColumn("arnk", F.row_number().over(w_over))
-        .filter(F.col("arnk") <= PQ_OVERFETCH * TOP_K)
-        .select("query_id", "neighbor_id", "cell")
-    )
-    qf = fullv.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn2"),
-    )
-    nf = fullv.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ne"),
-        F.col("nrm").alias("nn2"),
-    )
-    rescored = (
-        cand.join(F.broadcast(qf), "query_id")
-        .join(nf, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cell",
-            _cos(_dot("qe", "ne"), F.col("qn2") * F.col("nn2")).alias("cosine"),
-        )
-    )
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), "neighbor_id"
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w_final).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "rank",
-            "neighbor_id",
-            F.col("cell").cast("bigint").alias("cell"),
-            "cosine",
-        )
+    base = _normed(read_table(spark, sf_dir, "embeddings"))
+    return _top_k(
+        _rescore(cand, base, ["cell"]), [F.col("cell").cast("bigint").alias("cell")]
     )
 
 

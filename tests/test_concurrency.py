@@ -183,6 +183,31 @@ def test_reset_session_caches_empties_ext_bits(spark, tmp_path):
     assert key not in S._EXT_BITS_CACHE
 
 
+def test_reset_session_caches_deletes_stream_sink(spark, sf_small):
+    """A stream drain's sink and checkpoint live in a scratch dir that
+    ``reset_session_caches`` deletes, so each cold rebuild after a
+    reset leaves no dir behind."""
+    import glob
+    import os
+    import tempfile
+
+    from flat_file_social_media_database_engine_spark.plans.materialize import (
+        reset_session_caches,
+    )
+    from flat_file_social_media_database_engine_spark.workloads import (
+        eventflow as BE,
+    )
+
+    pattern = os.path.join(tempfile.gettempdir(), "*stream_attr_*")
+    reset_session_caches()
+    before = set(glob.glob(pattern))
+    BE.events_stream_attribution(spark, sf_small).collect()
+    sinks = set(glob.glob(pattern)) - before
+    assert sinks
+    reset_session_caches()
+    assert not [d for d in sinks if os.path.exists(d)]
+
+
 def test_stream_drain_leaves_parent_conf_alone(spark, sf_small):
     """A streaming drain runs in its own child session: while a
     sessionize drain runs on one thread, a second thread keeps reading

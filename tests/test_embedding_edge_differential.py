@@ -34,9 +34,11 @@ EMB_QUERIES = [
     "sim_topk_pq",
     "sim_topk_ivf_kmeans",
     "sim_topk_ivfpq",
+    "sim_topk_ivf_persisted",
     "sim_kmeans_assign",
     "sim_neardup_cosine",
     "sim_neardup_lsh",
+    "sim_neardup_regenerated",
     "sim_semantic_dedup",
     "sim_centroid_outliers",
     "sim_embedding_stats",
