@@ -19,6 +19,7 @@ consumer plan is submitted, so all branches read blocks, not lineage.
 
 from __future__ import annotations
 
+import functools
 import threading
 
 from pyspark import StorageLevel
@@ -36,24 +37,25 @@ def materialize(df: DataFrame) -> DataFrame:
     return out
 
 
-# REENTRANT by requirement, not convenience: shared passes are
-# layered (the verified-pair-set build consumes the shingle-array
-# cache; composed queries consume both), so one thread's cold build
-# legitimately re-enters session_cached for its dependency. With a
-# plain Lock that order DEADLOCKS — and it is a real order, hit the
-# first time a session's first query is a downstream consumer like
-# dedup_clusters (callers may invoke queries() entries in any order).
-# Pinned by tests/test_durability.py::test_session_cached_nested_build
-# and the cold-order end-to-end test beside it.
-_SESSION_CACHE_LOCK = threading.RLock()
-
-# Every dict ever handed to session_cached, for reset_session_caches:
-# audit harnesses that call spark.catalog.clearCache() (tools/
-# scaling.py's controlled retest) unregister the persist entries of
-# the memoized frames, and Spark does NOT re-register a cleared
-# persist on next action — the memoized frame would silently replay
-# its full lineage per action while claiming to be a cached pass.
-_REGISTERED_CACHES: list[dict] = []
+# One build lock per session_cached entry, keyed by (id(cache), key),
+# each kept with its cache. Made under the short registry lock; a cold
+# build holds only its own entry's lock, so independent passes build
+# at once, and a build that waits on another thread (a stream's
+# foreachBatch thread asking for a cold pass) does not deadlock. Shared
+# passes are layered (the verified-pair-set build consumes the
+# shingle-array pass), so a build nests session_cached calls for other
+# entries; the registry lock is never held while a build runs. Pinned
+# by tests/test_durability.py::test_session_cached_nested_build and the
+# cold-order, overlap and cross-thread tests beside it.
+#
+# The entries are also what reset_session_caches empties: audit
+# harnesses that call spark.catalog.clearCache() (tools/scaling.py's
+# controlled retest) unregister the persist entries of the memoized
+# frames, and Spark does NOT re-register a cleared persist on next
+# action — the memoized frame would silently replay its full lineage
+# per action while claiming to be a cached pass.
+_REGISTRY_LOCK = threading.Lock()
+_ENTRIES: dict[tuple[int, tuple], tuple[dict, threading.Lock]] = {}
 
 # Every scratch_dir ever made, so reset_session_caches can reclaim the
 # disk: without this, each flagged-query retest in tools/scaling.py
@@ -70,7 +72,7 @@ def scratch_dir(prefix: str) -> str:
     import tempfile
 
     out = tempfile.mkdtemp(prefix=f"sparkgraft_{prefix}_")
-    with _SESSION_CACHE_LOCK:
+    with _REGISTRY_LOCK:
         _PARQUET_DIRS.append(out)
     return out
 
@@ -104,17 +106,24 @@ def reset_session_caches() -> int:
     entries dropped."""
     import shutil
 
-    with _SESSION_CACHE_LOCK:
-        n = 0
-        for cache in _REGISTERED_CACHES:
-            for got in cache.values():
-                _unpersist_value(got)
-            n += len(cache)
-            cache.clear()
-        for d in _PARQUET_DIRS:
-            shutil.rmtree(d, ignore_errors=True)
+    # snapshot under the registry lock, then wait for each entry's
+    # in-flight build with it released: a build that nests takes the
+    # registry lock
+    with _REGISTRY_LOCK:
+        entries = list(_ENTRIES.items())
+    n = 0
+    for (_, key), (cache, lock) in entries:
+        with lock:
+            got = cache.pop(key, None)
+        if got is not None:
+            _unpersist_value(got)
+            n += 1
+    with _REGISTRY_LOCK:
+        dirs = list(_PARQUET_DIRS)
         _PARQUET_DIRS.clear()
-        return n
+    for d in dirs:
+        shutil.rmtree(d, ignore_errors=True)
+    return n
 
 
 def materialize_parquet(spark, df: DataFrame, prefix: str) -> DataFrame:
@@ -144,13 +153,13 @@ def materialize_parquet(spark, df: DataFrame, prefix: str) -> DataFrame:
 
 def session_cached(cache: dict, spark, sf_dir: str, build):
     """THE session-cache protocol for shared expensive passes, in one
-    place (shingle arrays, LSH pair set, span grams, k-means
-    quantizer, hyperplane signatures, dequantize table all use it):
-    memoize ``build()`` per (applicationId, sf_dir) under a
-    double-checked lock, so concurrent cold queries — Spark supports
-    thread-pooled job submission and ``queries()`` hands out
-    independent callables — run the pass ONCE instead of racing past
-    the miss and leaking a loser's persisted blocks.
+    place (every ``@shared_pass`` and the per-table relayouts use it):
+    memoize ``build()`` per (applicationId, sf_dir) under the entry's
+    own lock, double-checked, so concurrent cold callers of one pass —
+    Spark supports thread-pooled job submission and ``queries()`` hands
+    out independent callables — run it ONCE instead of racing past the
+    miss and leaking a loser's persisted blocks, while cold builds of
+    other passes proceed at the same time.
 
     Entries live for the application lifetime by design: the fixture
     dirs are immutable (the charter forbids writing /root/testdata),
@@ -162,11 +171,27 @@ def session_cached(cache: dict, spark, sf_dir: str, build):
     got = cache.get(key)
     if got is not None:
         return got
-    with _SESSION_CACHE_LOCK:
-        if not any(c is cache for c in _REGISTERED_CACHES):
-            _REGISTERED_CACHES.append(cache)
+    with _REGISTRY_LOCK:
+        _, lock = _ENTRIES.setdefault((id(cache), key), (cache, threading.Lock()))
+    with lock:
         got = cache.get(key)
         if got is None:
             got = build()
             cache[key] = got
         return got
+
+
+def shared_pass(fn):
+    """Make ``fn(spark, sf_dir)`` a shared pass: its body is the build,
+    run once per (application, sf_dir) through ``session_cached`` and
+    forgotten by ``reset_session_caches``. The pass's cache is
+    ``fn.cache``. ``session_cached`` is looked up at call time, so a
+    rebinding of the module attribute (a tracer) sees every call."""
+    cache: dict = {}
+
+    @functools.wraps(fn)
+    def cached(spark, sf_dir):
+        return session_cached(cache, spark, sf_dir, lambda: fn(spark, sf_dir))
+
+    cached.cache = cache
+    return cached

@@ -145,14 +145,13 @@ class SnapshotStore:
     buzzdb_lab1.cpp:663-672; this is its snapshot-safe twin).
     """
 
-    def __init__(
-        self, spark: SparkSession, root: str, stale_claim_seconds: float = 300.0
-    ):
+    # how old an unmanifested version claim must be before it is
+    # treated as a crashed writer's debris (see _claim_version)
+    stale_claim_seconds = 300.0
+
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        # how old an unmanifested version claim must be before it is
-        # treated as a crashed writer's debris (see _claim_version)
-        self.stale_claim_seconds = stale_claim_seconds
         os.makedirs(root, exist_ok=True)
 
     # -- pointer ----------------------------------------------------------

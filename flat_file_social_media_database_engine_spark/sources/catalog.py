@@ -57,10 +57,7 @@ def spread(
     ``current_parallelism`` (when the caller knows the scan's real
     task count, e.g. from the parquet footer) skips the ~40 ms
     plan-to-RDD conversion the partition probe otherwise costs."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if input_bytes is not None:
-        target = min(target, max(1, -(-input_bytes // _SPREAD_GRAIN_BYTES)))
+    target = _spread_target(df.sparkSession.sparkContext, input_bytes)
     cur = (
         current_parallelism
         if current_parallelism is not None
@@ -69,6 +66,15 @@ def spread(
     if cur < target:
         return df.repartition(target)
     return df
+
+
+def _spread_target(sc, input_bytes: int | None) -> int:
+    """The partitions a scan is worth: one per ``_SPREAD_GRAIN_BYTES``
+    of ``input_bytes``, at most the cluster's parallelism (all of it
+    when the size is unknown)."""
+    if input_bytes is None:
+        return sc.defaultParallelism
+    return min(sc.defaultParallelism, max(1, -(-input_bytes // _SPREAD_GRAIN_BYTES)))
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -140,11 +146,7 @@ def _relayout(
     order-insensitive and every ordered output orders explicitly); a
     future order-sensitive consumer must bypass read_table or sort."""
     shape = _scan_shape(path)
-    sc = spark.sparkContext
-    target = min(
-        sc.defaultParallelism,
-        max(1, -(-shape["input_bytes"] // _SPREAD_GRAIN_BYTES)),
-    )
+    target = _spread_target(spark.sparkContext, shape["input_bytes"])
     cur = shape["current_parallelism"]
     if target < 2 or target < 2 * cur:
         return df

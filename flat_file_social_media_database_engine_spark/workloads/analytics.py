@@ -15,11 +15,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.rankselect import rank_select
-from ..plans.materialize import materialize, session_cached
+from ..plans.materialize import materialize, shared_pass
 from ..sources.catalog import read_table
 from . import query
-
-_RFM_CACHE: dict = {}
 
 
 def _dsum(col: Column | str) -> Column:
@@ -277,7 +275,26 @@ def a1_conditional_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 _BASKET_CAP = 32
 _MIN_PAIR_ORDERS = 2  # singleton co-occurrences are noise, not rules
-_BASKET_CACHE: dict = {}
+
+
+@shared_pass
+def _baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(okey, parts): each order's sorted distinct part array, orders
+    of more than _BASKET_CAP parts dropped. One scan + one shuffle,
+    materialized: pairs, part frequencies, and the basket total all
+    consume this frame — without the persist each branch re-runs the
+    full scan+groupBy (observed: 4 lineitem scans in the first cut's
+    executed plan)."""
+    li = read_table(spark, sf_dir, "lineitem")
+    return materialize(
+        li.select(
+            F.col("l_orderkey").alias("okey"),
+            F.col("l_partkey").alias("pkey"),
+        )
+        .groupBy("okey")
+        .agg(F.sort_array(F.collect_set("pkey")).alias("parts"))
+        .filter(F.size("parts") <= _BASKET_CAP)
+    )
 
 
 @query(
@@ -316,24 +333,7 @@ def orders_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicts. Float determinism: the only double op is one division
     of two exact integer products (both < 2^53), bit-equal
     cross-engine."""
-    def build() -> DataFrame:
-        # One scan + one shuffle, materialized: pairs, part
-        # frequencies, and the basket total all consume this frame —
-        # without the persist each branch re-runs the full
-        # scan+groupBy (observed: 4 lineitem scans in the first cut's
-        # executed plan).
-        li = read_table(spark, sf_dir, "lineitem")
-        return materialize(
-            li.select(
-                F.col("l_orderkey").alias("okey"),
-                F.col("l_partkey").alias("pkey"),
-            )
-            .groupBy("okey")
-            .agg(F.sort_array(F.collect_set("pkey")).alias("parts"))
-            .filter(F.size("parts") <= _BASKET_CAP)
-        )
-
-    baskets = session_cached(_BASKET_CACHE, spark, sf_dir, build)
+    baskets = _baskets(spark, sf_dir)
     # C(k,2) ordered pairs from the sorted distinct array, map-side:
     # slice is 1-based, so element i (0-based) pairs with everything
     # from position i+2 on — ascending order gives p1 < p2 for free.
@@ -495,6 +495,7 @@ def _with_standard_grand_total(sets: DataFrame) -> DataFrame:
     FROM per_cust
     """,
 )
+@shared_pass
 def orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer RFM quartiles (1 = best: most recent / most
     frequent / highest spend; ties broken by custkey so ntile is a
@@ -521,62 +522,59 @@ def orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     -frequency, -monetary): injective order-reversals, applied
     identically on the lookup and ladder sides."""
 
-    def build() -> DataFrame:
-        per_cust = materialize(
-            read_table(spark, sf_dir, "orders")
-            .groupBy("o_custkey")
-            .agg(
-                F.max("o_orderdate").alias("last_order"),
-                F.count(F.lit(1)).cast("bigint").alias("frequency"),
-                _dsum("o_totalprice").alias("monetary"),
-            )
+    per_cust = materialize(
+        read_table(spark, sf_dir, "orders")
+        .groupBy("o_custkey")
+        .agg(
+            F.max("o_orderdate").alias("last_order"),
+            F.count(F.lit(1)).cast("bigint").alias("frequency"),
+            _dsum("o_totalprice").alias("monetary"),
         )
-        encs = {
-            # last_order is TIMESTAMP_NTZ — encode tz-free (unix_micros
-            # demands an instant; an NTZ→instant cast is not monotonic
-            # across DST fall-backs): microseconds UNTIL a far-future
-            # anchor is strictly decreasing in last_order.
-            "r_quartile": F.expr(
-                "timestampdiff(MICROSECOND, last_order,"
-                " TIMESTAMP_NTZ '3000-01-01 00:00:00')"
-            ).cast("bigint"),
-            "f_quartile": (-F.col("frequency")).cast("bigint"),
-            "m_quartile": -F.col("monetary"),
-        }
-        cuts = {
-            f"c{i}": (
-                lambda i: lambda n: F.lit(i).cast("bigint")
-                * F.floor(n / 4).cast("bigint")
-                + F.least(F.lit(i).cast("bigint"), n % 4)
-            )(i)
-            for i in (1, 2, 3)
-        }
-        out = per_cust
-        for qname, enc in encs.items():
-            keyed = per_cust.select(
-                enc.alias("k"), F.col("o_custkey").alias("ck")
-            )
-            th = rank_select(keyed, [], ["k", "ck"], cuts)
-            bounds = th.select(
-                *[F.col(f"c{i}").alias(f"__{qname}_c{i}") for i in (1, 2, 3)]
-            )
-            key = F.struct(enc.alias("k"), F.col("o_custkey").alias("ck"))
-            out = out.crossJoin(F.broadcast(bounds)).withColumn(
-                qname,
-                F.when(key <= F.col(f"__{qname}_c1"), F.lit(1))
-                .when(key <= F.col(f"__{qname}_c2"), F.lit(2))
-                .when(key <= F.col(f"__{qname}_c3"), F.lit(3))
-                .otherwise(F.lit(4))
-                .cast("bigint"),
-            )
-        return out.select(
-            "o_custkey",
-            "last_order",
-            "frequency",
-            "monetary",
-            "r_quartile",
-            "f_quartile",
-            "m_quartile",
+    )
+    encs = {
+        # last_order is TIMESTAMP_NTZ — encode tz-free (unix_micros
+        # demands an instant; an NTZ→instant cast is not monotonic
+        # across DST fall-backs): microseconds UNTIL a far-future
+        # anchor is strictly decreasing in last_order.
+        "r_quartile": F.expr(
+            "timestampdiff(MICROSECOND, last_order,"
+            " TIMESTAMP_NTZ '3000-01-01 00:00:00')"
+        ).cast("bigint"),
+        "f_quartile": (-F.col("frequency")).cast("bigint"),
+        "m_quartile": -F.col("monetary"),
+    }
+    cuts = {
+        f"c{i}": (
+            lambda i: lambda n: F.lit(i).cast("bigint")
+            * F.floor(n / 4).cast("bigint")
+            + F.least(F.lit(i).cast("bigint"), n % 4)
+        )(i)
+        for i in (1, 2, 3)
+    }
+    out = per_cust
+    for qname, enc in encs.items():
+        keyed = per_cust.select(
+            enc.alias("k"), F.col("o_custkey").alias("ck")
         )
-
-    return session_cached(_RFM_CACHE, spark, sf_dir, build)
+        th = rank_select(keyed, [], ["k", "ck"], cuts)
+        bounds = th.select(
+            *[F.col(f"c{i}").alias(f"__{qname}_c{i}") for i in (1, 2, 3)]
+        )
+        key = F.struct(enc.alias("k"), F.col("o_custkey").alias("ck"))
+        out = out.crossJoin(F.broadcast(bounds)).withColumn(
+            qname,
+            F.when(key <= F.col(f"__{qname}_c1"), F.lit(1))
+            .when(key <= F.col(f"__{qname}_c2"), F.lit(2))
+            .when(key <= F.col(f"__{qname}_c3"), F.lit(3))
+            .otherwise(F.lit(4))
+            .cast("bigint"),
+        )
+    return out.select(
+        "o_custkey",
+        "last_order",
+        "frequency",
+        "monetary",
+        "r_quartile",
+        "f_quartile",
+        "m_quartile",
+    )

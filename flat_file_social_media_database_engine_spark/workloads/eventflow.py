@@ -17,11 +17,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.rankselect import rank_select
-from ..plans.materialize import scratch_dir, session_cached
+from ..plans.materialize import scratch_dir, shared_pass
+# kept bound here: perfbench's test_tracer_rebinds_and_restores_top_level_imports
+from ..plans.materialize import session_cached  # noqa: F401
 from ..sources.catalog import read_table
 from . import ORACLE, query
-
-_PCTL_CACHE: dict = {}
+from .text import _h60, _h60_sql
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes in microseconds
 
@@ -1002,14 +1003,10 @@ CMS_TOPK = 10
 
 
 def _cms_bucket(col, j: int) -> F.Column:
-    from .dedup import _h60
-
     return _h60(F.concat_ws("|", col.cast("string"), F.lit(str(j)))) % CMS_W
 
 
 def _cms_bucket_sql(expr: str, j: str) -> str:
-    from .dedup import _h60_sql
-
     inner = f"CAST({expr} AS VARCHAR) || '|' || CAST({j} AS VARCHAR)"
     return f"{_h60_sql(inner)} % {CMS_W}"
 
@@ -1457,6 +1454,7 @@ def events_dau_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY event_type
     """,
 )
+@shared_pass
 def events_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact p50/p90/p99 per event type, selected by rank (row_number
     with event_id tiebreak — a total order, so the picked element is
@@ -1476,33 +1474,30 @@ def events_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number spec; the pin against the old window formulation at
     all three fixture scales lives in tests/test_rankselect.py."""
 
-    def build() -> DataFrame:
-        events = read_table(spark, sf_dir, "events").filter(
-            # exclude NULL metric values from the rank — standard
-            # percentile semantics, and the engines disagree on NULL
-            # sort placement (Spark NULLS FIRST vs DuckDB NULLS LAST)
-            F.col("value").isNotNull()
-        ).select("event_type", "value", "event_id")
-        cuts = {
-            name: (lambda p: lambda n: F.ceil(F.lit(p) * n))(p)
-            for name, p in (("p50", 0.50), ("p90", 0.90), ("p99", 0.99))
-        }
-        sel = rank_select(
-            events,
-            ["event_type"],
-            ["value", "event_id"],
-            cuts,
-            total_col="n_events",
-        )
-        return sel.select(
-            "event_type",
-            F.col("n_events").cast("bigint").alias("n_events"),
-            F.col("p50").getField("value").alias("p50"),
-            F.col("p90").getField("value").alias("p90"),
-            F.col("p99").getField("value").alias("p99"),
-        )
-
-    return session_cached(_PCTL_CACHE, spark, sf_dir, build)
+    events = read_table(spark, sf_dir, "events").filter(
+        # exclude NULL metric values from the rank — standard
+        # percentile semantics, and the engines disagree on NULL
+        # sort placement (Spark NULLS FIRST vs DuckDB NULLS LAST)
+        F.col("value").isNotNull()
+    ).select("event_type", "value", "event_id")
+    cuts = {
+        name: (lambda p: lambda n: F.ceil(F.lit(p) * n))(p)
+        for name, p in (("p50", 0.50), ("p90", 0.90), ("p99", 0.99))
+    }
+    sel = rank_select(
+        events,
+        ["event_type"],
+        ["value", "event_id"],
+        cuts,
+        total_col="n_events",
+    )
+    return sel.select(
+        "event_type",
+        F.col("n_events").cast("bigint").alias("n_events"),
+        F.col("p50").getField("value").alias("p50"),
+        F.col("p90").getField("value").alias("p90"),
+        F.col("p99").getField("value").alias("p99"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1517,7 +1512,6 @@ def events_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the fixture replay delivers everything before any watermark
 # eviction, so the streamed result set EQUALS the batch join.
 # ---------------------------------------------------------------------------
-_STREAM_ATTR_CACHE: dict = {}
 
 
 @query(
@@ -1539,6 +1533,7 @@ _STREAM_ATTR_CACHE: dict = {}
      AND c.click_ts > p.purchase_ts - INTERVAL 1 HOUR
     """,
 )
+@shared_pass
 def events_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every (purchase, click) pair of the same user with the click in
     the purchase's trailing hour — computed on the STREAMING path
@@ -1560,45 +1555,42 @@ def events_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     of state per side; the sink is append-only files — no driver
     collect anywhere."""
 
-    def build() -> DataFrame:
-        from ..streaming.events import (
-            attribution_join_stream,
-            read_events_stream,
-            run_stream_to_parquet,
-        )
+    from ..streaming.events import (
+        attribution_join_stream,
+        read_events_stream,
+        run_stream_to_parquet,
+    )
 
-        # Single micro-batch over the whole source: a multi-part-file
-        # table streamed one-file-per-trigger could advance the
-        # watermark past rows in later files (file order is mtime, not
-        # event time) and silently drop joins the batch oracle keeps.
-        # Measured (round 8): the event-time-ordered weekly staging
-        # that WOULD make multi-batch watermark-safe (same rows —
-        # differential pinned in tests/test_streaming.py) costs 24.9s
-        # vs 15.4s cold at sf0.1 — each local micro-batch pays fixed
-        # state-store commit overhead — so the single batch IS the
-        # wall-clock floor at fixture scale. The round-7 regression
-        # root cause was state-store count, not batch shape: a
-        # stream-stream join keeps 4 state stores per shuffle
-        # partition and commits each per batch; sizing state
-        # partitions to stream volume (STREAM_STATE_PARTITIONS = 8)
-        # cut the warm wall 7.5s → 2.5s, identical result.
-        got = run_stream_to_parquet(
-            spark,
-            lambda s: attribution_join_stream(
-                read_events_stream(s, sf_dir, max_files_per_trigger=1_000_000)
-            ),
-            "stream_attr",
-            "purchase_id bigint, user_id bigint,"
-            " purchase_ts timestamp, click_ts timestamp",
-        )
-        return got.select(
-            "purchase_id",
-            "user_id",
-            F.col("purchase_ts").cast("timestamp_ntz").alias("purchase_ts"),
-            F.col("click_ts").cast("timestamp_ntz").alias("click_ts"),
-        )
-
-    return session_cached(_STREAM_ATTR_CACHE, spark, sf_dir, build)
+    # Single micro-batch over the whole source: a multi-part-file
+    # table streamed one-file-per-trigger could advance the
+    # watermark past rows in later files (file order is mtime, not
+    # event time) and silently drop joins the batch oracle keeps.
+    # Measured (round 8): the event-time-ordered weekly staging
+    # that WOULD make multi-batch watermark-safe (same rows —
+    # differential pinned in tests/test_streaming.py) costs 24.9s
+    # vs 15.4s cold at sf0.1 — each local micro-batch pays fixed
+    # state-store commit overhead — so the single batch IS the
+    # wall-clock floor at fixture scale. The round-7 regression
+    # root cause was state-store count, not batch shape: a
+    # stream-stream join keeps 4 state stores per shuffle
+    # partition and commits each per batch; sizing state
+    # partitions to stream volume (STREAM_STATE_PARTITIONS = 8)
+    # cut the warm wall 7.5s → 2.5s, identical result.
+    got = run_stream_to_parquet(
+        spark,
+        lambda s: attribution_join_stream(
+            read_events_stream(s, sf_dir, max_files_per_trigger=1_000_000)
+        ),
+        "stream_attr",
+        "purchase_id bigint, user_id bigint,"
+        " purchase_ts timestamp, click_ts timestamp",
+    )
+    return got.select(
+        "purchase_id",
+        "user_id",
+        F.col("purchase_ts").cast("timestamp_ntz").alias("purchase_ts"),
+        F.col("click_ts").cast("timestamp_ntz").alias("click_ts"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1608,7 +1600,6 @@ def events_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rather than match emission). The drain problem and its sentinel
 # solution live in streaming/events.py::stage_events_with_sentinels.
 # ---------------------------------------------------------------------------
-_STREAM_SESS_CACHE: dict = {}
 
 
 @query(
@@ -1642,6 +1633,7 @@ _STREAM_SESS_CACHE: dict = {}
     GROUP BY user_id, session_id
     """,
 )
+@shared_pass
 def events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """30-minute-gap sessions per user computed on the STREAMING path
     in APPEND mode: readStream → ``session_window`` aggregation
@@ -1681,39 +1673,36 @@ def events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same lesson as attribution, now measured on the
     state-finalization path too."""
 
-    def build() -> DataFrame:
-        from ..streaming.events import (
-            SENTINEL_USER,
-            read_staged_events_stream,
-            run_stream_to_parquet,
-            sessionize,
-            stage_events_with_sentinels,
-        )
+    from ..streaming.events import (
+        SENTINEL_USER,
+        read_staged_events_stream,
+        run_stream_to_parquet,
+        sessionize,
+        stage_events_with_sentinels,
+    )
 
-        # The stager consolidates any multi-part source into ONE real
-        # file, so one-file-per-trigger always yields the exact
-        # three-batch drain sequence: all real rows (watermark 0 —
-        # inter-file event-time order can never drop a row as late),
-        # then each sentinel in its own batch.
-        stage = stage_events_with_sentinels(spark, sf_dir)
-        got = run_stream_to_parquet(
-            spark,
-            lambda s: sessionize(read_staged_events_stream(s, stage)),
-            "stream_sess",
-            "user_id bigint, session_start timestamp,"
-            " session_end timestamp, n_events bigint",
-        )
-        # eqNullSafe: a plain != evaluates NULL for null-user sessions
-        # (logged-out traffic) and would silently drop rows the oracle
-        # and the batch twin both keep
-        return got.filter(~F.col("user_id").eqNullSafe(SENTINEL_USER)).select(
-            "user_id",
-            F.col("session_start").cast("timestamp_ntz").alias("session_start"),
-            F.col("session_end").cast("timestamp_ntz").alias("session_end"),
-            "n_events",
-        )
-
-    return session_cached(_STREAM_SESS_CACHE, spark, sf_dir, build)
+    # The stager consolidates any multi-part source into ONE real
+    # file, so one-file-per-trigger always yields the exact
+    # three-batch drain sequence: all real rows (watermark 0 —
+    # inter-file event-time order can never drop a row as late),
+    # then each sentinel in its own batch.
+    stage = stage_events_with_sentinels(spark, sf_dir)
+    got = run_stream_to_parquet(
+        spark,
+        lambda s: sessionize(read_staged_events_stream(s, stage)),
+        "stream_sess",
+        "user_id bigint, session_start timestamp,"
+        " session_end timestamp, n_events bigint",
+    )
+    # eqNullSafe: a plain != evaluates NULL for null-user sessions
+    # (logged-out traffic) and would silently drop rows the oracle
+    # and the batch twin both keep
+    return got.filter(~F.col("user_id").eqNullSafe(SENTINEL_USER)).select(
+        "user_id",
+        F.col("session_start").cast("timestamp_ntz").alias("session_start"),
+        F.col("session_end").cast("timestamp_ntz").alias("session_end"),
+        "n_events",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1729,7 +1718,6 @@ def events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scheduling of the shipped clamp (state wiped for any user absent
 # from batch 2) — see running_net_clamp_micro's timeout comment.
 # ---------------------------------------------------------------------------
-_STREAM_CLAMP_CACHE: dict = {}
 
 
 @query(
@@ -1764,6 +1752,7 @@ _STREAM_CLAMP_CACHE: dict = {}
     FROM fold WHERE k = nk
     """,
 )
+@shared_pass
 def events_stream_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user running net-sum of ``value``, clamped at zero once per
     micro-batch, computed by the CUSTOM STATEFUL OPERATOR
@@ -1799,40 +1788,37 @@ def events_stream_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per touched user per batch into append-only files; the
     final aggregation shuffles (user_id)-keyed rows once."""
 
-    def build() -> DataFrame:
-        from ..streaming.events import (
-            read_staged_events_stream,
-            run_stream_to_parquet,
-            running_net_clamp_micro,
-            stage_events_daily,
-        )
+    from ..streaming.events import (
+        read_staged_events_stream,
+        run_stream_to_parquet,
+        running_net_clamp_micro,
+        stage_events_daily,
+    )
 
-        out_schema = "user_id bigint, cum_micro bigint, n_events bigint"
-        stage, n_days = stage_events_daily(spark, sf_dir, unit="week")
-        if n_days == 0:
-            return spark.createDataFrame([], out_schema)
-        log = run_stream_to_parquet(
-            spark,
-            lambda s: running_net_clamp_micro(
-                read_staged_events_stream(s, stage),
-                retention_ms=90 * 24 * 3600 * 1000,  # past the fixture span
-            ),
-            "stream_clamp",
-            out_schema,
-            output_mode="update",
-            stamp_epoch=True,
+    out_schema = "user_id bigint, cum_micro bigint, n_events bigint"
+    stage, n_days = stage_events_daily(spark, sf_dir, unit="week")
+    if n_days == 0:
+        return spark.createDataFrame([], out_schema)
+    log = run_stream_to_parquet(
+        spark,
+        lambda s: running_net_clamp_micro(
+            read_staged_events_stream(s, stage),
+            retention_ms=90 * 24 * 3600 * 1000,  # past the fixture span
+        ),
+        "stream_clamp",
+        out_schema,
+        output_mode="update",
+        stamp_epoch=True,
+    )
+    return (
+        log.groupBy("user_id")
+        .agg(F.max(F.struct("batch_id", "cum_micro", "n_events")).alias("s"))
+        .select(
+            "user_id",
+            F.col("s.cum_micro").alias("cum_micro"),
+            F.col("s.n_events").alias("n_events"),
         )
-        return (
-            log.groupBy("user_id")
-            .agg(F.max(F.struct("batch_id", "cum_micro", "n_events")).alias("s"))
-            .select(
-                "user_id",
-                F.col("s.cum_micro").alias("cum_micro"),
-                F.col("s.n_events").alias("n_events"),
-            )
-        )
-
-    return session_cached(_STREAM_CLAMP_CACHE, spark, sf_dir, build)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1845,7 +1831,6 @@ def events_stream_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
 # source eventually produces) and the oracle — simply the events
 # table — proves every row landed exactly once anyway.
 # ---------------------------------------------------------------------------
-_STREAM_INGEST_CACHE: dict = {}
 
 
 @query(
@@ -1855,6 +1840,7 @@ _STREAM_INGEST_CACHE: dict = {}
     FROM events WHERE ts IS NOT NULL
     """,
 )
+@shared_pass
 def events_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream the events fixture through the exactly-once snapshot
     sink (one ``SnapshotStore.append`` commit per micro-batch, batch
@@ -1881,54 +1867,51 @@ def events_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``SnapshotStore.compact``; the redelivery probe reads back only
     the committed manifest head. Nothing collects to the driver."""
 
-    def build() -> DataFrame:
-        import os
+    import os
 
-        from ..plans.snapshots import SnapshotStore
-        from ..streaming.events import (
-            read_staged_events_stream,
-            stage_events_daily,
-        )
-        from ..streaming.ingest import _marker, append_stream, make_batch_sink
+    from ..plans.snapshots import SnapshotStore
+    from ..streaming.events import (
+        read_staged_events_stream,
+        stage_events_daily,
+    )
+    from ..streaming.ingest import _marker, append_stream, make_batch_sink
 
-        out_schema = (
-            "event_id bigint, ts timestamp_ntz, user_id bigint,"
-            " event_type string, value double, props string"
-        )
-        stage, n_weeks = stage_events_daily(spark, sf_dir, unit="week")
-        if n_weeks == 0:
-            return spark.createDataFrame([], out_schema)
-        base = scratch_dir("stream_ingest")
-        store = SnapshotStore(spark, os.path.join(base, "store"))
-        q = append_stream(
-            store,
-            read_staged_events_stream(spark, stage),
-            "events",
-            os.path.join(base, "ckpt"),
-            stream_id="driver",
-        )
-        q.awaitTermination()
-        # Crash-replay probe: redeliver under the last COMMITTED id.
-        sink = make_batch_sink(store, "events", stream_id="driver")
-        last = store.meta()[_marker("driver", "events")]
-        sink(store.read("events"), last)
-        # Table maintenance under streaming ingest: per-batch appends
-        # grow the manifest's file list unboundedly at 100 TB, so the
-        # production loop periodically compacts; running it here keeps
-        # the whole lifecycle — N append commits + replayed commit +
-        # compaction rewrite — under the same whole-table oracle
-        # (compaction must preserve contents AND the batch-id marker:
-        # the meta carries forward, so a post-compaction redelivery is
-        # still a no-op).
-        store.compact("events")
-        sink(store.read("events"), last)  # replay AFTER compaction
-        return store.read("events").select(
-            "event_id",
-            F.col("ts").cast("timestamp_ntz").alias("ts"),
-            "user_id",
-            "event_type",
-            "value",
-            "props",
-        )
-
-    return session_cached(_STREAM_INGEST_CACHE, spark, sf_dir, build)
+    out_schema = (
+        "event_id bigint, ts timestamp_ntz, user_id bigint,"
+        " event_type string, value double, props string"
+    )
+    stage, n_weeks = stage_events_daily(spark, sf_dir, unit="week")
+    if n_weeks == 0:
+        return spark.createDataFrame([], out_schema)
+    base = scratch_dir("stream_ingest")
+    store = SnapshotStore(spark, os.path.join(base, "store"))
+    q = append_stream(
+        store,
+        read_staged_events_stream(spark, stage),
+        "events",
+        os.path.join(base, "ckpt"),
+        stream_id="driver",
+    )
+    q.awaitTermination()
+    # Crash-replay probe: redeliver under the last COMMITTED id.
+    sink = make_batch_sink(store, "events", stream_id="driver")
+    last = store.meta()[_marker("driver", "events")]
+    sink(store.read("events"), last)
+    # Table maintenance under streaming ingest: per-batch appends
+    # grow the manifest's file list unboundedly at 100 TB, so the
+    # production loop periodically compacts; running it here keeps
+    # the whole lifecycle — N append commits + replayed commit +
+    # compaction rewrite — under the same whole-table oracle
+    # (compaction must preserve contents AND the batch-id marker:
+    # the meta carries forward, so a post-compaction redelivery is
+    # still a no-op).
+    store.compact("events")
+    sink(store.read("events"), last)  # replay AFTER compaction
+    return store.read("events").select(
+        "event_id",
+        F.col("ts").cast("timestamp_ntz").alias("ts"),
+        "user_id",
+        "event_type",
+        "value",
+        "props",
+    )

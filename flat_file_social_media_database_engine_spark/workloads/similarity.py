@@ -35,6 +35,7 @@ import random
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans.materialize import materialize, shared_pass
 from ..sources.catalog import read_table
 from . import query
 
@@ -344,24 +345,17 @@ def _signatures(spark: SparkSession, vecs: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_pass
 def _corpus_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus-side (vec_id, t, sig) signature table, materialized
     once per (application, sf_dir) for the LSH consumers (single-probe
     top-k, multi-probe top-k, bucketed near-dup, the recall audit).
     Same policy as ``_kmeans_train``'s cache and the dedup tier's
     shared passes."""
-    from ..plans.materialize import materialize, session_cached
-
-    def build():
-        emb = read_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "embedding"
-        )
-        return materialize(_signatures(spark, emb, "vec_id"))
-
-    return session_cached(_SIG_CACHE, spark, sf_dir, build)
+    emb = read_table(spark, sf_dir, "embeddings").select(
+        "vec_id", "embedding"
+    )
+    return materialize(_signatures(spark, emb, "vec_id"))
 
 
 def _lsh_sig_ctes() -> str:
@@ -400,20 +394,14 @@ def _lsh_sig_ctes() -> str:
     )"""
 
 
-_EXT_BITS_CACHE: dict[tuple[str, str], int] = {}
-
-
+@shared_pass
 def _corpus_ext_bits(spark: SparkSession, sf_dir: str) -> int:
     """Extension-bit count for the adaptive LSH bucket keys, from the
     corpus row count (one count job, cached per (application,
     sf_dir)). 0 on the driver fixtures — see the ladder note at
     ``_ext_bits``."""
-    from ..plans.materialize import session_cached
 
-    def build():
-        return _ext_bits(read_table(spark, sf_dir, "embeddings").count())
-
-    return session_cached(_EXT_BITS_CACHE, spark, sf_dir, build)
+    return _ext_bits(read_table(spark, sf_dir, "embeddings").count())
 
 
 def _keyed_sigs(sigs: DataFrame, ext: int) -> DataFrame:
@@ -853,25 +841,18 @@ def _bucket_neardups(base: DataFrame, sigs: DataFrame, hot: DataFrame) -> DataFr
     return _verify_pairs(cand, base)
 
 
-_HOT_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_pass
 def _hot_sig_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Over-cap (t, k) bucket keys — k is the ADAPTIVE near-dup key
     (base sig + ext bits) — computed once per (application, sf_dir)
     and materialized; rows-of-hot-buckets tiny (empty on the
     fixtures), derived by one count pass over the session-cached
     signature table; same policy as dedup._hot_band_keys."""
-    from ..plans.materialize import materialize, session_cached
-
-    def build():
-        sigs = _keyed_sigs(
-            _corpus_signatures(spark, sf_dir),
-            _corpus_ext_bits(spark, sf_dir),
-        )
-        return materialize(_over_cap(sigs, _EMB_BUCKET_CAP))
-
-    return session_cached(_HOT_SIG_CACHE, spark, sf_dir, build)
+    sigs = _keyed_sigs(
+        _corpus_signatures(spark, sf_dir),
+        _corpus_ext_bits(spark, sf_dir),
+    )
+    return materialize(_over_cap(sigs, _EMB_BUCKET_CAP))
 
 
 def _keyed_sig_ctes() -> str:
@@ -908,9 +889,7 @@ def _neardup_lsh_oracle() -> str:
     """
 
 
-_NEARDUP_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_pass
 def _neardup_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The VERIFIED embedding near-dup pair set (vec_id_a, vec_id_b,
     cosine ≥ threshold) of the corpus signature table, through
@@ -926,22 +905,17 @@ def _neardup_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors ⇒ zero candidates). The ladder keeps expected occupancy
     in the dozens through ~2M vectors while the driver fixtures
     (ext=0) keep the 7-bit key."""
-    from ..plans.materialize import materialize, session_cached
-
-    def build() -> DataFrame:
-        sigs = _keyed_sigs(
-            _corpus_signatures(spark, sf_dir),
-            _corpus_ext_bits(spark, sf_dir),
+    sigs = _keyed_sigs(
+        _corpus_signatures(spark, sf_dir),
+        _corpus_ext_bits(spark, sf_dir),
+    )
+    return materialize(
+        _bucket_neardups(
+            _normed(read_table(spark, sf_dir, "embeddings")),
+            sigs,
+            _hot_sig_keys(spark, sf_dir),
         )
-        return materialize(
-            _bucket_neardups(
-                _normed(read_table(spark, sf_dir, "embeddings")),
-                sigs,
-                _hot_sig_keys(spark, sf_dir),
-            )
-        )
-
-    return session_cached(_NEARDUP_PAIRS_CACHE, spark, sf_dir, build)
+    )
 
 
 @query("sim_neardup_lsh", oracle=_neardup_lsh_oracle())
@@ -1189,9 +1163,7 @@ def _ivf_oracle() -> str:
     """
 
 
-_IVF_CELLS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_pass
 def _ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cid, rnk<=IVF_NPROBE): every vector's nprobe nearest
     sampled centroids — the ASSIGNMENT half of the IVF index,
@@ -1207,36 +1179,31 @@ def _ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     index-sized (N·nprobe narrow rows); rnk==1 is the list
     assignment, the query rows' rnk<=nprobe are the probe sets.
     Measured (sf0.1): sim_topk_ivf 1.14 -> 0.60 s warm."""
-    from ..plans.materialize import materialize, session_cached
-
-    def build():
-        base = _normed(read_table(spark, sf_dir, "embeddings"))
-        cents = _side(base.filter(F.col("vec_id") < IVF_CENTROIDS), "cid", "ce", "cn")
-        asn = (
-            base.join(F.broadcast(cents))
-            .select(
-                "vec_id",
-                "cid",
-                _cos(
-                    _dot("embedding", "ce"), F.col("nrm") * F.col("cn")
-                ).alias("cos_c"),
-            )
-            .withColumn(
-                "rnk",
-                F.row_number().over(
-                    Window.partitionBy("vec_id").orderBy(
-                        F.col("cos_c").desc(), "cid"
-                    )
-                ),
-            )
+    base = _normed(read_table(spark, sf_dir, "embeddings"))
+    cents = _side(base.filter(F.col("vec_id") < IVF_CENTROIDS), "cid", "ce", "cn")
+    asn = (
+        base.join(F.broadcast(cents))
+        .select(
+            "vec_id",
+            "cid",
+            _cos(
+                _dot("embedding", "ce"), F.col("nrm") * F.col("cn")
+            ).alias("cos_c"),
         )
-        return materialize(
-            asn.filter(F.col("rnk") <= IVF_NPROBE).select(
-                "vec_id", "cid", "rnk"
-            )
+        .withColumn(
+            "rnk",
+            F.row_number().over(
+                Window.partitionBy("vec_id").orderBy(
+                    F.col("cos_c").desc(), "cid"
+                )
+            ),
         )
-
-    return session_cached(_IVF_CELLS_CACHE, spark, sf_dir, build)
+    )
+    return materialize(
+        asn.filter(F.col("rnk") <= IVF_NPROBE).select(
+            "vec_id", "cid", "rnk"
+        )
+    )
 
 
 @query("sim_topk_ivf", oracle=_ivf_oracle())
@@ -1311,6 +1278,16 @@ def _ann_recall_oracle() -> str:
     """
 
 
+@shared_pass
+def _truth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The exact top-k (query_id, neighbor_id) set every leg of the
+    recall audit is scored against, materialized once per
+    (application, sf_dir)."""
+    return materialize(
+        sim_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
+    )
+
+
 @query("sim_recall_audit", oracle=_ann_recall_oracle())
 def sim_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of each approximate top-k index against the exact
@@ -1358,16 +1335,7 @@ def sim_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     output value are UNCHANGED (hash-green vs the unchanged composed
     oracle, which still recomputes all three legs independently);
     measured 2.36 -> 1.56 s warm at sf0.1."""
-    from ..plans.materialize import materialize, session_cached
-
-    truth = session_cached(
-        _TRUTH_CACHE,
-        spark,
-        sf_dir,
-        lambda: materialize(
-            sim_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-        ),
-    )
+    truth = _truth(spark, sf_dir)
     base = _normed(read_table(spark, sf_dir, "embeddings"))
     e = _corpus_ext_bits(spark, sf_dir)
     keyed = _keyed_sigs(_corpus_signatures(spark, sf_dir), e)
@@ -1456,8 +1424,6 @@ def sim_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "recall", F.col("n_caught") / F.col("n_true")
     )
 
-
-_TRUTH_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 # ---------------------------------------------------------------------------
@@ -1600,9 +1566,7 @@ def sim_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KMEANS_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
+@shared_pass
 def _kmeans_train(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -1620,51 +1584,46 @@ def _kmeans_train(
     once each; the trained centroids are materialized too (K rows,
     trivial) or every consumer would replay the Lloyd joins from the
     cached base."""
-    from ..plans.materialize import materialize, session_cached
-
-    def build():
-        emb = read_table(spark, sf_dir, "embeddings")
-        base = materialize(
-            emb.select(
-                "vec_id",
-                F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+    emb = read_table(spark, sf_dir, "embeddings")
+    base = materialize(
+        emb.select(
+            "vec_id",
+            F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+        )
+    )
+    cents = base.filter(F.col("vec_id") < KMEANS_K).select(
+        F.col("vec_id").alias("cid"), "v"
+    )
+    zero_v = F.array_repeat(F.lit(0.0), _DIM)
+    for _ in range(KMEANS_ITERS):
+        asn = _km_assign(base, cents)
+        upd = (
+            asn.groupBy("cell")
+            .agg(
+                F.sort_array(
+                    F.collect_list(F.struct(F.col("vec_id"), F.col("v")))
+                ).alias("ms")
             )
-        )
-        cents = base.filter(F.col("vec_id") < KMEANS_K).select(
-            F.col("vec_id").alias("cid"), "v"
-        )
-        zero_v = F.array_repeat(F.lit(0.0), _DIM)
-        for _ in range(KMEANS_ITERS):
-            asn = _km_assign(base, cents)
-            upd = (
-                asn.groupBy("cell")
-                .agg(
-                    F.sort_array(
-                        F.collect_list(F.struct(F.col("vec_id"), F.col("v")))
-                    ).alias("ms")
-                )
-                .select(
-                    F.col("cell").alias("cid"),
-                    F.transform(
-                        F.aggregate(
-                            F.col("ms"),
-                            zero_v,
-                            lambda acc, m: F.zip_with(
-                                acc, m["v"], lambda a, x: a + x
-                            ),
+            .select(
+                F.col("cell").alias("cid"),
+                F.transform(
+                    F.aggregate(
+                        F.col("ms"),
+                        zero_v,
+                        lambda acc, m: F.zip_with(
+                            acc, m["v"], lambda a, x: a + x
                         ),
-                        lambda s: s / F.size("ms"),
-                    ).alias("v"),
-                )
+                    ),
+                    lambda s: s / F.size("ms"),
+                ).alias("v"),
             )
-            cents = (
-                cents.alias("c")
-                .join(upd.alias("u"), "cid", "left")
-                .select("cid", F.coalesce(F.col("u.v"), F.col("c.v")).alias("v"))
-            )
-        return base, materialize(cents)
-
-    return session_cached(_KMEANS_CACHE, spark, sf_dir, build)
+        )
+        cents = (
+            cents.alias("c")
+            .join(upd.alias("u"), "cid", "left")
+            .select("cid", F.coalesce(F.col("u.v"), F.col("c.v")).alias("v"))
+        )
+    return base, materialize(cents)
 
 
 # ---------------------------------------------------------------------------
@@ -1814,9 +1773,9 @@ def sim_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests/test_similarity.py. Same answer set as sim_topk_ivf_kmeans
 # (identical quantizer, nprobe, scoring), so it shares that oracle.
 # ---------------------------------------------------------------------------
-_IVF_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
+@shared_pass
 def _ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Commit the IVF lists (vec_id, embedding, nrm, partitioned by
     cell) once per (application, sf_dir) — the offline index build —
@@ -1827,17 +1786,13 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``SnapshotStore.read`` takes the schema from the manifest, so an
     empty corpus (zero files, zero partition dirs) reads back as an
     empty scan."""
-    from ..plans.materialize import session_cached
     from ..plans.snapshots import SnapshotStore, index_dir
 
-    def build() -> DataFrame:
-        store = SnapshotStore(spark, index_dir(spark, "ivf", sf_dir))
-        store.commit({"ivf": _ivf_lists(spark, sf_dir)}, partition_by={"ivf": ["cell"]})
-        # a rebuild after reset_session_caches supersedes the last one
-        store.vacuum(retain_last=1)
-        return store.read("ivf")
-
-    return session_cached(_IVF_INDEX_CACHE, spark, sf_dir, build)
+    store = SnapshotStore(spark, index_dir(spark, "ivf", sf_dir))
+    store.commit({"ivf": _ivf_lists(spark, sf_dir)}, partition_by={"ivf": ["cell"]})
+    # a rebuild after reset_session_caches supersedes the last one
+    store.vacuum(retain_last=1)
+    return store.read("ivf")
 
 
 @query("sim_topk_ivf_persisted", oracle=_ivf_kmeans_oracle())
@@ -1992,21 +1947,14 @@ def _dequantized(emb: DataFrame) -> DataFrame:
     ).select("vec_id", "dv", F.sqrt(_dot("dv", "dv")).alias("dn"))
 
 
-_DEQ_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_pass
 def _dequantized_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The quantize→dequantize corpus pass, materialized once per
     (application, sf_dir) for its two consumers (flat PQ and IVF-PQ)
     — the codebook stats agg and the per-element dequantize formula
     run once per session instead of once per query."""
-    from ..plans.materialize import materialize, session_cached
-
-    def build():
-        emb = read_table(spark, sf_dir, "embeddings")
-        return materialize(_dequantized(emb))
-
-    return session_cached(_DEQ_CACHE, spark, sf_dir, build)
+    emb = read_table(spark, sf_dir, "embeddings")
+    return materialize(_dequantized(emb))
 
 
 @query("sim_topk_pq", oracle=_pq_oracle())

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.materialize import materialize, shared_pass
 from ..sources.catalog import read_table
 from . import query
 
@@ -70,6 +71,22 @@ def _sql_in(words: tuple[str, ...]) -> str:
 def _in_set(words: tuple[str, ...]):
     """Unary lambda factory for F.filter membership tests."""
     return lambda t: t.isin(*words)
+
+
+def _h60(c: Column) -> Column:
+    """60-bit integer hash: first 15 hex chars of md5. Bit-identical
+    across engines (md5 is; xxhash64 is not in DuckDB)."""
+    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
+
+
+def _h60_sql(expr: str) -> str:
+    return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
+
+
+def _salted_h60(salt: str) -> Column:
+    """``_h60`` of ``'<salt>-<doc_id>'``: a sampler's per-doc hash, one
+    salt per sampler so independent samplers decorrelate."""
+    return _h60(F.concat(F.lit(salt + "-"), F.col("doc_id").cast("string")))
 
 
 # ---------------------------------------------------------------------------
@@ -534,15 +551,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate = F.lit(None).cast("double")
     for i, r in reversed(list(enumerate(_SAMPLE_RATES))):
         rate = F.when(src_idx == i, F.lit(r)).otherwise(rate)
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(_SAMPLE_SALT + "-"), F.col("doc_id").cast("string"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    h = _salted_h60(_SAMPLE_SALT)
     return (
         docs.select("doc_id", "source", rate.alias("keep_rate"), h.alias("h"))
         .filter(F.col("h") < F.col("keep_rate") * F.lit(_H60_MAX))
@@ -596,8 +605,6 @@ _TEMP_SALT = "temp-v1"
 def sample_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """α=0.5 temperature sampling: survivors per language ∝
     sqrt(n_lang), anchored so the smallest language keeps everything."""
-    from ..plans.materialize import materialize
-
     docs = read_table(spark, sf_dir, "documents")
     # |langs| rows, materialized: both consumers (the rate join and
     # the one-row min) otherwise re-run the counting scan — one fewer
@@ -612,19 +619,7 @@ def sample_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(mn))
     )
     keep_rate = F.sqrt(F.col("n_min") / F.col("n_lang").cast("double"))
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit(_TEMP_SALT + "-"), F.col("doc_id").cast("string")
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    h = _salted_h60(_TEMP_SALT)
     return (
         rated.select(
             "doc_id", "lang", keep_rate.alias("keep_rate"), h.alias("h")
@@ -735,8 +730,6 @@ def text_commonness_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the dictionary side broadcasts (vocabulary grows ~log of
     corpus size; at 100 TB it is still executor-memory sized, and if
     it ever is not, the join key is already the shuffle key)."""
-    from ..plans.materialize import materialize
-
     docs = read_table(spark, sf_dir, "documents")
     tok = materialize(
         docs.select("doc_id", F.explode(_tokens()).alias("token"))
@@ -793,17 +786,7 @@ _SPLIT_SALT = "split-v1"  # decorrelated from mix-v1 / trainmix-v1
 )
 def sample_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(F.lit(_SPLIT_SALT + "-"), F.col("doc_id").cast("string"))
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    h = _salted_h60(_SPLIT_SALT)
     bucket = h % 100
     split = (
         F.when(bucket < 98, F.lit("train"))
@@ -848,25 +831,19 @@ _BIGRAMS_SQL = (
     "i -> toks[i] || ' ' || toks[i+1])"
 )
 
-_TOKEN_ARRAYS_CACHE: dict = {}
-_BIGRAM_DICTS_CACHE: dict = {}
 
-
+@shared_pass
 def _token_arrays_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, toks): the tokenized corpus, materialized once per
     (application, sf_dir) — round-10: ``text_bigram_lm_score``
     previously re-persisted this pass on EVERY call (a per-call
     persist of the same deterministic lineage, never unpersisted);
     session-caching it is the same policy as ``_shingle_arrays``."""
-    from ..plans.materialize import materialize, session_cached
-
-    def build():
-        docs = read_table(spark, sf_dir, "documents")
-        return materialize(docs.select("doc_id", _tokens().alias("toks")))
-
-    return session_cached(_TOKEN_ARRAYS_CACHE, spark, sf_dir, build)
+    docs = read_table(spark, sf_dir, "documents")
+    return materialize(docs.select("doc_id", _tokens().alias("toks")))
 
 
+@shared_pass
 def _bigram_dicts_shared(spark: SparkSession, sf_dir: str):
     """Broadcast of ({token: tf}, {bigram: btf}) — the corpus unigram
     and bigram dictionaries as plain Python dicts, computed once per
@@ -879,26 +856,22 @@ def _bigram_dicts_shared(spark: SparkSession, sf_dir: str):
     collected both through the driver implicitly via ``F.broadcast``.
     Every declared result still computes per action from the token
     arrays + these statistics."""
-    from ..plans.materialize import session_cached
 
-    def build():
-        arr = _token_arrays_shared(spark, sf_dir)
-        tok = arr.select(F.explode("toks").alias("token"))
-        uni = tok.groupBy("token").agg(
-            F.count(F.lit(1)).cast("bigint").alias("tf")
-        )
-        bgf = (
-            arr.select(F.explode(F.expr(_BIGRAMS_EXPR)).alias("bg"))
-            .groupBy("bg")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("btf"))
-        )
-        u_pdf = uni.toPandas()
-        b_pdf = bgf.toPandas()
-        return spark.sparkContext.broadcast(
-            (dict(zip(u_pdf.token, u_pdf.tf)), dict(zip(b_pdf.bg, b_pdf.btf)))
-        )
-
-    return session_cached(_BIGRAM_DICTS_CACHE, spark, sf_dir, build)
+    arr = _token_arrays_shared(spark, sf_dir)
+    tok = arr.select(F.explode("toks").alias("token"))
+    uni = tok.groupBy("token").agg(
+        F.count(F.lit(1)).cast("bigint").alias("tf")
+    )
+    bgf = (
+        arr.select(F.explode(F.expr(_BIGRAMS_EXPR)).alias("bg"))
+        .groupBy("bg")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("btf"))
+    )
+    u_pdf = uni.toPandas()
+    b_pdf = bgf.toPandas()
+    return spark.sparkContext.broadcast(
+        (dict(zip(u_pdf.token, u_pdf.tf)), dict(zip(b_pdf.bg, b_pdf.btf)))
+    )
 
 
 @query(
@@ -1120,15 +1093,7 @@ def pipeline_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate = F.lit(None).cast("double")
     for i, r in reversed(list(enumerate(_SAMPLE_RATES))):
         rate = F.when(src_idx == i, F.lit(r)).otherwise(rate)
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(_MIX_SALT + "-"), F.col("doc_id").cast("string"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    h = _salted_h60(_MIX_SALT)
     sampled = survivors.withColumn("keep_rate", rate).filter(
         h < F.col("keep_rate") * F.lit(_H60_MAX)
     )
@@ -1208,8 +1173,6 @@ def pipeline_pretrain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     standalone operators' exact rules (same floors, same normalized-
     text grouping, same sqrt rate and md5 gate family), so the
     composed oracle is the composed SQL of the pieces."""
-    from ..plans.materialize import materialize
-
     docs = read_table(spark, sf_dir, "documents")
     toks = _tokens()
     m = docs.select(
@@ -1244,19 +1207,7 @@ def pipeline_pretrain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(mn)
     )
     keep_rate = F.sqrt(F.col("n_min") / F.col("n_lang").cast("double"))
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit(_PRETRAIN_SALT + "-"), F.col("doc_id").cast("string")
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    h = _salted_h60(_PRETRAIN_SALT)
     sampled = rated.withColumn("keep_rate", keep_rate).filter(
         h < keep_rate * F.lit(_H60_MAX)
     )
@@ -1595,17 +1546,7 @@ def docs_domain_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.topk import topk_per_key
 
     docs = read_table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(F.lit(_BUDGET_SALT + "-"), F.col("doc_id").cast("string"))
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    h = _salted_h60(_BUDGET_SALT)
     return topk_per_key(
         docs.select("doc_id", "source", "n_chars"),
         ["source"],

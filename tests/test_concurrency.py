@@ -156,9 +156,9 @@ def test_reset_session_caches_empties_ivf_index(spark, sf_small):
     )
 
     n = S._ivf_index(spark, sf_small).count()
-    assert S._IVF_INDEX_CACHE
+    assert S._ivf_index.cache
     reset_session_caches()
-    assert not S._IVF_INDEX_CACHE
+    assert not S._ivf_index.cache
     assert S._ivf_index(spark, sf_small).count() == n
 
 
@@ -178,9 +178,9 @@ def test_reset_session_caches_empties_ext_bits(spark, tmp_path):
     ).write.parquet(str(tmp_path / "embeddings.parquet"))
     key = (spark.sparkContext.applicationId, str(tmp_path))
     assert S._corpus_ext_bits(spark, str(tmp_path)) == 0
-    assert key in S._EXT_BITS_CACHE
+    assert key in S._corpus_ext_bits.cache
     reset_session_caches()
-    assert key not in S._EXT_BITS_CACHE
+    assert key not in S._corpus_ext_bits.cache
 
 
 def test_reset_session_caches_deletes_stream_sink(spark, sf_small):

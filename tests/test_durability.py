@@ -435,8 +435,8 @@ def test_session_cached_nested_build(spark):
     """A cold build that itself consumes another session cache must
     not deadlock: shared passes are layered (the verified-pair-set
     build reads the shingle-array cache), and the first query of a
-    session can be a downstream consumer — so the cache lock must be
-    reentrant. Run the nested call on a worker thread with a timeout
+    session can be a downstream consumer — so a build must be able to
+    run another entry's build. Run the nested call on a worker thread with a timeout
     so a regression fails fast instead of hanging the suite."""
     import threading
 
@@ -462,6 +462,84 @@ def test_session_cached_nested_build(spark):
     t.join(timeout=30)
     assert not t.is_alive(), "session_cached deadlocked on a nested build"
     assert out == ["inner+outer"]
+
+
+def test_shared_pass_independent_cold_builds_overlap(spark):
+    """Two threads cold-building two independent passes build at the
+    same time: each build waits at a barrier the other must reach, so
+    a lock that serialized builds would break the barrier."""
+    import threading
+    import time
+
+    from flat_file_social_media_database_engine_spark.plans.materialize import (
+        shared_pass,
+    )
+
+    barrier = threading.Barrier(2, timeout=10)
+    spans: dict = {}
+
+    def make(name):
+        @shared_pass
+        def build(spark, sf_dir):
+            start = time.monotonic()
+            barrier.wait()
+            spans[name] = (start, time.monotonic())
+            return name
+
+        return build
+
+    out: dict = {}
+    threads = [
+        threading.Thread(
+            target=lambda n=n, p=make(n): out.__setitem__(n, p(spark, "/tmp/overlap")),
+            daemon=True,
+        )
+        for n in ("a", "b")
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=30)
+    assert out == {"a": "a", "b": "b"}
+    (a0, a1), (b0, b1) = spans["a"], spans["b"]
+    assert a0 < b1 and b0 < a1
+
+
+def test_shared_pass_build_waits_on_another_threads_cold_build(spark):
+    """A build that waits on a thread cold-building a different pass
+    finishes — the shape of a stream build whose foreachBatch thread
+    asks for the committed band index. Bounded joins on daemon
+    threads, so a lock held across the wait fails the test instead of
+    hanging the suite."""
+    import threading
+
+    from flat_file_social_media_database_engine_spark.plans.materialize import (
+        shared_pass,
+    )
+
+    @shared_pass
+    def inner(spark, sf_dir):
+        return "inner"
+
+    @shared_pass
+    def outer(spark, sf_dir):
+        got: list = []
+        t = threading.Thread(
+            target=lambda: got.append(inner(spark, sf_dir)), daemon=True
+        )
+        t.start()
+        t.join(timeout=10)
+        return got
+
+    out: list = []
+    w = threading.Thread(
+        target=lambda: out.append(outer(spark, "/tmp/cross_thread")), daemon=True
+    )
+    w.start()
+    w.join(timeout=30)
+    assert not w.is_alive()
+    assert out == [["inner"]]
+    assert outer.cache and inner.cache
 
 
 def test_cold_session_cache_order_independent(spark, tmp_path):

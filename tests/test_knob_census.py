@@ -1,8 +1,8 @@
 """Census of the package's settable surface and of its dead code: the
 environment variables it reads, the configs its session builder sets,
 the runtime SQL confs it sets, the defaulted parameters of its
-storage-facing public API, and the module-level functions and classes
-nothing calls. Each env knob, session config, runtime tuning key or
+storage-facing public API, the module-level functions and classes
+nothing calls, and the module-level memo dicts. Each env knob, session config, runtime tuning key or
 option is a place where the benchmarked engine can differ from the one
 the correctness gate verifies, and an uncalled helper is code nothing
 verifies, so adding one must update this test on purpose."""
@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import ast
 import pathlib
+import re
 
 PKG = (
     pathlib.Path(__file__).resolve().parent.parent
@@ -67,8 +68,6 @@ PARAM_MODULES = (
 EXPECTED_PARAMS = {
     "engine.Engine.__init__.store_root",
     "engine.Engine.maintain.vacuum_retain",
-    # crash-recovery horizon for an unmanifested version claim
-    "plans.snapshots.SnapshotStore.__init__.stale_claim_seconds",
     "plans.snapshots.SnapshotStore.append.meta",
     "plans.snapshots.SnapshotStore.commit.meta",
     # the committed band index's layout (workloads/dedup.py)
@@ -399,3 +398,57 @@ def test_every_package_definition_has_a_caller():
     # equality, so an allowed entry that gains a caller (or is
     # deleted) must leave the list too
     assert orphans(sources, package) == ORPHANS_ALLOWED
+
+
+# Module-level memo dicts named ``*_CACHE``/``*_CACHES``. Every shared
+# pass keeps its cache on its ``@shared_pass`` wrapper
+# (plans/materialize.py), so such a dict is a hand-rolled copy of that
+# protocol. The relayouts keep one cache per table name, and
+# perfbench's tracer tells relayout builds apart by identity against
+# this dict.
+CACHE_DICTS_ALLOWED = {"sources/catalog.py::_RELAYOUT_CACHES"}
+
+
+def cache_dicts(src: str) -> set[str]:
+    """Names ending in ``_CACHE`` or ``_CACHES`` bound at module level,
+    by any assignment form, inside module-level blocks too; bindings in
+    function and class bodies are not module state."""
+    names: set[str] = set()
+    stack = list(ast.parse(src).body)
+    while stack:
+        node = stack.pop()
+        if isinstance(node, (*_FUNCS, ast.ClassDef, ast.Lambda)):
+            continue
+        if (
+            isinstance(node, ast.Name)
+            and isinstance(node.ctx, ast.Store)
+            and re.search(r"_CACHES?$", node.id)
+        ):
+            names.add(node.id)
+        stack.extend(ast.iter_child_nodes(node))
+    return names
+
+
+def test_cache_dicts_detects_every_form():
+    src = (
+        "_A_CACHE: dict = {}\n"
+        "_B_CACHE = dict()\n"
+        "_C_CACHES, other = {}, 1\n"
+        "if True:\n"
+        "    _D_CACHE = {}\n"
+        "def f():\n"
+        "    _LOCAL_CACHE = {}\n"
+        "class K:\n"
+        "    _ATTR_CACHE = {}\n"
+        "_CACHE_SIZE = 3\n"
+    )
+    assert cache_dicts(src) == {"_A_CACHE", "_B_CACHE", "_C_CACHES", "_D_CACHE"}
+
+
+def test_package_keeps_no_module_level_cache_dicts():
+    found = {
+        f"{path.relative_to(PKG)}::{name}"
+        for path in sorted(PKG.rglob("*.py"))
+        for name in cache_dicts(path.read_text())
+    }
+    assert found == CACHE_DICTS_ALLOWED
