@@ -15,22 +15,17 @@ through one driver-side ``toPandas`` and aborted on
 ``driver.maxResultSize`` at the 5M-doc tier): the equal-count range
 boundaries come from the engine's own exact rank-select (a
 metadata-sized collect of k-1 boundary doc_ids), and each batch file
-is a Spark range-filtered single-task write whose part file is moved
-into the stage — no corpus-sized data ever crosses the driver. Same
-staging discipline as ``events.stage_events_daily`` otherwise:
-content-keyed directory, atomic rename publication."""
+is a Spark range-filtered write by ``events.stage_replay`` — no
+corpus-sized data ever crosses the driver."""
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
-import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .events import _source_tag
+from .events import stage_replay
 
 N_BATCHES = 4
 
@@ -43,23 +38,13 @@ def stage_documents_batches(spark: SparkSession, sf_dir: str) -> tuple[str, int]
     from ..sources.catalog import read_table
     from ..workloads.dedup import N_OLD
 
-    src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    # rg4m in the tag: stage layout is part of the content key, so the
-    # row-group-size change below invalidates stages written before it
-    tag = _source_tag(f"docbatch{N_BATCHES}rg4m", src)
-    stage = os.path.join(tempfile.gettempdir(), f"docs_ingest_{tag}")
-    if os.path.isdir(stage):
-        return stage, len(
-            [f for f in os.listdir(stage) if f.endswith(".parquet")]
+    def build() -> list[DataFrame]:
+        new = read_table(spark, sf_dir, "documents").filter(
+            F.col("doc_id") >= N_OLD
         )
-    new = read_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") >= N_OLD
-    )
-    n = new.count()
-    tmp = f"{stage}.tmp{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
-    written = 0
-    if n > 0:
+        n = new.count()
+        if n == 0:
+            return []
         k = min(N_BATCHES, n)
         # exact equal-count boundaries: doc_id at rank floor(n*i/k),
         # i = 1..k-1 — a metadata-sized collect (k-1 rows), the same
@@ -76,40 +61,16 @@ def stage_documents_batches(spark: SparkSession, sf_dir: str) -> tuple[str, int]
                 },
             ).collect()[0]
             bounds = [int(picked[f"c{i}"]["doc_id"]) for i in range(1, k)]
-        t0 = 1_700_000_000
-        lo = None
-        for i in range(k):
-            hi = bounds[i] if i < len(bounds) else None
+        edges = [None, *bounds, None]
+        parts = []
+        for lo, hi in zip(edges, edges[1:]):
             part = new
             if lo is not None:
                 part = part.filter(F.col("doc_id") > lo)
             if hi is not None:
                 part = part.filter(F.col("doc_id") <= hi)
-            lo = hi
-            sub = os.path.join(tmp, f".w{i}")
-            # small row groups, deliberately: a coalesce(1) write
-            # defaults to one ~128MB row group per file, and parquet
-            # byte-range splits assign each row group to the ONE split
-            # holding its midpoint — so the stream's scan saw 4 splits
-            # but every row in one of them, and the CPU-heavy Arrow
-            # signing ran single-threaded per micro-batch (measured:
-            # the (3+1)/4 straggler stage dominating the sf10 wall).
-            # 4MB groups spread rows across all byte-range splits with
-            # zero added exchange.
-            part.coalesce(1).write.option(
-                "parquet.block.size", 4 * 1024 * 1024
-            ).mode("overwrite").parquet(sub)
-            (src_part,) = glob.glob(os.path.join(sub, "part-*.parquet"))
-            dst = os.path.join(tmp, f"{i:03d}_batch.parquet")
-            shutil.move(src_part, dst)
-            shutil.rmtree(sub, ignore_errors=True)
-            os.utime(dst, (t0 + i, t0 + i))
-            written += 1
-    try:
-        os.rename(tmp, stage)
-    except OSError:  # lost the publish race — the winner's is complete
-        shutil.rmtree(tmp, ignore_errors=True)
-        written = len(
-            [f for f in os.listdir(stage) if f.endswith(".parquet")]
-        )
-    return stage, written
+            parts.append(part)
+        return parts
+
+    src = os.path.join(sf_dir, "documents.parquet")
+    return stage_replay(spark, f"docs{N_BATCHES}", src, build)

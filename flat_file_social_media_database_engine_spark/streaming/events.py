@@ -22,8 +22,10 @@ Design notes (100 TB / always-on posture):
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
+import shutil
 import tempfile
 import threading
 from typing import Callable
@@ -39,10 +41,10 @@ SESSION_GAP = "30 minutes"
 assert SESSION_GAP_US == 30 * 60 * 1_000_000  # keep twins in lockstep
 
 def read_staged_events_stream(
-    spark: SparkSession, stage_dir: str, max_files_per_trigger: int = 1
+    spark: SparkSession, path: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
     """File-source stream over a drop-zone directory (see
-    ``stage_events_with_sentinels``), schema pinned — never inferred —
+    ``stage_replay``), schema pinned — never inferred —
     exactly like every batch scan in this engine. The fixture parquet
     carries ``timestamp[us]`` with no UTC adjustment, so ``ts`` scans
     as TIMESTAMP_NTZ (the declared EVENTS type) — but Spark's
@@ -51,51 +53,59 @@ def read_staged_events_stream(
     session the cast is value-exact, and the batch twins' NTZ results
     collect to the same naive datetimes. The UTC pin is set on the
     session handed in: a drain's child session starts at the JVM's
-    default zone, not the parent's runtime setting."""
+    default zone, not the parent's runtime setting.
+
+    A single parquet file is read through its own directory, filtered
+    to its name: the file stream source takes only a directory (its
+    contract is a drop-zone new files arrive into)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return (
-        spark.readStream.schema(EVENTS)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(stage_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
+    reader = spark.readStream.schema(EVENTS).option(
+        "maxFilesPerTrigger", max_files_per_trigger
     )
+    if os.path.isfile(path):
+        reader = reader.option("pathGlobFilter", os.path.basename(path))
+        path = os.path.dirname(path)
+    return reader.parquet(path).withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def read_events_stream(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    """Open ``events`` as a file-source stream: stage the fixture's
-    drop-zone directory, then read it like any staged replay
-    (``read_staged_events_stream``)."""
+    """Open the ``events`` fixture, a file or a directory, as a
+    file-source stream (``read_staged_events_stream``)."""
     path = os.path.join(sf_dir, "events.parquet")
-    if os.path.isfile(path):
-        # The file stream source requires a *directory* (its contract
-        # is a drop-zone new files arrive into). The fixture is a
-        # single parquet file, so stage a stable symlink directory.
-        tag = hashlib.sha256(os.path.abspath(path).encode()).hexdigest()[:12]
-        link_dir = os.path.join(tempfile.gettempdir(), f"events_stream_{tag}")
-        os.makedirs(link_dir, exist_ok=True)
-        link = os.path.join(link_dir, "events.parquet")
-        if not os.path.exists(link):
-            try:
-                os.symlink(os.path.abspath(path), link)
-            except FileExistsError:  # concurrent stager won the race
-                pass
-        path = link_dir
     return read_staged_events_stream(spark, path, max_files_per_trigger)
 
 
 SENTINEL_USER = -1  # no fixture user_id is negative
 
 
-def _source_tag(prefix: str, src: str) -> str:
-    """Content fingerprint of a parquet source — file OR Spark-written
-    directory. Folds every part file's (name, size, mtime_ns): a
+def stage_replay(
+    spark: SparkSession,
+    kind: str,
+    src: str,
+    build: Callable[[], list[DataFrame]],
+) -> tuple[str, int]:
+    """Stage a deterministic file-stream replay of the parquet source
+    ``src`` (a file or a Spark-written directory): one file per frame of
+    ``build()``, in order. Returns (directory, number of files).
+
+    The directory is keyed on ``kind``, the stage layout and the
+    source's per-part-file content fingerprint (name, size, mtime_ns): a
     directory's OWN stat does not change when a part file is rewritten
-    in place, so keying on the dir stat would silently reuse stale
-    staged replays (and stale sentinels that could sit behind a new
-    event horizon)."""
-    h = hashlib.sha256(f"{prefix}:{os.path.abspath(src)}".encode())
+    in place, so keying on it would silently reuse stale replays (and
+    stale sentinels that could sit behind a new event horizon). A staged
+    directory is returned as it is, with no Spark job.
+
+    On a miss each frame is written by Spark as ONE file,
+    ``{i:04d}.parquet`` with mtime ``t0 + i``: the file source replays
+    oldest-first, so under ``maxFilesPerTrigger=1`` frame i is
+    micro-batch i. The files land in a temp dir private to this call and
+    are published by one rename, so a crash never leaves a partial
+    replay behind, and a stager that loses the rename returns the
+    winner's."""
+    src = os.path.abspath(src)
+    h = hashlib.sha256(f"{kind}:spark-rg4m:{src}".encode())
     if os.path.isdir(src):
         for f in sorted(os.listdir(src)):
             if f.endswith(".parquet"):
@@ -104,7 +114,40 @@ def _source_tag(prefix: str, src: str) -> str:
     else:
         s = os.stat(src)
         h.update(f"{s.st_size}:{s.st_mtime_ns}".encode())
-    return h.hexdigest()[:12]
+    name = f"replay_{kind}_{h.hexdigest()[:12]}"
+    stage = os.path.join(tempfile.gettempdir(), name)
+    if not os.path.isdir(stage):
+        tmp = tempfile.mkdtemp(prefix=f".{name}.")
+        try:
+            os.chmod(tmp, 0o755)  # mkdtemp's 0700 would hide it from other users
+            t0 = 1_700_000_000
+            for i, frame in enumerate(build()):
+                sub = os.path.join(tmp, f".w{i}")
+                # small row groups, deliberately: a coalesce(1) write
+                # defaults to one ~128MB row group per file, and parquet
+                # byte-range splits assign each row group to the ONE
+                # split holding its midpoint — so the stream's scan saw
+                # 4 splits but every row in one of them, and the
+                # CPU-heavy Arrow signing of the document replay ran
+                # single-threaded per micro-batch (measured: the
+                # (3+1)/4 straggler stage dominating the sf10 wall).
+                # 4MB groups spread rows across all byte-range splits
+                # with zero added exchange.
+                frame.coalesce(1).write.option(
+                    "parquet.block.size", 4 * 1024 * 1024
+                ).parquet(sub)
+                (part,) = glob.glob(os.path.join(sub, "part-*.parquet"))
+                dst = os.path.join(tmp, f"{i:04d}.parquet")
+                shutil.move(part, dst)
+                shutil.rmtree(sub)
+                os.utime(dst, (t0 + i, t0 + i))
+            os.rename(tmp, stage)
+        except OSError:
+            if not os.path.isdir(stage):  # not a lost publish race
+                raise
+        finally:  # a failed build's or a lost race's files
+            shutil.rmtree(tmp, ignore_errors=True)
+    return stage, len([f for f in os.listdir(stage) if f.endswith(".parquet")])
 
 
 def stage_events_with_sentinels(spark: SparkSession, sf_dir: str) -> str:
@@ -118,90 +161,46 @@ def stage_events_with_sentinels(spark: SparkSession, sf_dir: str) -> str:
     stream drains. The production-shaped fix is a watermark-advancer:
     inject an event far past the real horizon so every real session
     closes and flushes before termination (the same drain marker an
-    always-on pipeline's planned shutdown emits). Two sentinel FILES
-    (processed after the fixture — file source runs oldest-first)
+    always-on pipeline's planned shutdown emits). Two sentinel FILES,
+    2 h and 3 h past the last real event and replayed after it,
     guarantee a final micro-batch executes AFTER the watermark has
     advanced past every real session. The sentinel user is filtered
     out of results; its id is negative, which no fixture user is.
 
-    The directory is keyed on the source's per-part-file content
-    fingerprint (``_source_tag``) — regenerating the fixture, even a
-    single part file rewritten in place, re-stages, so stale sentinels
-    can never sit BEHIND a new horizon and leave sessions undrained. A
-    DIRECTORY source is CONSOLIDATED into one staged real file (the
-    file stream source ignores nested dirs, and one real file keeps
-    the replay exactly three micro-batches: all real rows while the
-    watermark is still 0, then each sentinel in its own batch — the
+    The whole events table (null-``ts`` rows included) is ONE staged
+    file, whatever the source's part-file count: one real file keeps
+    the replay exactly three micro-batches — all real rows while the
+    watermark is still 0, then each sentinel in its own batch (the
     two-sentinel drain guarantee would be void if both sentinels rode
-    one batch). Every staged file publishes via dot-prefixed-temp +
-    rename (the source skips '.'-prefixed names, so a crashed or
-    in-flight temp is invisible), with its final mtime set BEFORE the
-    rename so ordering is atomic with publication; sentinel mtimes sit
-    hours past any real file so a millisecond tie can never pull a
-    drain marker into the real batch. Fully-staged directories return
-    on a warm path without running the max-ts job."""
+    one batch)."""
     import datetime
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from ..sources.catalog import read_table
 
-    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    stage = os.path.join(
-        tempfile.gettempdir(), f"events_drain_{_source_tag('sentinel', src)}"
-    )
-    os.makedirs(stage, exist_ok=True)
-    real = os.path.join(stage, "00_events.parquet")
-    sents = [os.path.join(stage, f"zz_sentinel_{i}.parquet") for i in (0, 1)]
-    if os.path.exists(real) and all(os.path.exists(s) for s in sents):
-        return stage  # content-keyed and complete — no Spark job
-    if not os.path.exists(real):
-        if os.path.isdir(src):
-            tmp = os.path.join(stage, f".00_events.tmp{os.getpid()}")
-            pq.write_table(pq.read_table(src), tmp)
-            # pin the real file well before any sentinel mtime
-            os.utime(tmp, (1_700_000_000, 1_700_000_000))
-            os.replace(tmp, real)
-        else:
-            try:
-                os.symlink(src, real)
-            except FileExistsError:  # concurrent stager won the race
-                pass
-    mx = read_table(spark, sf_dir, "events").agg(F.max("ts")).collect()[0][0]
-    if mx is None:
-        # empty fixture: no real sessions exist, so there is no state
-        # to drain — sentinels would only inject rows to filter back
-        # out (caught by the zero-row adversarial suite)
-        return stage
-    import time as _time
-
-    now = _time.time()
-    for i, hours in enumerate((2, 3)):
-        sent = sents[i]
-        if not os.path.exists(sent):
-            tmp = os.path.join(stage, f".zz_sentinel_{i}.tmp{os.getpid()}")
-            pq.write_table(
-                pa.table(
-                    {
-                        "event_id": pa.array([10**12 + i], pa.int64()),
-                        "ts": pa.array(
-                            [mx + datetime.timedelta(hours=hours)],
-                            pa.timestamp("us"),
-                        ),
-                        "user_id": pa.array([SENTINEL_USER], pa.int64()),
-                        "event_type": pa.array(["__sentinel__"]),
-                        "value": pa.array([0.0], pa.float64()),
-                        "props": pa.array(["{}"]),
-                    }
-                ),
-                tmp,
+    def build() -> list[DataFrame]:
+        events = read_table(spark, sf_dir, "events")
+        mx = events.agg(F.max("ts")).collect()[0][0]
+        if mx is None:
+            # empty fixture: no real sessions exist, so there is no
+            # state to drain — sentinels would only inject rows to
+            # filter back out (caught by the zero-row adversarial suite)
+            return [events]
+        # literals, not createDataFrame: a local-list frame runs its
+        # write through a Python worker, ~1 s per sentinel file cold
+        return [events] + [
+            spark.range(1).selectExpr(
+                f"{10**12 + i}L AS event_id",
+                f"TIMESTAMP_NTZ'{mx + datetime.timedelta(hours=h)}' AS ts",
+                f"{SENTINEL_USER}L AS user_id",
+                "'__sentinel__' AS event_type",
+                "0.0D AS value",
+                "'{}' AS props",
             )
-            # mtime BEFORE publication: ordering and existence must be
-            # one atomic fact to a concurrent reader
-            os.utime(tmp, (now + 3600 * (i + 1), now + 3600 * (i + 1)))
-            os.replace(tmp, sent)
-    return stage
+            for i, h in enumerate((2, 3))
+        ]
+
+    src = os.path.join(sf_dir, "events.parquet")
+    return stage_replay(spark, "sentinels", src, build)[0]
 
 
 def sessionize(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -314,92 +313,38 @@ def running_net_clamp_micro(
     )
 
 
-def stage_events_daily(
-    spark: SparkSession, sf_dir: str, unit: str = "day"
-) -> tuple[str, int]:
-    """Stage the events fixture as ONE FILE PER CALENDAR PERIOD
-    (``unit``: "day" or "week", Spark/DuckDB-shared ``date_trunc``
-    semantics — ISO Monday-start weeks in both engines) with strictly
-    increasing mtimes, and return (directory, n_periods).
+def stage_events_weekly(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
+    """Stage the events fixture as ONE FILE PER ISO WEEK
+    (``date_trunc('week')``, Monday-start in Spark and DuckDB alike), in
+    week order, and return (directory, n_weeks).
 
     This is the deterministic replay harness for the stateful
     operators: under ``maxFilesPerTrigger=1`` the file source runs
-    the periods oldest-first, so the micro-batch sequence — and with
+    the weeks oldest-first, so the micro-batch sequence — and with
     it any per-batch semantics (the clamp fold) — is fully specified
     by the DATA, which is what lets a SQL oracle replay it (one
-    recursive-CTE fold step per (user, present-period)). Periods are
+    recursive-CTE fold step per (user, present-week)). Weeks are
     contiguous time ranges, so no batch ever carries rows behind the
-    previous batch's watermark. Week granularity exists because each
-    local micro-batch costs ~1.5s of fixed scheduling overhead: the
-    30-day fixture is 30 batches as days but 5 as weeks, with the
-    identical state machinery (carry-across-batch, per-batch clamp,
+    previous batch's watermark. Weeks, not days, because each local
+    micro-batch costs ~1.5s of fixed scheduling overhead: the 30-day
+    fixture is 5 batches as weeks but 30 as days, with the identical
+    state machinery (carry-across-batch, per-batch clamp,
     absent-then-returning users) exercised either way.
 
-    The split runs through one driver-side pandas pass — this stages
-    a REPLAY of a bounded fixture (the same trust boundary as the
-    fixture file itself), it is not a query path. Null-ts rows are
-    excluded from the replay (an event-time operator can neither
-    watermark nor order them); the differential's oracle applies the
-    same ``ts IS NOT NULL`` predicate.
-
-    Publication is ATOMIC: the split is written to a process-private
-    temp dir and ``os.rename``d into place, so a crash mid-staging
-    can never leave a truncated replay that later runs silently
-    reuse, and a concurrent stager loses the rename race cleanly.
-    The cache key is the source's per-part-file content fingerprint
-    (``_source_tag``) so a regenerated fixture at the same path —
-    even one part file rewritten in place — re-stages instead of
-    replaying stale copied data."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    Null-ts rows are excluded from the replay (an event-time operator
+    can neither watermark nor order them); the differential's oracle
+    applies the same ``ts IS NOT NULL`` predicate."""
     from ..sources.catalog import read_table
 
-    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    tag = _source_tag(f"{unit}ly", src)
-    stage = os.path.join(tempfile.gettempdir(), f"events_{unit}ly_{tag}")
-    if os.path.isdir(stage):
-        return stage, len(os.listdir(stage))
-    tmp = f"{stage}.tmp{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
-    pdf = (
-        read_table(spark, sf_dir, "events")
-        .filter(F.col("ts").isNotNull())
-        .withColumn("__day", F.date_trunc(unit, "ts"))
-        .toPandas()
-    )
-    # The pinned EVENTS schema as arrow types: toPandas degrades
-    # NULLABLE int64 columns (a null user_id/event_id anywhere makes
-    # the whole column float64), and writing that as parquet DOUBLE
-    # would break the schema'd stream read-back — from_pandas with an
-    # explicit schema converts back (NaN -> null, integral floats ->
-    # int64, non-integral raise loudly).
-    arrow_schema = pa.schema(
-        [
-            ("event_id", pa.int64()),
-            ("ts", pa.timestamp("us")),
-            ("user_id", pa.int64()),
-            ("event_type", pa.string()),
-            ("value", pa.float64()),
-            ("props", pa.string()),
-        ]
-    )
-    days = sorted(pdf["__day"].unique())
-    for i, d in enumerate(days):
-        part = pdf[pdf["__day"] == d].drop(columns="__day")
-        path = os.path.join(tmp, f"{i:04d}_{unit}.parquet")
-        t = pa.Table.from_pandas(
-            part, schema=arrow_schema, preserve_index=False
-        )
-        pq.write_table(t, path)
-        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
-    try:
-        os.rename(tmp, stage)
-    except OSError:  # lost the publish race — the winner's is complete
-        import shutil
+    def build() -> list[DataFrame]:
+        events = read_table(spark, sf_dir, "events")
+        week = F.to_date(F.date_trunc("week", "ts"))
+        # one row per week of the fixture's span
+        weeks = events.filter(F.col("ts").isNotNull()).select(week).distinct()
+        return [events.filter(week == w) for (w,) in sorted(weeks.collect())]
 
-        shutil.rmtree(tmp, ignore_errors=True)
-    return stage, len(os.listdir(stage))
+    src = os.path.join(sf_dir, "events.parquet")
+    return stage_replay(spark, "weekly", src, build)
 
 
 # State-partition count for the driver-visible streaming entries

@@ -1681,10 +1681,10 @@ def events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         stage_events_with_sentinels,
     )
 
-    # The stager consolidates any multi-part source into ONE real
-    # file, so one-file-per-trigger always yields the exact
-    # three-batch drain sequence: all real rows (watermark 0 —
-    # inter-file event-time order can never drop a row as late),
+    # The stager writes the whole table, whatever its part-file
+    # count, as ONE real file, so one-file-per-trigger always yields
+    # the exact three-batch drain sequence: all real rows (watermark
+    # 0 — inter-file event-time order can never drop a row as late),
     # then each sentinel in its own batch.
     stage = stage_events_with_sentinels(spark, sf_dir)
     got = run_stream_to_parquet(
@@ -1709,7 +1709,7 @@ def events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Third streaming entry: the CUSTOM STATEFUL OPERATOR
 # (applyInPandasWithState) made driver-verifiable. The clamp fold is
 # non-associative — per-batch semantics — so verification requires a
-# fully specified batch sequence: stage_events_daily gives one file
+# fully specified batch sequence: stage_events_weekly gives one file
 # per calendar ISO week (same state machinery as per-day at 1/6 the
 # micro-batch scheduling overhead), and the oracle replays the
 # identical fold with a DuckDB RECURSIVE CTE (one step per
@@ -1792,12 +1792,12 @@ def events_stream_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_staged_events_stream,
         run_stream_to_parquet,
         running_net_clamp_micro,
-        stage_events_daily,
+        stage_events_weekly,
     )
 
     out_schema = "user_id bigint, cum_micro bigint, n_events bigint"
-    stage, n_days = stage_events_daily(spark, sf_dir, unit="week")
-    if n_days == 0:
+    stage, n_weeks = stage_events_weekly(spark, sf_dir)
+    if n_weeks == 0:
         return spark.createDataFrame([], out_schema)
     log = run_stream_to_parquet(
         spark,
@@ -1872,7 +1872,7 @@ def events_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.snapshots import SnapshotStore
     from ..streaming.events import (
         read_staged_events_stream,
-        stage_events_daily,
+        stage_events_weekly,
     )
     from ..streaming.ingest import _marker, append_stream, make_batch_sink
 
@@ -1880,7 +1880,7 @@ def events_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id bigint, ts timestamp_ntz, user_id bigint,"
         " event_type string, value double, props string"
     )
-    stage, n_weeks = stage_events_daily(spark, sf_dir, unit="week")
+    stage, n_weeks = stage_events_weekly(spark, sf_dir)
     if n_weeks == 0:
         return spark.createDataFrame([], out_schema)
     base = scratch_dir("stream_ingest")

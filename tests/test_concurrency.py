@@ -298,3 +298,37 @@ def test_stream_drains_reuse_one_session(spark, sf_small):
     before = bus.listeners().size()
     assert [drain(), drain()] == [first, first]
     assert bus.listeners().size() - before <= 2
+
+
+def test_concurrent_cold_staging_shares_one_replay(
+    spark, sf_medium, tmp_path, monkeypatch
+):
+    """Two threads cold-stage the same weekly replay at once, three
+    times each. Each call writes into its own temp dir and publishes it
+    by one rename, so neither thread loses files to the other's publish,
+    and both get the same directory and file count."""
+    import tempfile
+
+    from flat_file_social_media_database_engine_spark.streaming import events as SE
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))  # a cold stage
+    barrier = threading.Barrier(2)
+    got: list[tuple[str, int]] = []
+    errors: list[Exception] = []
+
+    def worker():
+        barrier.wait()
+        try:
+            got.extend(SE.stage_events_weekly(spark, sf_medium) for _ in range(3))
+        except Exception as exc:
+            errors.append(exc)
+
+    threads = [threading.Thread(target=worker) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(got) == 6 and len(set(got)) == 1
+    assert got[0][1] > 1

@@ -2,16 +2,20 @@
 environment variables it reads, the configs its session builder sets,
 the runtime SQL confs it sets, the defaulted parameters of its
 storage-facing public API, the module-level functions and classes
-nothing calls, and the module-level memo dicts. Each env knob, session config, runtime tuning key or
-option is a place where the benchmarked engine can differ from the one
-the correctness gate verifies, and an uncalled helper is code nothing
-verifies, so adding one must update this test on purpose."""
+nothing calls, the module-level memo dicts, and the calls that read
+data into the driver. Each env knob, session config, runtime tuning
+key or option is a place where the benchmarked engine can differ from
+the one the correctness gate verifies, an uncalled helper is code
+nothing verifies, and a driver read without a bound is a driver that
+runs out of memory at scale, so adding one must update this test on
+purpose."""
 
 from __future__ import annotations
 
 import ast
 import pathlib
 import re
+from collections import Counter
 
 PKG = (
     pathlib.Path(__file__).resolve().parent.parent
@@ -452,3 +456,128 @@ def test_package_keeps_no_module_level_cache_dicts():
         for name in cache_dicts(path.read_text())
     }
     assert found == CACHE_DICTS_ALLOWED
+
+
+# Every call in the package that reads data into the driver, as
+# (file, enclosing function, method) -> (number of calls, the bound on
+# what it reads). A new collect must name its bound here.
+DRIVER_READS_ALLOWED = {
+    ("operators/graph.py", "_probe", "collect"): (1, "one row: a count and an xor"),
+    ("operators/topk.py", "prune_topk_batches.prune", "head"): (
+        1,
+        "not a driver read: a pandas groupby head inside mapInPandas",
+    ),
+    ("plans/snapshots.py", "SnapshotStore.delete_where", "collect"): (
+        1,
+        "one row per directory of the table's version: directory names",
+    ),
+    ("plans/snapshots.py", "SnapshotStore.merge_upsert", "collect"): (
+        1,
+        "one row per directory of the table's version: directory names",
+    ),
+    ("streaming/docs.py", "stage_documents_batches.build", "collect"): (
+        1,
+        "one row: the N_BATCHES - 1 doc_id bounds",
+    ),
+    ("streaming/events.py", "stage_events_with_sentinels.build", "collect"): (
+        1,
+        "one row: the max ts",
+    ),
+    ("streaming/events.py", "stage_events_weekly.build", "collect"): (
+        1,
+        "one row per ISO week of the fixture's span",
+    ),
+    ("workloads/dedup.py", "dedup_prefix_jaccard_bounded", "collect"): (
+        1,
+        "not a driver read: the Python garbage collector",
+    ),
+    ("workloads/similarity.py", "_pca_vector", "collect"): (
+        1,
+        "_DIM x _DIM moment rows",
+    ),
+    ("workloads/text.py", "_bigram_dicts_shared", "toPandas"): (
+        2,
+        "UNGATED — ROADMAP item 4",
+    ),
+    ("workloads/text.py", "_bigram_dicts_shared", "broadcast"): (
+        1,
+        "UNGATED — ROADMAP item 4",
+    ),
+}
+
+# Methods that bring rows into the driver. ``broadcast`` counts on any
+# receiver but ``F`` (``F.broadcast`` is a join hint), and
+# ``read_table`` on any receiver (``pq.read_table``; the engine's own
+# Spark reader is the bare ``read_table``).
+_DRIVER_READ_METHODS = {
+    "collect",
+    "toPandas",
+    "toArrow",
+    "toLocalIterator",
+    "head",
+    "first",
+    "take",
+    "tail",
+    "broadcast",
+    "read_table",
+}
+
+
+def driver_reads(src: str) -> Counter:
+    """Calls of a driver-read method, counted per (dotted name of the
+    enclosing functions and classes, or ``<module>``; method)."""
+    found: Counter = Counter()
+
+    def visit(node: ast.AST, scope: str) -> None:
+        if isinstance(node, (*_FUNCS, ast.ClassDef)):
+            scope = f"{scope}.{node.name}" if scope else node.name
+        elif isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            f = node.func
+            hint = isinstance(f.value, ast.Name) and f.value.id == "F"
+            if f.attr in _DRIVER_READ_METHODS and not (f.attr == "broadcast" and hint):
+                found[(scope or "<module>", f.attr)] += 1
+        for child in ast.iter_child_nodes(node):
+            visit(child, scope)
+
+    visit(ast.parse(src), "")
+    return found
+
+
+def test_driver_reads_detects_every_form():
+    src = (
+        "top = spark.range(1).collect()\n"
+        "def f(df, spark):\n"
+        "    a = df.toPandas(); b = df.head(2); c = df.first(); d = df.take(3)\n"
+        "    e = spark.sparkContext.broadcast(a)\n"
+        "    g = pq.read_table(path)\n"
+        "    h = df.join(F.broadcast(df), 'k')\n"
+        "    n = df.count()\n"
+        "    t = read_table(spark, sf, 'events')\n"
+        "    def build():\n"
+        "        return df.collect()[0][0]\n"
+        "class S:\n"
+        "    def m(self, df):\n"
+        "        return [r for r in df.collect()] + df.collect()\n"
+    )
+    assert driver_reads(src) == {
+        ("<module>", "collect"): 1,
+        ("f", "toPandas"): 1,
+        ("f", "head"): 1,
+        ("f", "first"): 1,
+        ("f", "take"): 1,
+        ("f", "broadcast"): 1,
+        ("f", "read_table"): 1,
+        ("f.build", "collect"): 1,
+        ("S.m", "collect"): 2,
+    }
+
+
+def test_every_driver_read_names_its_bound():
+    found = {
+        (str(path.relative_to(PKG)), scope, method): n
+        for path in sorted(PKG.rglob("*.py"))
+        for (scope, method), n in driver_reads(path.read_text()).items()
+    }
+    assert found == {k: n for k, (n, _) in DRIVER_READS_ALLOWED.items()}
+    ungated = {k[1] for k, (_, b) in DRIVER_READS_ALLOWED.items() if "UNGATED" in b}
+    assert ungated == {"_bigram_dicts_shared"}

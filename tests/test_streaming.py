@@ -393,7 +393,7 @@ def test_attribution_multi_batch_equals_single_batch(spark):
     previous batch's watermark, and cross-batch interval matches
     survive because join-state retention is derived from the interval
     bound, not the batch boundary)."""
-    stage, n_parts = SE.stage_events_daily(spark, SF, unit="week")
+    stage, n_parts = SE.stage_events_weekly(spark, SF)
     assert n_parts > 1, "fixture must replay as multiple micro-batches"
 
     def drain(read):
@@ -543,8 +543,6 @@ def test_append_mode_sessionize_drains_via_sentinels(spark):
     append-mode sink receives EVERY real session (equality with the
     batch gap-sessionization, not just a subset), and (c) no sentinel
     row leaks into the result."""
-    import os
-
     from flat_file_social_media_database_engine_spark.workloads.eventflow import (
         events_stream_sessionize,
     )
@@ -553,9 +551,9 @@ def test_append_mode_sessionize_drains_via_sentinels(spark):
         stage_events_with_sentinels,
     )
 
-    stage = stage_events_with_sentinels(spark, SF)
-    staged = sorted(os.listdir(stage))
-    assert sum(f.startswith("zz_sentinel_") for f in staged) == 2, staged
+    staged = _footers(stage_events_with_sentinels(spark, SF))
+    sentinel = (1, (SENTINEL_USER, SENTINEL_USER))
+    assert [(n, r["user_id"]) for n, r in staged[1:]] == [sentinel] * 2
 
     got = events_stream_sessionize(spark, SF)
     assert got.filter(got.user_id == SENTINEL_USER).count() == 0
@@ -926,3 +924,84 @@ def test_ingest_crash_mid_stream_replays_exactly_once(spark, tmp_path):
         got.agg(F.sum("event_id")).collect()[0][0]
         == want.agg(F.sum("event_id")).collect()[0][0]
     )
+
+
+def _footers(stage):
+    """(rows, {column: (min, max)}) of each staged file in replay
+    (mtime) order, from the parquet footers alone."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    paths = sorted(
+        (os.path.join(stage, f) for f in os.listdir(stage) if f.endswith(".parquet")),
+        key=lambda p: (os.path.getmtime(p), p),
+    )
+    out = []
+    for p in paths:
+        md = pq.ParquetFile(p).metadata
+        ranges: dict = {}
+        for g in range(md.num_row_groups):
+            for j in range(md.num_columns):
+                c = md.row_group(g).column(j)
+                if c.statistics is not None and c.statistics.has_min_max:
+                    lo, hi = c.statistics.min, c.statistics.max
+                    lo0, hi0 = ranges.get(c.path_in_schema, (lo, hi))
+                    ranges[c.path_in_schema] = (min(lo, lo0), max(hi, hi0))
+        out.append((md.num_rows, ranges))
+    return out
+
+
+def test_staged_replays_keep_their_layout(spark, sf_medium):
+    """Every staged replay keeps its file count, order and rows per
+    file, read from the footers in replay order: one file per ISO week
+    holding that week's non-null-``ts`` rows, in week order; the whole
+    events table, then one sentinel row per file past its horizon; and
+    ``N_BATCHES`` contiguous, equal-count ``doc_id`` ranges of the new
+    documents."""
+    from pyspark.sql import functions as F
+
+    from flat_file_social_media_database_engine_spark.sources.catalog import (
+        read_table,
+    )
+    from flat_file_social_media_database_engine_spark.streaming.docs import (
+        N_BATCHES,
+        stage_documents_batches,
+    )
+    from flat_file_social_media_database_engine_spark.workloads.dedup import N_OLD
+
+    events = read_table(spark, sf_medium, "events")
+    want = [
+        r["count"]
+        for r in events.filter(F.col("ts").isNotNull())
+        .groupBy(F.date_trunc("week", "ts").alias("w"))
+        .count()
+        .orderBy("w")
+        .collect()
+    ]
+    stage, n = SE.stage_events_weekly(spark, sf_medium)
+    files = _footers(stage)
+    assert n == len(files) == len(want) > 1
+    assert [rows for rows, _ in files] == want
+    ts = [r["ts"] for _, r in files]
+    assert all(a[1] < b[0] for a, b in zip(ts, ts[1:]))
+
+    files = _footers(SE.stage_events_with_sentinels(spark, sf_medium))
+    assert [rows for rows, _ in files] == [events.count(), 1, 1]
+    assert [r["user_id"] for _, r in files[1:]] == [(SE.SENTINEL_USER,) * 2] * 2
+    ts = [r["ts"] for _, r in files]
+    assert ts[0][1] < ts[1][0] < ts[2][0]
+
+    stage, n = stage_documents_batches(spark, sf_medium)
+    files = _footers(stage)
+    rows = [r for r, _ in files]
+    n_new = (
+        read_table(spark, sf_medium, "documents")
+        .filter(F.col("doc_id") >= N_OLD)
+        .count()
+    )
+    assert n == len(files) == N_BATCHES
+    assert sum(rows) == n_new and max(rows) - min(rows) <= 1
+    ids = [r["doc_id"] for _, r in files]
+    assert ids[0][0] >= N_OLD
+    assert all(a[1] < b[0] for a, b in zip(ids, ids[1:]))
