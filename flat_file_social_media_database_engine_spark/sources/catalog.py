@@ -9,10 +9,11 @@ plain Spark SQL (tests/test_sql_surface.py).
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 from ..schemas import EVENTS
 
@@ -94,20 +95,56 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        df = df.select([f.name for f in EVENTS.fields])
     path = os.path.join(sf_dir, f"{name}.parquet")
+
+    def scan() -> DataFrame:
+        df = _read_parquet(spark, path)
+        if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+            df = df.select([f.name for f in EVENTS.fields])
+        return df
+
     if name in ("documents", "embeddings"):
         # The payload tables feed CPU-heavy narrow chains (tokenize,
         # hash, Arrow matmul/decode, scoring folds) in nearly every
         # consumer; spread them HERE so no per-query plan forgets.
         # Filters/pruning still reach the scan — Catalyst pushes both
         # through Repartition (pinned in tests/test_plan_hygiene.py).
-        df = spread(df, **_scan_shape(path))
-    else:
-        df = _relayout(spark, sf_dir, name, df, path)
+        return spread(scan(), **_scan_shape(path))
+    return _relayout(spark, sf_dir, name, scan, path)
+
+
+def file_identity(path: str) -> tuple:
+    """The content fingerprint of a parquet file, (size, mtime_ns), or
+    of a Spark-written directory, (name, size, mtime_ns) per part file:
+    a directory's OWN stat does not change when a part file is
+    rewritten in place."""
+    if not os.path.isdir(path):
+        s = os.stat(path)
+        return (s.st_size, s.st_mtime_ns)
+    out = []
+    for f in sorted(os.listdir(path)):
+        if f.endswith(".parquet"):
+            s = os.stat(os.path.join(path, f))
+            out.append((f, s.st_size, s.st_mtime_ns))
+    return tuple(out)
+
+
+# Inferred parquet schema per (path, ``file_identity``): inference is
+# a Spark job (a footer read), and a fixture is read by many queries
+# of a process, each of which re-ran it.
+_SCHEMA_CACHE: dict[tuple, StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema once per file
+    identity and pinning it (``spark.read.schema``) on later reads."""
+    key = (path, file_identity(path))
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_CACHE[key] = df.schema
     return df
 
 
@@ -117,7 +154,11 @@ _RELAYOUT_CACHES: dict[str, dict] = {}
 
 
 def _relayout(
-    spark: SparkSession, sf_dir: str, name: str, df: DataFrame, path: str
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    scan: Callable[[], DataFrame],
+    path: str,
 ) -> DataFrame:
     """Session-scoped SCAN-LAYOUT NORMALIZATION for packed fact
     tables: rewrite a table whose parquet layout caps scan parallelism
@@ -149,18 +190,21 @@ def _relayout(
     target = _spread_target(spark.sparkContext, shape["input_bytes"])
     cur = shape["current_parallelism"]
     if target < 2 or target < 2 * cur:
-        return df
+        return scan()
     from ..plans.materialize import materialize_parquet, session_cached
 
+    def build() -> DataFrame:
+        # hash, not round-robin: a round-robin repartition sorts every
+        # row of the one-task scan first (spark.sql.execution.
+        # sortBeforeRepartition, which keeps a retried task's output
+        # deterministic), and hashing whole rows needs no sort
+        df = scan()
+        return materialize_parquet(
+            spark, df.repartition(target, *df.columns), f"relayout_{name}"
+        )
+
     cache = _RELAYOUT_CACHES.setdefault(name, {})
-    return session_cached(
-        cache,
-        spark,
-        sf_dir,
-        lambda: materialize_parquet(
-            spark, df.repartition(target), f"relayout_{name}"
-        ),
-    )
+    return session_cached(cache, spark, sf_dir, build)
 
 
 def _scan_shape(path: str) -> dict:

@@ -15,8 +15,9 @@ through one driver-side ``toPandas`` and aborted on
 ``driver.maxResultSize`` at the 5M-doc tier): the equal-count range
 boundaries come from the engine's own exact rank-select (a
 metadata-sized collect of k-1 boundary doc_ids), and each batch file
-is a Spark range-filtered write by ``events.stage_replay`` — no
-corpus-sized data ever crosses the driver."""
+comes from one Spark write of the doc_id-range-indexed table by
+``events.stage_replay`` — no corpus-sized data ever crosses the
+driver."""
 
 from __future__ import annotations
 
@@ -25,7 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .events import stage_replay
+from .events import FRAME, stage_replay
 
 N_BATCHES = 4
 
@@ -38,13 +39,11 @@ def stage_documents_batches(spark: SparkSession, sf_dir: str) -> tuple[str, int]
     from ..sources.catalog import read_table
     from ..workloads.dedup import N_OLD
 
-    def build() -> list[DataFrame]:
+    def build() -> DataFrame:
         new = read_table(spark, sf_dir, "documents").filter(
             F.col("doc_id") >= N_OLD
         )
         n = new.count()
-        if n == 0:
-            return []
         k = min(N_BATCHES, n)
         # exact equal-count boundaries: doc_id at rank floor(n*i/k),
         # i = 1..k-1 — a metadata-sized collect (k-1 rows), the same
@@ -61,16 +60,9 @@ def stage_documents_batches(spark: SparkSession, sf_dir: str) -> tuple[str, int]
                 },
             ).collect()[0]
             bounds = [int(picked[f"c{i}"]["doc_id"]) for i in range(1, k)]
-        edges = [None, *bounds, None]
-        parts = []
-        for lo, hi in zip(edges, edges[1:]):
-            part = new
-            if lo is not None:
-                part = part.filter(F.col("doc_id") > lo)
-            if hi is not None:
-                part = part.filter(F.col("doc_id") <= hi)
-            parts.append(part)
-        return parts
+        # batch i holds the doc_ids in (bounds[i-1], bounds[i]]
+        frame = sum(((F.col("doc_id") > b).cast("int") for b in bounds), F.lit(0))
+        return new.withColumn(FRAME, frame)
 
     src = os.path.join(sf_dir, "documents.parquet")
     return stage_replay(spark, f"docs{N_BATCHES}", src, build)

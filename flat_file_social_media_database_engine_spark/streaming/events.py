@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..plans.materialize import scratch_dir
 from ..schemas import EVENTS
+from ..sources.catalog import file_identity, read_table
 from ..workloads.eventflow import SESSION_GAP_US
 
 SESSION_GAP = "30 minutes"
@@ -80,67 +81,71 @@ def read_events_stream(
 SENTINEL_USER = -1  # no fixture user_id is negative
 
 
+FRAME = "_frame"  # the replay-file index column of a ``stage_replay`` build
+
+
 def stage_replay(
     spark: SparkSession,
     kind: str,
     src: str,
-    build: Callable[[], list[DataFrame]],
+    build: Callable[[], DataFrame],
 ) -> tuple[str, int]:
     """Stage a deterministic file-stream replay of the parquet source
-    ``src`` (a file or a Spark-written directory): one file per frame of
-    ``build()``, in order. Returns (directory, number of files).
+    ``src`` (a file or a Spark-written directory): ``build()`` returns
+    the replay's rows with an integer ``FRAME`` column, and each
+    distinct frame value becomes one file, in ascending value order.
+    Returns (directory, number of files).
 
     The directory is keyed on ``kind``, the stage layout and the
-    source's per-part-file content fingerprint (name, size, mtime_ns): a
-    directory's OWN stat does not change when a part file is rewritten
-    in place, so keying on it would silently reuse stale replays (and
-    stale sentinels that could sit behind a new event horizon). A staged
-    directory is returned as it is, with no Spark job.
+    source's content fingerprint (``file_identity``: per-part-file name,
+    size, mtime_ns): a directory's OWN stat does not change when a part
+    file is rewritten in place, so keying on it would silently reuse
+    stale replays (and stale sentinels that could sit behind a new event
+    horizon). A staged directory is returned as it is, with no Spark
+    job.
 
-    On a miss each frame is written by Spark as ONE file,
-    ``{i:04d}.parquet`` with mtime ``t0 + i``: the file source replays
-    oldest-first, so under ``maxFilesPerTrigger=1`` frame i is
-    micro-batch i. The files land in a temp dir private to this call and
-    are published by one rename, so a crash never leaves a partial
-    replay behind, and a stager that loses the rename returns the
-    winner's."""
+    On a miss ONE Spark write stages every frame: a hash ``repartition``
+    on ``FRAME`` puts each frame in one task, and ``partitionBy`` writes
+    it as one file (the column itself is not written). Frame k in value
+    order is then moved to ``{k:04d}.parquet`` with mtime ``t0 + k``:
+    the file source replays oldest-first, so under
+    ``maxFilesPerTrigger=1`` frame k is micro-batch k. The files land in
+    a temp dir private to this call and are published by one rename, so
+    a crash never leaves a partial replay behind, and a stager that
+    loses the rename returns the winner's."""
     src = os.path.abspath(src)
-    h = hashlib.sha256(f"{kind}:spark-rg4m:{src}".encode())
-    if os.path.isdir(src):
-        for f in sorted(os.listdir(src)):
-            if f.endswith(".parquet"):
-                s = os.stat(os.path.join(src, f))
-                h.update(f"{f}:{s.st_size}:{s.st_mtime_ns}".encode())
-    else:
-        s = os.stat(src)
-        h.update(f"{s.st_size}:{s.st_mtime_ns}".encode())
-    name = f"replay_{kind}_{h.hexdigest()[:12]}"
+    key = f"{kind}:spark-rg4m-partitioned:{src}:{file_identity(src)}"
+    name = f"replay_{kind}_{hashlib.sha256(key.encode()).hexdigest()[:12]}"
     stage = os.path.join(tempfile.gettempdir(), name)
     if not os.path.isdir(stage):
         tmp = tempfile.mkdtemp(prefix=f".{name}.")
         try:
             os.chmod(tmp, 0o755)  # mkdtemp's 0700 would hide it from other users
+            sub = os.path.join(tmp, ".w")
+            # small row groups, deliberately: a one-file-per-frame write
+            # defaults to one ~128MB row group per file, and parquet
+            # byte-range splits assign each row group to the ONE split
+            # holding its midpoint — so the stream's scan saw 4 splits
+            # but every row in one of them, and the CPU-heavy Arrow
+            # signing of the document replay ran single-threaded per
+            # micro-batch (measured: the (3+1)/4 straggler stage
+            # dominating the sf10 wall). 4MB groups spread rows across
+            # all byte-range splits with zero added exchange.
+            build().repartition(FRAME).write.partitionBy(FRAME).option(
+                "parquet.block.size", 4 * 1024 * 1024
+            ).parquet(sub)
+            frames = sorted(
+                (int(d.split("=", 1)[1]), d)
+                for d in os.listdir(sub)
+                if d.startswith(f"{FRAME}=")
+            )
             t0 = 1_700_000_000
-            for i, frame in enumerate(build()):
-                sub = os.path.join(tmp, f".w{i}")
-                # small row groups, deliberately: a coalesce(1) write
-                # defaults to one ~128MB row group per file, and parquet
-                # byte-range splits assign each row group to the ONE
-                # split holding its midpoint — so the stream's scan saw
-                # 4 splits but every row in one of them, and the
-                # CPU-heavy Arrow signing of the document replay ran
-                # single-threaded per micro-batch (measured: the
-                # (3+1)/4 straggler stage dominating the sf10 wall).
-                # 4MB groups spread rows across all byte-range splits
-                # with zero added exchange.
-                frame.coalesce(1).write.option(
-                    "parquet.block.size", 4 * 1024 * 1024
-                ).parquet(sub)
-                (part,) = glob.glob(os.path.join(sub, "part-*.parquet"))
-                dst = os.path.join(tmp, f"{i:04d}.parquet")
-                shutil.move(part, dst)
-                shutil.rmtree(sub)
-                os.utime(dst, (t0 + i, t0 + i))
+            for k, (_, d) in enumerate(frames):
+                (part,) = glob.glob(os.path.join(sub, d, "part-*.parquet"))
+                dst = os.path.join(tmp, f"{k:04d}.parquet")
+                os.rename(part, dst)
+                os.utime(dst, (t0 + k, t0 + k))
+            shutil.rmtree(sub)
             os.rename(tmp, stage)
         except OSError:
             if not os.path.isdir(stage):  # not a lost publish race
@@ -151,8 +156,9 @@ def stage_replay(
 
 
 def stage_events_with_sentinels(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the events fixture as a file-stream drop-zone PLUS two
-    far-future sentinel events, and return the directory.
+    """Stage the events fixture as a file-stream drop-zone whose replay
+    ends past the real horizon, and return the directory: two files,
+    the whole events table plus sentinel 0, then sentinel 1.
 
     Why: an APPEND-mode streaming aggregation (session_window,
     tumbling windows) only emits state the watermark has CLOSED. A
@@ -161,43 +167,42 @@ def stage_events_with_sentinels(spark: SparkSession, sf_dir: str) -> str:
     stream drains. The production-shaped fix is a watermark-advancer:
     inject an event far past the real horizon so every real session
     closes and flushes before termination (the same drain marker an
-    always-on pipeline's planned shutdown emits). Two sentinel FILES,
-    2 h and 3 h past the last real event and replayed after it,
-    guarantee a final micro-batch executes AFTER the watermark has
-    advanced past every real session. The sentinel user is filtered
-    out of results; its id is negative, which no fixture user is.
+    always-on pipeline's planned shutdown emits). Sentinel 0 sits 2 h
+    past the last real event and rides in the real file, so the
+    watermark after batch 0 is 1 h past it (the delay is 1 h); sentinel
+    1, 3 h past, is batch 1, which runs at that watermark and so closes
+    every real session (each ends within the 30 min gap of its last
+    event). The sentinel user is filtered out of results; its id is
+    negative, which no fixture user is.
 
     The whole events table (null-``ts`` rows included) is ONE staged
     file, whatever the source's part-file count: one real file keeps
-    the replay exactly three micro-batches — all real rows while the
-    watermark is still 0, then each sentinel in its own batch (the
-    two-sentinel drain guarantee would be void if both sentinels rode
-    one batch)."""
-    import datetime
+    the replay exactly two micro-batches — all real rows while the
+    watermark is still 0, so none can be dropped as late, then
+    sentinel 1. The sentinel timestamps come from the plan (a max over
+    the table), not the driver. A table without a non-null ``ts`` has
+    no max and no session to close, so it gets no sentinel (an empty
+    one stages no file)."""
 
-    from ..sources.catalog import read_table
-
-    def build() -> list[DataFrame]:
+    def build() -> DataFrame:
         events = read_table(spark, sf_dir, "events")
-        mx = events.agg(F.max("ts")).collect()[0][0]
-        if mx is None:
-            # empty fixture: no real sessions exist, so there is no
-            # state to drain — sentinels would only inject rows to
-            # filter back out (caught by the zero-row adversarial suite)
-            return [events]
-        # literals, not createDataFrame: a local-list frame runs its
-        # write through a Python worker, ~1 s per sentinel file cold
-        return [events] + [
-            spark.range(1).selectExpr(
-                f"{10**12 + i}L AS event_id",
-                f"TIMESTAMP_NTZ'{mx + datetime.timedelta(hours=h)}' AS ts",
+        sentinels = (
+            events.agg(F.max("ts").alias("mx"))
+            .where("mx IS NOT NULL")
+            .crossJoin(spark.range(2).withColumnRenamed("id", FRAME))
+            .selectExpr(
+                f"{10**12}L + {FRAME} AS event_id",
+                f"mx + (2 + {FRAME}) * INTERVAL 1 HOUR AS ts",
                 f"{SENTINEL_USER}L AS user_id",
                 "'__sentinel__' AS event_type",
                 "0.0D AS value",
                 "'{}' AS props",
+                FRAME,
             )
-            for i, h in enumerate((2, 3))
-        ]
+        )
+        return events.withColumn(FRAME, F.lit(0).cast("bigint")).unionByName(
+            sentinels
+        )
 
     src = os.path.join(sf_dir, "events.parquet")
     return stage_replay(spark, "sentinels", src, build)[0]
@@ -334,14 +339,11 @@ def stage_events_weekly(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     Null-ts rows are excluded from the replay (an event-time operator
     can neither watermark nor order them); the differential's oracle
     applies the same ``ts IS NOT NULL`` predicate."""
-    from ..sources.catalog import read_table
 
-    def build() -> list[DataFrame]:
+    def build() -> DataFrame:
         events = read_table(spark, sf_dir, "events")
-        week = F.to_date(F.date_trunc("week", "ts"))
-        # one row per week of the fixture's span
-        weeks = events.filter(F.col("ts").isNotNull()).select(week).distinct()
-        return [events.filter(week == w) for (w,) in sorted(weeks.collect())]
+        week = F.unix_date(F.to_date(F.date_trunc("week", "ts")))
+        return events.filter(F.col("ts").isNotNull()).withColumn(FRAME, week)
 
     src = os.path.join(sf_dir, "events.parquet")
     return stage_replay(spark, "weekly", src, build)
@@ -359,12 +361,14 @@ def stage_events_weekly(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
 # (OPTIMIZATION_r09.md, "Deliberately left alone"): single-batch
 # 2.45/1.72/2.02/2.77 s and 7-micro-batch production shape
 # 4.13/4.30/5.49/8.43 s across 4/8/16/32 partitions, identical rows at
-# every point — 8 is the single-shape optimum and within noise of the
-# multi-shape one. It is set on the drains' child session only
-# (``_drain_session``), so batch plans keep the parent session's
-# ``shuffle.partitions``. At 100 TB this grows with stream volume
-# exactly like batch reducer counts — the deployment sets it per
-# query.
+# every point, on a 32-core host — 8 is the single-shape optimum and
+# within noise of the multi-shape one. A host with fewer cores than
+# that runs one state partition per core (``_drain_session``): on 4
+# cores, 8 partitions are two waves of per-store commits per batch.
+# It is set on the drains' child session only, so batch plans keep
+# the parent session's ``shuffle.partitions``. At 100 TB this grows
+# with stream volume exactly like batch reducer counts — the
+# deployment sets it per query.
 STREAM_STATE_PARTITIONS = 8
 
 # The drain session of the live SparkContext, as (applicationId,
@@ -380,8 +384,9 @@ def _drain_session(spark: SparkSession) -> SparkSession:
     """The child session (``spark.newSession()``: its own SQL conf, the
     same SparkContext and cached blocks) that every drain of this
     application runs in, created on first use with the drain's
-    settings: ``STREAM_STATE_PARTITIONS`` state partitions and no
-    no-data micro-batches.
+    settings: ``min(STREAM_STATE_PARTITIONS, defaultParallelism)``
+    state partitions, no no-data micro-batches and no checkpoint file
+    checksums.
 
     Round-10 (guide §5 — commit cost per micro-batch): a FINITE
     AvailableNow drain terminates right after its last data batch, so
@@ -389,22 +394,33 @@ def _drain_session(spark: SparkSession) -> SparkSession:
     watermark-close checks with no new input) can emit nothing that
     the sink read-back would see — yet each one still pays query
     planning + a full state-store commit per store per partition
-    (~0.4-1.0 s here: the attribution join keeps 4 stores × 8
-    partitions). Disabling no-data batches for the drain removes
+    (~0.4-1.0 s here: the attribution join keeps 4 stores per
+    partition). Disabling no-data batches for the drain removes
     exactly those batches; measured at sf0.1 (min-of-3, identical rows
     AND value checksum): attribution 2.4→1.5 s, sessionize 2.1→1.8 s.
     An ALWAYS-ON deployment keeps them enabled (they are what advances
     emission between sparse arrivals) — hence the setting lives in the
-    drain's own session only."""
+    drain's own session only.
+
+    Checkpoint checksums: Spark writes a checksum file beside every
+    checkpoint file (state-store deltas, offsets, commits) to detect
+    corruption on restart. Every drain checkpoints into its own fresh
+    ``scratch_dir`` that no restart ever reads, so the checksums guard
+    nothing. Each state-store delta file otherwise carries two more
+    (the checksum and the local file system's ``.crc`` of it): one
+    attribution batch at 4 state partitions writes 50 checkpoint files
+    without them, 82 with them, and 146 with them at 8 partitions."""
     global _DRAIN_SESSION
     app = spark.sparkContext.applicationId
     with _DRAIN_SESSION_LOCK:
         if _DRAIN_SESSION is None or _DRAIN_SESSION[0] != app:
             child = spark.newSession()
-            child.conf.set(
-                "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
-            )
+            width = min(STREAM_STATE_PARTITIONS, spark.sparkContext.defaultParallelism)
+            child.conf.set("spark.sql.shuffle.partitions", str(width))
             child.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+            child.conf.set(
+                "spark.sql.streaming.checkpoint.fileChecksum.enabled", "false"
+            )
             _DRAIN_SESSION = (app, child)
         return _DRAIN_SESSION[1]
 

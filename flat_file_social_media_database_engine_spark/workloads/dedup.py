@@ -2245,20 +2245,26 @@ def _stream_ingest_oracle() -> str:
     """
 
 
+def _batch_shingles(batch_docs: DataFrame) -> DataFrame:
+    """(doc_id, harr): the Arrow shingle signing of an ingest batch's
+    (doc_id, text, ...) rows."""
+    return batch_docs.select("doc_id", _shingles_udf()("text").alias("harr"))
+
+
 def _probe_classify_batch(
-    spark: SparkSession, sf_dir: str, batch_docs: DataFrame
+    spark: SparkSession, sf_dir: str, sh_b: DataFrame
 ) -> DataFrame:
-    """Classify ONE ingest batch (doc_id, text, ...) against the
-    committed corpus artifacts — the per-micro-batch body of the
-    streaming entry: Arrow shingle+band signing over the batch rows,
+    """Classify ONE ingest batch, given as its ``_batch_shingles``,
+    against the committed corpus artifacts — the per-micro-batch body
+    of the streaming entry: band signing over the batch's shingles,
     then ``_probe_committed`` with the hot keys taken from committed
-    corpus occupancy alone."""
+    corpus occupancy alone. The plan reads ``sh_b`` three times (the
+    batch's doc ids, its bands and its verify side)."""
     committed = _band_index_committed(spark, sf_dir)
-    sh_b = batch_docs.select("doc_id", _shingles_udf()("text").alias("harr"))
     hot = committed["band_counts"].filter(
         F.col("c_idx") > HOT_BUCKET_CAP
     ).select("band_key")
-    return _probe_committed(committed, batch_docs, sh_b, _band_table(sh_b), hot)
+    return _probe_committed(committed, sh_b, sh_b, _band_table(sh_b), hot)
 
 
 @query("docs_stream_ingest_dedup", oracle=_stream_ingest_oracle())
@@ -2303,7 +2309,14 @@ def docs_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = make_batch_sink(store, "ingest_dedup", stream_id="docs")
 
     def classify_sink(batch_df: DataFrame, batch_id: int) -> None:
-        sink(_probe_classify_batch(spark, sf_dir, batch_df), batch_id)
+        # persisted for the sink's write only: the probe reads the
+        # shingles three times, and each read would otherwise rescan
+        # the batch's file and re-sign it
+        sh_b = _batch_shingles(batch_df).persist()
+        try:
+            sink(_probe_classify_batch(spark, sf_dir, sh_b), batch_id)
+        finally:
+            sh_b.unpersist()
 
     stream = (
         spark.readStream.schema(FIXTURE_SCHEMAS["documents"])

@@ -1574,8 +1574,9 @@ def events_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # root cause was state-store count, not batch shape: a
     # stream-stream join keeps 4 state stores per shuffle
     # partition and commits each per batch; sizing state
-    # partitions to stream volume (STREAM_STATE_PARTITIONS = 8)
-    # cut the warm wall 7.5s → 2.5s, identical result.
+    # partitions to stream volume (8 at 32 cores, one per core
+    # below 8: STREAM_STATE_PARTITIONS, _drain_session) cut the
+    # warm wall 7.5s → 2.5s, identical result.
     got = run_stream_to_parquet(
         spark,
         lambda s: attribution_join_stream(
@@ -1666,9 +1667,10 @@ def events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     4 state partitions / 1.72 s at 8 / 2.02 s at 16 / 2.77 s at 32;
     multi-batch production shape (5 weekly files + 2 sentinels,
     maxFilesPerTrigger=1 → 7 micro-batches) 4.13 / 4.30 / 5.49 /
-    8.43 s. The default of 8 (STREAM_STATE_PARTITIONS) is the
-    single-shape optimum and within noise of the multi-shape optimum;
-    the multi-batch walls grow ~linearly in partition count past 8
+    8.43 s, on 32 cores. The default of 8 (STREAM_STATE_PARTITIONS,
+    capped at one per core by ``_drain_session``) is the single-shape
+    optimum and within noise of the multi-shape optimum; the
+    multi-batch walls grow ~linearly in partition count past 8
     because EVERY micro-batch commits one snapshot per state store —
     the same lesson as attribution, now measured on the
     state-finalization path too."""
@@ -1682,10 +1684,11 @@ def events_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # The stager writes the whole table, whatever its part-file
-    # count, as ONE real file, so one-file-per-trigger always yields
-    # the exact three-batch drain sequence: all real rows (watermark
-    # 0 — inter-file event-time order can never drop a row as late),
-    # then each sentinel in its own batch.
+    # count, plus sentinel 0 as ONE file, so one-file-per-trigger
+    # always yields the exact two-batch drain sequence: all real rows
+    # (watermark 0 — inter-file event-time order can never drop a row
+    # as late), then sentinel 1, which runs past every real session's
+    # close.
     stage = stage_events_with_sentinels(spark, sf_dir)
     got = run_stream_to_parquet(
         spark,

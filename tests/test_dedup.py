@@ -676,8 +676,10 @@ def test_stream_ingest_dedup_batch_independent_and_exactly_once(
         r["doc_id"]: r
         for r in D._probe_classify_batch(
             spark, str(d),
-            read_table(spark, str(d), "documents").filter(
-                F.col("doc_id") >= D.N_OLD
+            D._batch_shingles(
+                read_table(spark, str(d), "documents").filter(
+                    F.col("doc_id") >= D.N_OLD
+                )
             ),
         ).collect()
     }
@@ -1301,3 +1303,46 @@ def test_simhash_arrow_fold_matches_expression_form(spark):
     )
     s = empty.select(_simhash_bits_udf()("hv").alias("s")).collect()[0]["s"]
     assert s == (1 << _SIMHASH_BITS) - 1
+
+
+def test_stream_ingest_dedup_reads_each_batch_once(spark, sf_small, tmp_path):
+    """Each ingest micro-batch scans its staged file once: the probe
+    reads the batch's shingles three times, and the sink persists them
+    for its write. ``numInputRows`` per batch equals the staged file's
+    rows, and the streamed result equals the one-shot classification
+    of the same new docs."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from flat_file_social_media_database_engine_spark.sources.catalog import (
+        read_table,
+    )
+    from flat_file_social_media_database_engine_spark.streaming.docs import (
+        stage_documents_batches,
+    )
+    from tools.qtime import listen_to_batches
+
+    d = str(tmp_path)
+    shutil.copy(os.path.join(sf_small, "documents.parquet"), d)
+    progress = []
+    listener = listen_to_batches(spark, progress)
+    try:
+        got = {tuple(r) for r in D.docs_stream_ingest_dedup(spark, d).collect()}
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    stage, n = stage_documents_batches(spark, d)
+    staged = [
+        pq.ParquetFile(os.path.join(stage, f)).metadata.num_rows
+        for f in sorted(os.listdir(stage))
+    ]
+    assert n > 1 and [rows for rows, _, _ in progress] == staged
+    new = read_table(spark, d, "documents").filter(F.col("doc_id") >= D.N_OLD)
+    want = {
+        tuple(r)
+        for r in D._probe_classify_batch(spark, d, D._batch_shingles(new)).collect()
+    }
+    assert got == want and len(got) == sum(staged)

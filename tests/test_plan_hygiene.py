@@ -357,7 +357,7 @@ def test_pushdown_survives_the_read_table_spread(spark, sf_small):
     }, plan
 
 
-def test_relayout_normalizes_packed_scans(spark, tmp_path):
+def test_relayout_normalizes_packed_scans(spark, tmp_path, monkeypatch):
     """read_table reroutes a packed single-row-group FACT table
     through a session-scoped multi-file relayout so its consumers get
     a genuinely parallel scan (round-9 optimization: the fixture
@@ -366,7 +366,9 @@ def test_relayout_normalizes_packed_scans(spark, tmp_path):
     EXACTLY the source rows, (b) scan parallelism rises above the
     single row group, (c) predicate pushdown and column pruning still
     reach the (relayout) parquet scan, (d) tiny tables below the
-    work-proportional grain are left on their original scan."""
+    work-proportional grain are left on their original scan, (e) the
+    relayout's exchange hashes rows (a round-robin one sorts every row
+    of the one-task scan first)."""
     import os
 
     import pyarrow as pa
@@ -393,7 +395,21 @@ def test_relayout_normalizes_packed_scans(spark, tmp_path):
     pq.write_table(t, str(d / "orders.parquet"), row_group_size=n)
     assert os.path.getsize(d / "orders.parquet") >= 2 * _SPREAD_GRAIN_BYTES
 
+    from flat_file_social_media_database_engine_spark.plans import materialize
+
+    written = []
+    materialize_parquet = materialize.materialize_parquet
+
+    def spy(spark_, df_, prefix):
+        written.append(df_._jdf.queryExecution().executedPlan().toString())
+        return materialize_parquet(spark_, df_, prefix)
+
+    monkeypatch.setattr(materialize, "materialize_parquet", spy)
     df = read_table(spark, str(d), "orders")
+    # (e) one relayout write, hash-partitioned on the rows
+    assert len(written) == 1
+    assert "hashpartitioning(o_orderkey" in written[0], written[0]
+    assert "RoundRobinPartitioning" not in written[0], written[0]
     # (b) parallel scan: more input partitions than the 1 row group
     assert df.rdd.getNumPartitions() >= 2
     # (a) exact same multiset of rows
@@ -414,6 +430,56 @@ def test_relayout_normalizes_packed_scans(spark, tmp_path):
     # (plan strings elide long paths — assert on what must NOT appear:
     # materialize_parquet dirs are named sparkgraft_relayout_*)
     assert "sparkgraft_relayout" not in tiny_plan, tiny_plan
+
+
+def test_read_table_infers_a_file_schema_once(spark, tmp_path):
+    """``read_table`` infers a fixture file's schema (a Spark job) on
+    its first read only: a later read of the same file, and a relayout
+    hit, launch no job. A rewritten file is inferred afresh."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flat_file_social_media_database_engine_spark.sources.catalog import (
+        read_table,
+    )
+
+    sc = spark.sparkContext
+    d = tmp_path / "sfschema"
+    d.mkdir()
+    path = str(d / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": pa.array([0, 1], pa.int64())}), path)
+    n = 400_000  # past the relayout grain, as in the relayout test
+    rng = random.Random(7)
+    keys = pa.array([rng.getrandbits(50) for _ in range(n)], pa.int64())
+    pq.write_table(
+        pa.table({"o_orderkey": keys}), str(d / "orders.parquet"), row_group_size=n
+    )
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+
+    _, first = jobs("schema-1", lambda: read_table(spark, str(d), "region"))
+    assert first  # the inference
+    df, again = jobs("schema-2", lambda: read_table(spark, str(d), "region"))
+    assert again == [] and df.count() == 2
+    built, _ = jobs("schema-3", lambda: read_table(spark, str(d), "orders"))
+    assert "sparkgraft_relayout" in built.inputFiles()[0]
+    df, hit = jobs("schema-4", lambda: read_table(spark, str(d), "orders"))
+    assert hit == [] and df.count() == n
+    pq.write_table(
+        pa.table(
+            {"r_regionkey": pa.array([5], pa.int64()), "r_name": pa.array(["X"])}
+        ),
+        path,
+    )
+    assert read_table(spark, str(d), "region").columns == ["r_regionkey", "r_name"]
 
 
 @pytest.mark.parametrize(

@@ -539,7 +539,8 @@ def test_append_mode_sessionize_drains_via_sentinels(spark):
     """APPEND-mode session_window only emits watermark-closed state,
     so a finite replay without a drain marker silently loses the tail
     sessions. Pins the sentinel protocol end to end: (a) the staged
-    drop-zone carries the two watermark-advancer files, (b) the
+    drop-zone carries the two watermark-advancer rows, one in the real
+    file and one in a file of its own, (b) the
     append-mode sink receives EVERY real session (equality with the
     batch gap-sessionization, not just a subset), and (c) no sentinel
     row leaks into the result."""
@@ -553,7 +554,8 @@ def test_append_mode_sessionize_drains_via_sentinels(spark):
 
     staged = _footers(stage_events_with_sentinels(spark, SF))
     sentinel = (1, (SENTINEL_USER, SENTINEL_USER))
-    assert [(n, r["user_id"]) for n, r in staged[1:]] == [sentinel] * 2
+    assert [(n, r["user_id"]) for n, r in staged[1:]] == [sentinel]
+    assert staged[0][1]["user_id"][0] == SENTINEL_USER  # sentinel 0 rides along
 
     got = events_stream_sessionize(spark, SF)
     assert got.filter(got.user_id == SENTINEL_USER).count() == 0
@@ -956,7 +958,7 @@ def test_staged_replays_keep_their_layout(spark, sf_medium):
     """Every staged replay keeps its file count, order and rows per
     file, read from the footers in replay order: one file per ISO week
     holding that week's non-null-``ts`` rows, in week order; the whole
-    events table, then one sentinel row per file past its horizon; and
+    events table plus sentinel 0, then sentinel 1 past its horizon; and
     ``N_BATCHES`` contiguous, equal-count ``doc_id`` ranges of the new
     documents."""
     from pyspark.sql import functions as F
@@ -987,10 +989,11 @@ def test_staged_replays_keep_their_layout(spark, sf_medium):
     assert all(a[1] < b[0] for a, b in zip(ts, ts[1:]))
 
     files = _footers(SE.stage_events_with_sentinels(spark, sf_medium))
-    assert [rows for rows, _ in files] == [events.count(), 1, 1]
-    assert [r["user_id"] for _, r in files[1:]] == [(SE.SENTINEL_USER,) * 2] * 2
+    assert [rows for rows, _ in files] == [events.count() + 1, 1]
+    assert files[0][1]["user_id"][0] == SE.SENTINEL_USER
+    assert [r["user_id"] for _, r in files[1:]] == [(SE.SENTINEL_USER,) * 2]
     ts = [r["ts"] for _, r in files]
-    assert ts[0][1] < ts[1][0] < ts[2][0]
+    assert ts[0][1] < ts[1][0]
 
     stage, n = stage_documents_batches(spark, sf_medium)
     files = _footers(stage)
@@ -1005,3 +1008,111 @@ def test_staged_replays_keep_their_layout(spark, sf_medium):
     ids = [r["doc_id"] for _, r in files]
     assert ids[0][0] >= N_OLD
     assert all(a[1] < b[0] for a, b in zip(ids, ids[1:]))
+
+
+def test_cold_stage_replay_is_one_write(spark, tmp_path, monkeypatch):
+    """A cold ``stage_replay`` stages every frame with ONE Spark write
+    and orders the files by frame value as a number (2 < 9 < 10, which
+    a string sort of the partition directories would not give); a warm
+    call writes nothing."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    src = str(tmp_path / "src.parquet")
+    pq.write_table(pa.table({"x": [1]}), src)
+    writes = []
+    parquet = DataFrameWriter.parquet
+
+    def counted(self, *args, **kwargs):
+        writes.append(args)
+        return parquet(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counted)
+    frame = F.element_at(
+        F.array(*map(F.lit, (10, 2, 9))), (F.col("id") % 3 + 1).cast("int")
+    )
+
+    def build():
+        return spark.range(0, 30, numPartitions=3).withColumn(SE.FRAME, frame)
+
+    stage, n = SE.stage_replay(spark, "t_onejob", src, build)
+    assert len(writes) == 1
+    assert n == 3
+    assert sorted(os.listdir(stage)) == [f"{k:04d}.parquet" for k in range(3)]
+    files = _footers(stage)
+    # frame 2 holds ids 1, 4, ...; frame 9 ids 2, 5, ...; frame 10 ids 0, 3, ...
+    assert [(rows, r["id"][0]) for rows, r in files] == [(10, 1), (10, 2), (10, 0)]
+    assert SE.stage_replay(spark, "t_onejob", src, build) == (stage, 3)
+    assert len(writes) == 1
+
+
+def test_drain_session_sizes_state_to_cores_without_checksums(spark):
+    """The drain session runs one state partition per core up to
+    ``STREAM_STATE_PARTITIONS`` and writes no checkpoint checksum
+    files; the parent session's conf is untouched."""
+    import glob
+    import os
+    import tempfile
+
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled",
+    )
+    before = {k: spark.conf.get(k) for k in keys}
+    stage = SE.stage_events_with_sentinels(spark, SF)
+    got = SE.run_stream_to_parquet(
+        spark,
+        lambda s: SE.sessionize(SE.read_staged_events_stream(s, stage)),
+        "t_drain_conf",
+        "user_id bigint, session_start timestamp,"
+        " session_end timestamp, n_events bigint",
+    )
+    assert got.count() > 0
+    width = min(SE.STREAM_STATE_PARTITIONS, spark.sparkContext.defaultParallelism)
+    child = SE._drain_session(spark)
+    assert child.conf.get(keys[0]) == str(width)
+    assert child.conf.get(keys[1]) == "false"
+    assert {k: spark.conf.get(k) for k in keys} == before
+    assert before[keys[1]] == "true"  # Spark's default, kept by the parent
+
+    bases = glob.glob(os.path.join(tempfile.gettempdir(), "sparkgraft_t_drain_conf_*"))
+    ckpt = os.path.join(max(bases, key=os.path.getmtime), "ckpt")
+    state = os.path.join(ckpt, "state", "0")
+    assert len([p for p in os.listdir(state) if p != "_metadata"]) == width
+    # Spark's checkpoint checksums are "<file>.crc"; the local file
+    # system's own are ".<file>.crc" and stay
+    names = [f for _, _, fs in os.walk(ckpt) for f in fs]
+    assert any(f.endswith(".delta") for f in names)
+    assert not [f for f in names if f.endswith(".crc") and not f.startswith(".")]
+
+
+def test_sessionize_drain_runs_two_batches(spark, tmp_path):
+    """With sentinel 0 in the real file the append-mode sessionize
+    drain is exactly two micro-batches, all real rows plus sentinel 0,
+    then sentinel 1, and still emits every real session."""
+    from flat_file_social_media_database_engine_spark.sources.catalog import (
+        read_table,
+    )
+
+    stage = SE.stage_events_with_sentinels(spark, SF)
+    q = (
+        SE.sessionize(SE.read_staged_events_stream(SE._drain_session(spark), stage))
+        .writeStream.format("parquet")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    rows = read_table(spark, SF, "events").count()
+    assert [p["numInputRows"] for p in q.recentProgress] == [rows + 1, 1]
+    got = spark.read.parquet(str(tmp_path / "out")).filter(
+        f"user_id IS NULL OR user_id != {SE.SENTINEL_USER}"
+    )
+    want = BE.events_sessionize(spark, SF)
+    assert got.count() == want.count() > 0
